@@ -1778,17 +1778,29 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // minutes of commit tail per statement; parallel single-RPC
     // listing makes it seconds (the same fan-out the vacuum sweep and
     // ZoneMapFileIndex use).
-    import scala.jdk.CollectionConverters._
-    buckets.asJava.parallelStream().map[Vector[String]] { k =>
-      val d = new Path(root, s"$BucketCol=$k")
-      try fs.listStatus(d).iterator
+    fanOut(buckets) { k =>
+      listOrEmpty(fs, new Path(root, s"$BucketCol=$k"))
         .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
           !s.getPath.getName.startsWith("_"))
-        .map(s => s"$BucketCol=$k/${s.getPath.getName}").toVector
-      catch { case _: java.io.FileNotFoundException => Vector.empty }
-    }.collect(java.util.stream.Collectors.toList[Vector[String]])
+        .map(s => s"$BucketCol=$k/${s.getPath.getName}")
+    }
+  }
+
+  /** `f` over `xs` on the common fork-join pool, results concatenated
+    * in input order: the per-directory metadata fan-out. */
+  private def fanOut[A, B](xs: Vector[A])(f: A => Vector[B]): Vector[B] = {
+    import scala.jdk.CollectionConverters._
+    xs.asJava.parallelStream().map[Vector[B]](x => f(x))
+      .collect(java.util.stream.Collectors.toList[Vector[B]])
       .asScala.toVector.flatten
   }
+
+  /** `listStatus`, with a missing dir listed as empty (one RPC, no
+    * separate exists probe). */
+  private def listOrEmpty(fs: org.apache.hadoop.fs.FileSystem,
+      d: Path): Vector[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(d).toVector
+    catch { case _: java.io.FileNotFoundException => Vector.empty }
 
   // --- manifest delta log (format v2) ---------------------------------
   // A manifest file is either a FULL file list (v1: a plain JSON array
@@ -2432,35 +2444,41 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   }
 
   /** Logical name → byte size for every data file of the table, live
-    * AND archived, in ONE recursive listing pass (a `listFiles`
-    * RemoteIterator — batched RPCs on HDFS, a single walk locally).
-    * Sizes the manifests can't provide themselves: manifests record
-    * names only, and the bytes question ("how much storage does each
-    * retained version pin?") is answered against the files' current
-    * physical presence. */
+    * (`bucket=k/name`) AND archived (`.archive/<gen>/bucket=k/name`),
+    * keyed `bucket=k/name`. Sizes the manifests can't provide
+    * themselves: manifests record names only, and the bytes question
+    * ("how much storage does each retained version pin?") is answered
+    * against the files' current physical presence.
+    *
+    * A `listStatus` walk bounded by that layout: the root, each live
+    * bucket dir, `.archive`, each generation and each generation's
+    * bucket dirs — (generations + 1) × (buckets + 1) + 1 listings, the
+    * bucket dirs fanned out in parallel. Deliberately not
+    * `listFiles(root, true)`: it builds a `LocatedFileStatus` per file,
+    * which loads the file's permissions, and on a local filesystem
+    * without native libhadoop every such load forks an `ls -ld` (~4 ms
+    * each, thousands per history). The trade-off is on object stores:
+    * on S3A a recursive `listFiles` is one flat paged LIST, while this
+    * walk costs one LIST per bucket dir per archive generation. A dir
+    * that vanishes mid-walk (a concurrent VACUUM) counts as empty, so
+    * a version that pinned its files reports null bytes, never a
+    * partial sum. */
   private def fileSizeIndex(t: TableInfo): Map[String, Long] = {
     val root = new Path(dataPath(t.name))
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Map.empty
-    val rootPath = root.toUri.getPath.stripSuffix("/")
-    val out = Map.newBuilder[String, Long]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = f.getPath.toUri.getPath
-        .stripPrefix(rootPath).stripPrefix("/")
-      val parts = rel.split('/')
-      val fileName = parts.last
-      if (!fileName.startsWith(".") && !fileName.startsWith("_")) {
-        // live: bucket=k/name ; archived: .archive/<gen>/bucket=k/name
-        if (parts.length == 2 && parts(0).startsWith(s"$BucketCol="))
-          out += s"${parts(0)}/$fileName" -> f.getLen
-        else if (parts.length == 4 && parts(0) == ".archive" &&
-            parts(2).startsWith(s"$BucketCol="))
-          out += s"${parts(2)}/$fileName" -> f.getLen
+    def subdirs(d: Path): Vector[Path] =
+      listOrEmpty(fs, d).filter(_.isDirectory).map(_.getPath)
+    val isBucket = (d: Path) => d.getName.startsWith(s"$BucketCol=")
+    val top = subdirs(root)
+    val generations = top.filter(_.getName == ".archive").flatMap(subdirs)
+    val archived = fanOut(generations)(g => subdirs(g).filter(isBucket))
+    fanOut(top.filter(isBucket) ++ archived) { d =>
+      listOrEmpty(fs, d).collect {
+        case s if s.isFile && !s.getPath.getName.startsWith(".") &&
+            !s.getPath.getName.startsWith("_") =>
+          s"${d.getName}/${s.getPath.getName}" -> s.getLen
       }
-    }
-    out.result()
+    }.toMap
   }
 
   private def resolveLogicalFiles(tableName: String,
@@ -2526,7 +2544,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * version's) — the operator's map of what `VERSION AS OF` /
     * `tableChanges` can reach, and (via `data_bytes`, round-11 item 1)
     * of how much storage each retained version pins. Driver-side
-    * metadata + one recursive file listing; no data file is read. */
+    * metadata only: the snapshot and manifest files plus one
+    * layout-bounded `listStatus` walk of the table's live and archived
+    * bucket dirs for the sizes (see [[fileSizeIndex]]); no data file is
+    * read. */
   def describeHistory(name: String): DataFrame = {
     val t = info(localKey(name))
     val versions = catalog.retainedVersions

@@ -412,20 +412,24 @@ object DedupQueries {
     * xor of (name, length, mtime) hashes over the documents source
     * files. Any rewrite of the dataset — even one preserving doc_id
     * membership — changes sizes/mtimes and so flips the fingerprint,
-    * without reading a byte of text. */
+    * without reading a byte of text. A `listStatus` walk rather than
+    * `listFiles(p, true)`: the latter loads every file's permissions,
+    * which forks a shell per file on a local filesystem without native
+    * libhadoop. */
   private def sourceListingHash(s: SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0L
-    var acc = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_"))
-        acc ^= f.getPath.getName.hashCode.toLong * 1315423911L ^
-          f.getLen * 31L ^ f.getModificationTime
-    }
-    acc
+    def walk(d: org.apache.hadoop.fs.Path): Long =
+      (try fs.listStatus(d)
+       catch { case _: java.io.FileNotFoundException =>
+         Array.empty[org.apache.hadoop.fs.FileStatus] })
+        .iterator.map { f =>
+          if (f.isDirectory) walk(f.getPath)
+          else if (f.getPath.getName.startsWith("_")) 0L
+          else f.getPath.getName.hashCode.toLong * 1315423911L ^
+            f.getLen * 31L ^ f.getModificationTime
+        }.foldLeft(0L)(_ ^ _)
+    walk(p)
   }
 
   def qDedupIncremental(s: SparkSession, dir: String): DataFrame = {

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -56,6 +56,12 @@ class DelayedFileSystem extends RawLocalFileSystem {
 
   override def listStatus(p: Path): Array[FileStatus] = {
     nap("listStatus"); super.listStatus(p)
+  }
+  // `listFiles` comes through here; the default implementation's own
+  // `listStatus` call is counted as well.
+  override def listLocatedStatus(
+      p: Path): RemoteIterator[LocatedFileStatus] = {
+    nap("listLocatedStatus"); super.listLocatedStatus(p)
   }
   override def getFileStatus(p: Path): FileStatus = {
     nap("getFileStatus"); super.getFileStatus(p)

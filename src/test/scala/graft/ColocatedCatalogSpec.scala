@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.mpp.MppEngine
@@ -16,8 +14,7 @@ import graft.mpp.MppEngine
 class ColocatedCatalogSpec extends SparkTestBase {
 
   private lazy val engine: MppEngine = {
-    val e = new MppEngine(spark,
-      Files.createTempDirectory("graft-dsv2").toString)
+    val e = new MppEngine(spark, tempDir("graft-dsv2"))
     e.sql("CREATE TABLE li(k BIGINT, q DOUBLE) PARTITION BY (k) WITH BUCKETS 4")
     e.sql("CREATE TABLE ord(k BIGINT, p DOUBLE) PARTITION BY (k) WITH BUCKETS 4")
     e.insertInto("li", spark.range(0, 2000).toDF("k")

@@ -279,8 +279,7 @@ class EventStreamsSpec extends SparkTestBase {
   test("maintained fingerprint index: sequential batches dedup against " +
       "everything previously ingested, index only appends") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fpindex").toString
+    val root = tempDir("graft-fpindex")
     spark.conf.set(graft.sources.FpIndex.DirConf, root)
     try {
       val b1 = Seq((1L, "doc alpha"), (2L, "doc beta"), (3L, "doc beta"))
@@ -308,8 +307,7 @@ class EventStreamsSpec extends SparkTestBase {
   test("fpindex compaction collapses replayed appends; stamp survives; " +
       "ingest writes the sink before the index (replay safety)") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fpindex3").toString
+    val root = tempDir("graft-fpindex3")
     spark.conf.set(graft.sources.FpIndex.DirConf, root)
     try {
       val fps = Seq("a1", "b2", "c3").toDF("fp")
@@ -351,8 +349,7 @@ class EventStreamsSpec extends SparkTestBase {
       "result, snapshot reused while fresh, rebuilt when stale") {
     val inline = graft.queries.DedupQueries
       .qDedupIncremental(spark, sf).collect().map(_.getLong(0)).toSeq
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fpindex2").toString
+    val root = tempDir("graft-fpindex2")
     spark.conf.set(graft.sources.FpIndex.DirConf, root)
     try {
       val first = graft.queries.DedupQueries
@@ -400,7 +397,7 @@ class EventStreamsSpec extends SparkTestBase {
 
   test("file-source session pipeline runs end to end with checkpointing") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-stream")
+    val base = tempDir("graft-stream")
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
     // Two users; user 5 has two sessions separated by a >30min gap.
     Seq(
@@ -422,8 +419,7 @@ class EventStreamsSpec extends SparkTestBase {
       "last-writer-wins per batch, replay converges") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val e = new graft.mpp.MppEngine(spark,
-      java.nio.file.Files.createTempDirectory("graft-stream").toString)
+    val e = new graft.mpp.MppEngine(spark, tempDir("graft-stream"))
     e.sql("CREATE TABLE cdc(k BIGINT, v DOUBLE) PARTITION BY (k) " +
       "WITH BUCKETS 4")
     e.sql("INSERT INTO cdc VALUES (1, 1.0), (2, 2.0), (3, 3.0)")
@@ -431,9 +427,9 @@ class EventStreamsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val mem = MemoryStream[(Long, Double, Long)]
     val updates = mem.toDF().toDF("k", "v", "seq")
-    val cp = java.nio.file.Files.createTempDirectory("graft-stream")
+    val cp = tempDir("graft-stream")
     val q = EventStreams.upsertPipeline(e, "cdc", "k", "seq",
-      updates, cp.toString)
+      updates, cp)
     try {
       // Batch 1: update k=2 (two changes, the seq=11 one must win),
       // insert k=5.
@@ -458,8 +454,7 @@ class EventStreamsSpec extends SparkTestBase {
   test("CDC upsert with partial-column batches: updates touch only " +
       "carried columns, inserts take declared defaults") {
     import spark.implicits._
-    val e = new graft.mpp.MppEngine(spark,
-      java.nio.file.Files.createTempDirectory("graft-stream").toString)
+    val e = new graft.mpp.MppEngine(spark, tempDir("graft-stream"))
     e.sql("CREATE TABLE cdp(k BIGINT, v DOUBLE, tag TEXT " +
       "DEFAULT 'fresh') PARTITION BY (k) WITH BUCKETS 2")
     e.sql("INSERT INTO cdp VALUES (1, 1.0, 'old')")
@@ -478,8 +473,7 @@ class EventStreamsSpec extends SparkTestBase {
       "TARGET declares it (matched rows take the new LSN, inserts " +
       "store it)") {
     import spark.implicits._
-    val e = new graft.mpp.MppEngine(spark,
-      java.nio.file.Files.createTempDirectory("graft-stream").toString)
+    val e = new graft.mpp.MppEngine(spark, tempDir("graft-stream"))
     // The table itself has the ordering column — dropping seq before
     // the merge would leave row 1 at its stale stored seq and row 2 at
     // the declared default, silently diverging from the feed.

@@ -357,7 +357,7 @@ class FreqSketchSpec extends SparkTestBase {
     // back. Then the files are deleted: a second call on the SAME plan
     // must return the lazy exact plan WITHOUT running any job — if it
     // re-ran the sketch (or the probe), the dead scan would throw.
-    val dir = java.nio.file.Files.createTempDirectory("graft-fb").toString
+    val dir = tempDir("graft-fb")
     (0 until 6000).map(i => s"u_${i % 2000}").toDF("item")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)

@@ -34,7 +34,7 @@ object KillOncePerStage {
 class MppSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
-    new MppEngine(spark, Files.createTempDirectory("graft-mpp-test").toString)
+    new MppEngine(spark, tempDir("graft-mpp-test"))
 
   // --- mpp.test:39-76 — DDL, INSERT round trip, filtered SELECT ---------
 
@@ -576,7 +576,7 @@ class MppSpec extends SparkTestBase {
       // Full SQL lifecycle: ATTACH bootstraps a catalog (the reference
       // entry point, mpp.test:15-31), ENDPOINT registers the
       // coordinator node, DETACH releases it.
-      val wh = Files.createTempDirectory("graft-attach").toString
+      val wh = tempDir("graft-attach")
       s2.sql(s"ATTACH '$wh' AS g (TYPE mpp, ENDPOINT '127.0.0.1:5432')")
       val attached = graft.mpp.MppEngine.current.get
       assert(attached.warehouse == wh)
@@ -619,8 +619,7 @@ class MppSpec extends SparkTestBase {
       .config("spark.sql.shuffle.partitions", "2")
       .withExtensions(new graft.mpp.MppExtensions()(_))
       .getOrCreate()
-    val (wh1, wh2) = (Files.createTempDirectory("graft-db1").toString,
-      Files.createTempDirectory("graft-db2").toString)
+    val (wh1, wh2) = (tempDir("graft-db1"), tempDir("graft-db2"))
     try {
       s2.sql(s"ATTACH '$wh1' AS mpp_db1 (TYPE mpp, ENDPOINT '127.0.0.1:12345')")
       s2.sql(s"ATTACH '$wh2' AS mpp_db2 (TYPE mpp, ENDPOINT '127.0.0.1:23456')")
@@ -688,7 +687,7 @@ class MppSpec extends SparkTestBase {
   }
 
   test("two engines on one warehouse: interleaved commits both survive (CAS)") {
-    val wh = Files.createTempDirectory("graft-cas").toString
+    val wh = tempDir("graft-cas")
     val a = new MppEngine(spark, wh)
     val b = new MppEngine(spark, wh) // loads the same initial version
     a.sql("CREATE TABLE ta(id INT) PARTITION BY (id) WITH BUCKETS 2")
@@ -739,7 +738,7 @@ class MppSpec extends SparkTestBase {
       .withExtensions(new graft.mpp.MppExtensions()(_))
       .getOrCreate()
     try {
-      val wh = Files.createTempDirectory("graft-alias").toString
+      val wh = tempDir("graft-alias")
       s2.sql(s"ATTACH '$wh' AS dbx (TYPE mpp)")
       s2.sql("USE dbx")
       s2.sql("CREATE TABLE t(c0 INT) PARTITION BY (c0) WITH BUCKETS 2")
@@ -882,7 +881,7 @@ class MppSpec extends SparkTestBase {
   }
 
   test("startup GC sweeps orphan staging dirs; snapshots stay bounded") {
-    val wh = Files.createTempDirectory("graft-gc").toString
+    val wh = tempDir("graft-gc")
     // Pre-seed: an orphan staging dir from a "crashed" COW + a table.
     val e1 = new MppEngine(spark, wh)
     e1.sql("CREATE TABLE g1(id INT) PARTITION BY (id) WITH BUCKETS 2")

@@ -233,7 +233,7 @@ class PipelineQueriesSpec extends SparkTestBase {
       "loads it instead of retraining; a changed corpus retrains") {
     import spark.implicits._
     import graft.functions.VectorFunctions.norm
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val idx = tempDir("graft-ivf")
     val pts = for (c <- 0 until 4; i <- 0 until 12) yield {
       val v = Seq.tabulate(8)(d =>
         (if (d == c * 2) 1.0 else 0.0) + (i * 7 + d) * 1e-3)

@@ -212,9 +212,7 @@ class PlanQualitySpec extends SparkTestBase {
   }
 
   test("exported mpp tables aggregate and join with zero exchanges") {
-    import java.nio.file.Files
-    val e = new graft.mpp.MppEngine(spark,
-      Files.createTempDirectory("graft-exb").toString)
+    val e = new graft.mpp.MppEngine(spark, tempDir("graft-exb"))
     e.sql("CREATE TABLE li_d(k BIGINT, q DOUBLE) PARTITION BY (k) WITH BUCKETS 4")
     e.sql("CREATE TABLE ord_d(k BIGINT, p DOUBLE) PARTITION BY (k) WITH BUCKETS 4")
     e.insertInto("li_d", spark.range(0, 2000).toDF("k")
@@ -241,9 +239,7 @@ class PlanQualitySpec extends SparkTestBase {
   }
 
   test("distributed-table point lookup schedules only the pruned bucket") {
-    import java.nio.file.Files
-    val e = new graft.mpp.MppEngine(spark,
-      Files.createTempDirectory("graft-pq").toString)
+    val e = new graft.mpp.MppEngine(spark, tempDir("graft-pq"))
     e.sql("CREATE TABLE pq(id BIGINT, v DOUBLE) PARTITION BY (id) WITH BUCKETS 8")
     e.insertInto("pq", spark.range(0, 1000).toDF("id")
       .withColumn("v", col("id") * 0.5))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
@@ -30,8 +28,7 @@ class PruningPropertySpec extends SparkTestBase {
   }
 
   private lazy val engine: MppEngine = {
-    val e = new MppEngine(spark,
-      Files.createTempDirectory("graft-prop").toString)
+    val e = new MppEngine(spark, tempDir("graft-prop"))
     e.sql("CREATE TABLE pt(id INT, v TEXT) PARTITION BY (id) WITH BUCKETS 7")
     e.insertInto("pt", source)
     e

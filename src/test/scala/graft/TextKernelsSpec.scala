@@ -247,7 +247,7 @@ class TextKernelsSpec extends SparkTestBase {
       (2L, span + rand(80)), //            span at offset 1
       (3L, rand(200))) ++ // clean doc — must produce NO span
       Seq.tabulate(20)(i => (10L + i, rand(150)))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("spandedup").toString
+    val dir = tempDir("spandedup")
     docsDf.write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val spans = graft.queries.DedupQueries.qSpanDedup(spark, dir)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -57,8 +55,7 @@ class ZOrderSpec extends SparkTestBase {
 
   test("ZORDER BY clusters so zone maps prune on BOTH dimensions; " +
       "SORT BY only prunes its lead column") {
-    val e = new MppEngine(spark,
-      Files.createTempDirectory("graft-zorder").toString)
+    val e = new MppEngine(spark, tempDir("graft-zorder"))
     e.sql("CREATE TABLE zo(k BIGINT, x BIGINT, y BIGINT) " +
       "PARTITION BY (k) WITH BUCKETS 2")
     e.insertInto("zo", grid(100000))
@@ -94,8 +91,7 @@ class ZOrderSpec extends SparkTestBase {
   }
 
   test("statement guards: dimension count, types, exclusivity") {
-    val e = new MppEngine(spark,
-      Files.createTempDirectory("graft-zorder").toString)
+    val e = new MppEngine(spark, tempDir("graft-zorder"))
     e.sql("CREATE TABLE zg(k BIGINT, x BIGINT, s STRING) " +
       "PARTITION BY (k) WITH BUCKETS 2")
     e.insertInto("zg", spark.range(0, 10).toDF("k")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -22,8 +20,7 @@ class ZoneMapSpec extends SparkTestBase {
   // each insert writes one file per bucket, so every bucket holds one
   // file per range — the append-grown layout zone maps exist for.
   private lazy val engine: MppEngine = {
-    val e = new MppEngine(spark,
-      Files.createTempDirectory("graft-zm").toString)
+    val e = new MppEngine(spark, tempDir("graft-zm"))
     e.sql("CREATE TABLE zm(k BIGINT, v BIGINT, s VARCHAR) " +
       "PARTITION BY (k) WITH BUCKETS 4")
     def batch(lo: Long, hi: Long, tag: String) =
@@ -121,8 +118,7 @@ class ZoneMapSpec extends SparkTestBase {
     // random shuffle — zone maps can prune little. OPTIMIZE SORT
     // BY(v) re-clusters each bucket, after which a v-range hits few
     // files per bucket.
-    val e = new MppEngine(spark,
-      Files.createTempDirectory("graft-zm-eng").toString)
+    val e = new MppEngine(spark, tempDir("graft-zm-eng"))
     e.sql("CREATE TABLE zme(k BIGINT, v BIGINT) " +
       "PARTITION BY (k) WITH BUCKETS 4")
     // Each insert spans the FULL v-domain → every file's v-zone is

@@ -72,7 +72,7 @@ class CatalogIoSpec extends SparkTestBase {
     // `file:` through HadoopCatalogIo exercises exactly the calls an
     // HDFS warehouse would make: create(overwrite=false) claims,
     // FileContext.rename(OVERWRITE) publishes, listStatus sweeps.
-    val dir = Files.createTempDirectory("graft-hio").toString
+    val dir = tempDir("graft-hio")
     val io = new HadoopCatalogIo(spark.sessionState.newHadoopConf())
     io.mkdirs(s"$dir/cat")
     // Primitive 1: exclusive create — second claim loses.
@@ -110,7 +110,7 @@ class CatalogIoSpec extends SparkTestBase {
       classOf[org.apache.hadoop.fs.RawLocalFileSystem],
       classOf[org.apache.hadoop.fs.FileSystem])
     conf.setBoolean("fs.file.impl.disable.cache", true)
-    val dir = Files.createTempDirectory("graft-rawfs").toString
+    val dir = tempDir("graft-rawfs")
     val io = new HadoopCatalogIo(conf)
     io.mkdirs(s"file:$dir/cat")
     assert(io.exclusiveCreate(s"file:$dir/cat/v1.claim"))
@@ -143,7 +143,7 @@ class CatalogIoSpec extends SparkTestBase {
     // Hadoop resolves the same URI to /tmp/wh — the catalog silently
     // landing apart from the data is exactly the split the contract
     // check exists to prevent.
-    val root = Files.createTempDirectory("graft-fileuri").toString
+    val root = tempDir("graft-fileuri")
     val io = CatalogIo.forWarehouse(spark, s"file:$root")
     assert(io.isInstanceOf[LocalCatalogIo])
     io.mkdirs(s"file:$root/rawio")
@@ -168,7 +168,7 @@ class CatalogIoSpec extends SparkTestBase {
   test("a hand-repaired CURRENT with a trailing newline does not " +
       "strand the warehouse: the fence is whitespace-tolerant like " +
       "the reader") {
-    val wh = Files.createTempDirectory("graft-trim").toString
+    val wh = tempDir("graft-trim")
     val e = new MppEngine(spark, wh)
     e.sql("CREATE TABLE tr(k BIGINT, v DOUBLE) PARTITION BY (k) " +
       "WITH BUCKETS 2")
@@ -189,7 +189,7 @@ class CatalogIoSpec extends SparkTestBase {
 
   test("a file:-URI warehouse WITH an authority resolves like Hadoop " +
       "(authority ignored), never folded into the path") {
-    val root = Files.createTempDirectory("graft-fileauth").toString
+    val root = tempDir("graft-fileauth")
     val io = CatalogIo.forWarehouse(spark, s"file://localhost$root")
     io.writeBytes(s"file://localhost$root/probe", "9".getBytes)
     assert(Files.exists(java.nio.file.Paths.get(s"$root/probe")),
@@ -258,7 +258,7 @@ class CatalogIoSpec extends SparkTestBase {
 
   test("EmulatedObjectStore honors the conditional-write contract: " +
       "atomic PUT visibility, If-None-Match create, If-Match CAS") {
-    val root = Files.createTempDirectory("graft-emustore").toString
+    val root = tempDir("graft-emustore")
     conditionalContract(new EmulatedObjectStore, root)
   }
 
@@ -278,7 +278,7 @@ class CatalogIoSpec extends SparkTestBase {
       "travel end-to-end — every catalog RPC leaves the engine over " +
       "TCP (the shape of a real S3-endpoint deployment)") {
     val server = new MiniObjectStoreServer(0).start()
-    val wh = Files.createTempDirectory("graft-http-wh").toString
+    val wh = tempDir("graft-http-wh")
     try {
       spark.conf.set("graft.catalog.httpstore.endpoint",
         s"http://127.0.0.1:${server.boundPort}")
@@ -389,7 +389,7 @@ class CatalogIoSpec extends SparkTestBase {
     assert(names.toSet == (0 until n).map(i => f"k-$i%04d").toSet)
     // 3. The catalog end-to-end on the real endpoint: DDL + DML +
     //    time travel, CAS history linear.
-    val wh = Files.createTempDirectory("graft-s3it-wh").toString
+    val wh = tempDir("graft-s3it-wh")
     spark.conf.set("graft.catalog.objectstore.provider",
       classOf[S3ConditionalStoreProvider].getName)
     try {
@@ -421,7 +421,7 @@ class CatalogIoSpec extends SparkTestBase {
 
   test("ObjectStoreCatalogIo drives the full CAS battery through " +
       "conditional-write semantics (the S3-class code path)") {
-    val root = Files.createTempDirectory("graft-osio").toString
+    val root = tempDir("graft-osio")
     val io = new ObjectStoreCatalogIo(new EmulatedObjectStore)
     io.mkdirs(s"$root/cat") // no-op on a flat namespace — never throws
     // Primitive 1: exclusive create = conditional create.
@@ -476,7 +476,7 @@ class CatalogIoSpec extends SparkTestBase {
     // Catalog files through conditional-put objects, data through the
     // (local) Hadoop FS — the exact split a real S3 deployment has
     // (conditional-write catalog + s3a data).
-    val wh = Files.createTempDirectory("graft-osio-wh").toString
+    val wh = tempDir("graft-osio-wh")
     try {
       spark.conf.set("graft.catalog.objectstore.provider",
         classOf[EmulatedObjectStoreProvider].getName)
@@ -515,7 +515,7 @@ class CatalogIoSpec extends SparkTestBase {
     // Same warehouse path, but every catalog file operation goes
     // through the Hadoop API — proving the catalog logic is
     // implementation-agnostic, not accidentally nio-coupled.
-    val wh = Files.createTempDirectory("graft-hio-wh").toString
+    val wh = tempDir("graft-hio-wh")
     try {
       spark.conf.set("graft.catalog.fs.assumeAtomic", "true")
       // `file:` scheme routes scheme-match to HdfsClass? No — `file`

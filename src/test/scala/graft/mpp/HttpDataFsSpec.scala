@@ -1,7 +1,5 @@
 package graft.mpp
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -18,7 +16,7 @@ class HttpDataFsSpec extends SparkTestBase {
 
   private def withServer(body: (Int, String) => Unit): Unit = {
     val server = new MiniFsServer(0).start()
-    val local = Files.createTempDirectory("graft-minifs").toString
+    val local = tempDir("graft-minifs")
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.graftfs.impl", classOf[HttpDataFileSystem].getName)
     hc.set("fs.AbstractFileSystem.graftfs.impl",

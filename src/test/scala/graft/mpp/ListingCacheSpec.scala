@@ -1,7 +1,5 @@
 package graft.mpp
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -18,7 +16,7 @@ import graft.sources.ColocatedFileIndex
 class ListingCacheSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
-    new MppEngine(spark, Files.createTempDirectory("graft-lc-test").toString)
+    new MppEngine(spark, tempDir("graft-lc-test"))
 
   test("same manifest pointer = identity cache hit; a commit rotates " +
       "the key and the rebuild serves exactly the committed state") {

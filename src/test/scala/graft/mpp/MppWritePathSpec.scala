@@ -1,7 +1,5 @@
 package graft.mpp
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -14,7 +12,7 @@ import graft.SparkTestBase
 class MppWritePathSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
-    new MppEngine(spark, Files.createTempDirectory("graft-mpp-test").toString)
+    new MppEngine(spark, tempDir("graft-mpp-test"))
 
   test("bucketRouting maps each affected bucket to a distinct " +
       "write partition (no birthday collisions at any size)") {

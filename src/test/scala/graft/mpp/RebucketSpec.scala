@@ -1,7 +1,5 @@
 package graft.mpp
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -16,7 +14,7 @@ import graft.SparkTestBase
 class RebucketSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
-    new MppEngine(spark, Files.createTempDirectory("graft-rb-test").toString)
+    new MppEngine(spark, tempDir("graft-rb-test"))
 
   private def rows(e: MppEngine, t: String): Map[Long, Double] =
     e.table(t).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -1,7 +1,5 @@
 package graft.mpp
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -15,8 +13,7 @@ import graft.SparkTestBase
 class SchemaEvolutionSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
-    new MppEngine(spark,
-      Files.createTempDirectory("graft-evo-test").toString)
+    new MppEngine(spark, tempDir("graft-evo-test"))
 
   test("ADD COLUMN: DEFAULT backfills existing rows metadata-only " +
       "(Postgres attmissingval), stored NULLs stay NULL, plain ADD " +

@@ -1,10 +1,11 @@
 package graft.mpp
 
-import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.mpp.BucketPruning.BucketCol
 
 /** Pins `VERSION AS OF` semantics over the versioned catalog: every
   * mutating statement commits a file manifest, replaced files are
@@ -16,7 +17,7 @@ import graft.SparkTestBase
 class TimeTravelSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
-    new MppEngine(spark, Files.createTempDirectory("graft-tt-test").toString)
+    new MppEngine(spark, tempDir("graft-tt-test"))
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.select("k", "v").collect()
@@ -394,16 +395,103 @@ class TimeTravelSpec extends SparkTestBase {
     assert(changed.size == 2 && changed.forall(_ > vCreate), changed)
     assert(h.last.getAs[Boolean]("table_exists"))
     assert(h.last.getAs[Int]("data_files") > 0)
-    // data_bytes (round-12): every retained version whose files are
-    // still present reports its pinned storage; bytes grow with the
-    // file count and are never negative.
-    assert(h.last.getAs[Long]("data_bytes") > 0L)
+    // data_bytes: the latest version pins exactly its live data files.
+    val tableDir = java.nio.file.Paths.get(e.warehouse, "data", "dh")
+    def parquetUnder(glob: String): Seq[java.nio.file.Path] = {
+      val m = tableDir.getFileSystem.getPathMatcher(s"glob:$tableDir/$glob")
+      val s = java.nio.file.Files.walk(tableDir)
+      try s.iterator.asScala.filter(m.matches).toVector finally s.close()
+    }
+    val liveBytes = parquetUnder(s"$BucketCol=*/*.parquet")
+      .map(java.nio.file.Files.size).sum
+    assert(liveBytes > 0L)
+    assert(h.last.getAs[Long]("data_bytes") == liveBytes)
     // The statement form of the vacuum runs (zero-grace sweep),
     // returns the reclaim accounting, and retained versions survive.
     val latest = e.catalog.currentVersionOnDisk
     val vr = e.sql("VACUUM RETAIN 0 HOURS").collect()(0)
     assert(vr.getAs[Long]("bytes_reclaimed") >= 0L)
     assert(e.tableAsOf("dh", latest).count() == 10L)
+
+    // An archived file deleted out of band: every version that pins it
+    // reports unknown bytes (never a partial sum) and the same file
+    // count; every other version keeps its bytes.
+    def history() = e.describeHistory("dh").collect()
+      .map(r => r.getAs[Long]("version") -> r).toMap
+    val before = history()
+    val pinned = before.collect {
+      case (v, r) if r.getAs[Boolean]("table_exists") =>
+        v -> e.tableAsOf("dh", v).inputFiles
+          .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet
+    }
+    val gone = parquetUnder(s".archive/*/$BucketCol=*/*.parquet").head
+    java.nio.file.Files.delete(gone)
+    val after = history()
+    assert(after.keySet == before.keySet)
+    val hit = pinned.filter(_._2.contains(gone.getFileName.toString)).keySet
+    assert(hit.nonEmpty && hit.size < pinned.size, pinned)
+    after.foreach { case (v, r) =>
+      val was = before(v)
+      assert(r.get(r.fieldIndex("data_files")) ==
+        was.get(was.fieldIndex("data_files")), s"version $v")
+      if (hit(v)) assert(r.isNullAt(r.fieldIndex("data_bytes")), s"version $v")
+      else assert(r.get(r.fieldIndex("data_bytes")) ==
+        was.get(was.fieldIndex("data_bytes")), s"version $v")
+    }
+  }
+
+  test("DESCRIBE HISTORY, RESTORE and VACUUM list plain directories: " +
+      "no located listing, history listings bounded by the layout") {
+    import graft.tools.{DelayedAbstractFs, DelayedFileSystem}
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.slowfs.impl", classOf[DelayedFileSystem].getName)
+    hc.set("fs.AbstractFileSystem.slowfs.impl",
+      classOf[DelayedAbstractFs].getName)
+    hc.set("fs.slowfs.delay.ms", "0")
+    // The delegate is RawLocalFileSystem: rename/O_EXCL-create ARE
+    // atomic, so the operator assertion is true by construction.
+    spark.conf.set("graft.catalog.fs.assumeAtomic", "true")
+    try {
+      val local = tempDir("graft-tt-slowfs")
+      val e = new MppEngine(spark, s"slowfs:$local")
+      val buckets = 4
+      e.sql("CREATE TABLE sh(k BIGINT, v DOUBLE) PARTITION BY (k) " +
+        s"WITH BUCKETS $buckets")
+      e.insertInto("sh", spark.range(0, 40).toDF("k")
+        .withColumn("v", col("k") * 1.0))
+      val v1 = e.catalog.currentVersionOnDisk
+      e.sql("UPDATE sh SET v = -1 WHERE k % 3 = 0")
+      e.sql("DELETE FROM sh WHERE k = 5")
+      def ops[A](body: => A): (A, Map[String, Long]) = {
+        val before = DelayedFileSystem.snapshotByOp()
+        val out = body
+        (out, DelayedFileSystem.snapshotByOp().map { case (k, n) =>
+          k -> (n - before.getOrElse(k, 0L)) }.filter(_._2 > 0))
+      }
+      val (hist, histOps) = ops(e.sql("DESCRIBE HISTORY sh").collect())
+      assert(hist.exists(_.getAs[Boolean]("table_exists")))
+      assert(hist.filter(_.getAs[Boolean]("table_exists"))
+        .forall(r => !r.isNullAt(r.fieldIndex("data_bytes"))))
+      val generations = {
+        val d = new java.io.File(s"$local/data/sh/.archive")
+        Option(d.listFiles).map(_.count(_.isDirectory)).getOrElse(0)
+      }
+      assert(generations > 0)
+      val bound = 2 + (generations + 1) * (buckets + 1)
+      assert(histOps.getOrElse("listStatus", 0L) <= bound,
+        s"$histOps, bound $bound")
+      val (_, restoreOps) = ops(e.sql(s"RESTORE TABLE sh TO VERSION AS OF $v1"))
+      assert(e.table("sh").count() == 40L)
+      val (_, vacuumOps) = ops(e.sql("VACUUM RETAIN 0 HOURS").collect())
+      Seq("history" -> histOps, "restore" -> restoreOps,
+          "vacuum" -> vacuumOps).foreach { case (stmt, byOp) =>
+        assert(!byOp.contains("listLocatedStatus"), s"$stmt: $byOp")
+      }
+    } finally {
+      spark.conf.unset("graft.catalog.fs.assumeAtomic")
+      Seq("fs.slowfs.impl", "fs.AbstractFileSystem.slowfs.impl",
+        "fs.slowfs.delay.ms").foreach(hc.unset)
+    }
   }
 
   test("VACUUM respects retention under churn: every retained version " +

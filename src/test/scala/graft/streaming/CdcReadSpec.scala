@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -17,8 +15,7 @@ import graft.mpp.MppEngine
 class CdcReadSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
-    new MppEngine(spark,
-      Files.createTempDirectory("graft-cdcread").toString)
+    new MppEngine(spark, tempDir("graft-cdcread"))
 
   /** Run the feed to AvailableNow through foreachBatch (the memory
     * sink cannot RESUME a checkpoint; foreachBatch can) and return the
@@ -49,7 +46,7 @@ class CdcReadSpec extends SparkTestBase {
       "WITH BUCKETS 4")
     e.insertInto("cs", spark.range(0, 50).toDF("k")
       .withColumn("v", col("k") * 1.0))
-    val ckpt = Files.createTempDirectory("graft-cdcread-ckpt").toString
+    val ckpt = tempDir("graft-cdcread-ckpt")
 
     val first = runOnce(e.warehouse, "cs", ckpt, Some("earliest"))
     assert(first.length == 50 && first.forall(_._1 == "insert"),
@@ -95,7 +92,7 @@ class CdcReadSpec extends SparkTestBase {
       e.sql(s"UPDATE tr SET v = ${i * 1000} WHERE k = 1"))
     assert(!e.catalog.retainedVersions.contains(2L),
       "precondition: history must be truncated past the initial insert")
-    val ckpt = Files.createTempDirectory("graft-cdcread-ckpt").toString
+    val ckpt = tempDir("graft-cdcread-ckpt")
     val first = runOnce(e.warehouse, "tr", ckpt, Some("earliest"))
     assert(first.length == 50 && first.forall(_._1 == "insert"),
       s"full-state bootstrap expected 50 inserts, got ${first.length}")
@@ -113,7 +110,7 @@ class CdcReadSpec extends SparkTestBase {
       "WITH BUCKETS 2")
     e.insertInto("cl", spark.range(0, 20).toDF("k")
       .withColumn("v", col("k") * 1.0))
-    val ckpt = Files.createTempDirectory("graft-cdcread-ckpt").toString
+    val ckpt = tempDir("graft-cdcread-ckpt")
     // latest: history not replayed
     assert(runOnce(e.warehouse, "cl", ckpt, None).isEmpty)
     e.sql("UPDATE cl SET v = -2 WHERE k = 7")
@@ -133,7 +130,7 @@ class CdcReadSpec extends SparkTestBase {
       "WITH BUCKETS 2")
     src.insertInto("se", spark.range(0, 30).toDF("k")
       .withColumn("v", col("k") * 1.0))
-    val ckpt = Files.createTempDirectory("graft-cdcread-ckpt").toString
+    val ckpt = tempDir("graft-cdcread-ckpt")
     def supervise(): Unit = CdcRead.superviseReplica(spark,
       src.warehouse, "se", dst, "se_rep", "k", ckpt,
       Trigger.AvailableNow())
@@ -176,7 +173,7 @@ class CdcReadSpec extends SparkTestBase {
       "PARTITION BY (k) WITH BUCKETS 2")
     src.insertInto("sd", spark.range(0, 10).toDF("k")
       .withColumn("v", col("k") * 1.0).withColumn("tag", lit("a")))
-    val ckpt = Files.createTempDirectory("graft-cdcread-ckpt").toString
+    val ckpt = tempDir("graft-cdcread-ckpt")
     CdcRead.superviseReplica(spark, src.warehouse, "sd", dst, "sd_rep",
       "k", ckpt, Trigger.AvailableNow())
     src.sql("ALTER TABLE sd DROP COLUMN tag")
@@ -241,7 +238,7 @@ class CdcReadSpec extends SparkTestBase {
     src.insertInto("rt", spark.range(0, 40).toDF("k")
       .withColumn("v", col("k") * 1.0).withColumn("tag", lit("a")))
     src.sql("UPDATE rt SET tag = 'b' WHERE k % 4 = 1")
-    val ckpt = Files.createTempDirectory("graft-cdcread-ckpt").toString
+    val ckpt = tempDir("graft-cdcread-ckpt")
 
     def sync(): Unit = {
       val q = CdcRead.replicaPipeline(spark, src.warehouse, "rt",
@@ -270,7 +267,7 @@ class CdcReadSpec extends SparkTestBase {
 
     // Fresh checkpoint from earliest re-applies everything: the
     // retract/add MERGE apply is convergent, not just incremental.
-    val ckpt2 = Files.createTempDirectory("graft-cdcread-ckpt").toString
+    val ckpt2 = tempDir("graft-cdcread-ckpt")
     val q2 = CdcRead.replicaPipeline(spark, src.warehouse, "rt",
       dst, "rt_rep", "k", ckpt2, Trigger.AvailableNow())
     assert(q2.awaitTermination(120000), "re-apply did not drain")
