@@ -45,7 +45,7 @@ object BucketPruning {
     * namenodes) must NOT collide: a collision would prune one scan
     * under the other table's bucket count and silently drop rows
     * (round-14 advisor). Scheme is still dropped (s3/s3a/s3n aliases
-    * of one store); an empty authority (`file:/x`, `slowfs:///x`,
+    * of one store); an empty authority (`file:/x`, `countfs:///x`,
     * default-fs `hdfs:/x`) canonicalizes to the bare path. Register
     * and scan must agree on qualification for a NON-empty authority:
     * both sides derive from the same warehouse string, which carries

@@ -881,26 +881,21 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     //    needsTaskCommit exists-probe) and one staged file + move per
     //    touched bucket (round-14 verdict item 3 — measured 22.6k
     //    RPCs for a 1k-row/930-bucket INSERT; rebalance + the v2
-    //    staging committer + rename-first publish cut it ~4×).
-    //  - AQE off (or graft.insert.taskPerBucket=true): the round-5
-    //    routed exchange — one bucket per write task, no birthday
-    //    collisions (see stageAndSwap) — because without AQE a
-    //    rebalance degenerates to defaultNumShufflePartitions tasks,
+    //    staging committer + rename-first publish cut it ~4×,
+    //    BASELINE §25.1).
+    //  - AQE off: the routed exchange — one bucket per write task, no
+    //    birthday collisions (see stageAndSwap) — because without AQE
+    //    a rebalance degenerates to defaultNumShufflePartitions tasks,
     //    which under-parallelizes a 100 GB insert.
-    //  - k-ADAPTIVE default (round-15 verdict item 5): when k does not
-    //    exceed the cluster's parallelism, the routed exchange keeps
-    //    the single-stage statement latency (REBALANCE costs one extra
-    //    AQE stage per insert — measured +0.1-0.4 s on tiny-k
-    //    statements) AND its O(k) publish constant is small by
-    //    construction (k empty-task probes ≤ one wave of tasks).
-    //    Above that, REBALANCE kills the O(k) constant (22.6k → 10.4k
-    //    RPCs at k=8192) and wins the bulk regime too (k=64/512 at 2M
-    //    rows). graft.insert.taskPerBucket=true/false still forces
-    //    either shape explicitly.
+    //  - k ≤ the cluster's parallelism: the routed exchange too. It
+    //    keeps the single-stage statement latency (REBALANCE costs one
+    //    extra AQE stage per insert, +0.1-0.4 s on tiny-k statements)
+    //    and its O(k) publish constant is small by construction (k
+    //    empty-task probes ≤ one wave of tasks). Above that,
+    //    REBALANCE removes the O(k) constant and wins the bulk regime
+    //    too (BASELINE §25.1).
     val taskPerBucket =
-      spark.conf.getOption("graft.insert.taskPerBucket")
-        .map(_.toBoolean)
-        .getOrElse(t.buckets <= spark.sparkContext.defaultParallelism) ||
+      t.buckets <= spark.sparkContext.defaultParallelism ||
         !spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean
     val shaped =
       if (taskPerBucket)
@@ -914,8 +909,8 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     val manifestBase = catalog.state.tableManifests.get(t.tableOid.toString)
     stagedAppend(t, shaped) { (added, statuses) =>
       // graft.manifest.incremental=false restores the full-listing
-      // commit — kept ONLY so the incremental path's benefit stays
-      // A/B-measurable (IngestProbe records both).
+      // commit, the reference RebucketSpec and TimeTravelSpec compare
+      // the incremental manifest against (BASELINE §23.5).
       commitManifest(t, addedFiles =
         if (spark.conf.get("graft.manifest.incremental", "true").toBoolean)
           Some(added)
@@ -986,9 +981,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     heartbeat.start()
     try {
       shaped.write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size",
-          spark.conf.get("graft.cow.rowGroupBytes",
-            (32L * 1024 * 1024).toString))
+        .option("parquet.block.size", MppEngine.RowGroupBytes)
         // Commit-algorithm v2 for the STAGING write: task commit
         // renames files straight into the staging tree, skipping v1's
         // whole-job second merge pass (one list + rename + status
@@ -1498,7 +1491,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * to its dir without any exchange — the rewrite is scan→transform→
     * write, shuffle-free at any scale. Write parallelism then follows
     * the READ split size, so the rewrite scan is planned under
-    * `graft.cow.maxPartitionBytes` (default 32 MiB, vs the 128 MiB scan
+    * [[MppEngine.CowMaxPartitionBytes]] (32 MiB, vs the 128 MiB scan
     * default) — bytes-proportional tasks instead of one straggler per
     * fat bucket.
     *
@@ -1520,14 +1513,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       failOnContention: Boolean = false,
       swapProgress: java.util.concurrent.atomic.AtomicBoolean = null)
       : Unit = {
-    // Operational knob: `graft.cow.shuffleWrites=true` forces every
-    // rewrite through the routed exchange — a deployment that values
-    // the compact file-per-bucket layout over rewrite latency (e.g.
-    // read-heavy tables where OPTIMIZE would otherwise run after every
-    // DML) opts in; the default narrow write is the latency/shuffle
-    // winner and lets file counts ride the normal OPTIMIZE cadence.
-    val doShuffle = shuffle ||
-      spark.conf.get("graft.cow.shuffleWrites", "false").toBoolean
     val conf = spark.sessionState.newHadoopConf()
     val dataRoot = new Path(dataPath(t.name))
     val fs = dataRoot.getFileSystem(conf)
@@ -1572,7 +1557,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         if (sortBy.isEmpty || sizeHint <= 0) 0
         else math.ceil(sizeHint.toDouble / taskBytes).toInt
       val shaped =
-        if (!doShuffle) out // narrow: dir-grouped scan feeds the writer
+        if (!shuffle) out // narrow: dir-grouped scan feeds the writer
         else if (rangeTasks > affected.size)
           out.repartitionByRange(rangeTasks,
               (BucketCol +: sortBy).map(col): _*)
@@ -1586,12 +1571,9 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           // hash-uniform within it. Measured need: the 150M-row merge
           // fallback spent 19 s encoding 3.4 GB of parquet through 8
           // one-per-bucket tasks.
-          val cowTaskBytes = spark.conf
-            .get("graft.cow.taskBytes", (256L * 1024 * 1024).toString)
-            .toLong
           val wantW =
             if (sizeHint > 0)
-              math.ceil(sizeHint.toDouble / cowTaskBytes).toInt
+              math.ceil(sizeHint.toDouble / MppEngine.CowTaskBytes).toInt
             else 0
           val shaped0 =
             if (sortBy.isEmpty && wantW > affected.size) {
@@ -1613,7 +1595,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       val shapedOut = dropAfterSort.foldLeft(shaped)(_.drop(_))
       val maxPerFile =
         spark.conf.get("graft.optimize.maxRecordsPerFile", "0").toLong
-      // Bounded row groups (default 32 MiB vs parquet's 128 MiB): a
+      // Bounded row groups (32 MiB vs parquet's 128 MiB): a
       // COW cycle that writes one fat row group per bucket caps every
       // LATER scan of the table at one non-empty split per bucket —
       // parquet splits yield rows only where a row-group midpoint
@@ -1622,9 +1604,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       // tasks, 8 doing all the work). Smaller groups keep rewrite and
       // read parallelism bytes-proportional INSIDE a bucket.
       val writer = shapedOut.write.mode(SaveMode.Overwrite)
-        .option("parquet.block.size",
-          spark.conf.get("graft.cow.rowGroupBytes",
-            (32L * 1024 * 1024).toString))
+        .option("parquet.block.size", MppEngine.RowGroupBytes)
         // v2 commit algorithm: see stagedAppend — the destination is
         // this statement's private staging dir (swapped in only after
         // job success, deleted wholesale on failure), so v1's
@@ -1643,18 +1623,16 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       // results.
       val mpbKey = "spark.sql.files.maxPartitionBytes"
       val mpb = MppEngine.mpbState(spark)
-      if (!doShuffle && mpb.depth.getAndIncrement() == 0) {
+      if (!shuffle && mpb.depth.getAndIncrement() == 0) {
         mpb.saved = spark.conf.get(mpbKey)
-        spark.conf.set(mpbKey,
-          spark.conf.get("graft.cow.maxPartitionBytes",
-            (32L * 1024 * 1024).toString))
+        spark.conf.set(mpbKey, MppEngine.CowMaxPartitionBytes)
       }
       try {
         (if (maxPerFile > 0)
           writer.option("maxRecordsPerFile", maxPerFile)
         else writer).parquet(staging)
       } finally {
-        if (!doShuffle && mpb.depth.decrementAndGet() == 0)
+        if (!shuffle && mpb.depth.decrementAndGet() == 0)
           spark.conf.set(mpbKey, mpb.saved)
       }
     // Swap: per affected bucket, move the old dir ASIDE first, rename
@@ -2277,15 +2255,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           new java.util.concurrent.ConcurrentHashMap[Path, LongAdder]
         gens.foreach(g => genLeft.put(g.getPath, new LongAdder))
         import scala.jdk.CollectionConverters._
-        // graft.vacuum.parallel=false restores the serial walk — kept
-        // ONLY so the parallel sweep's benefit stays measurable
-        // (tools/TimeTravelProbe records both).
-        val stream0 = pairs.toSeq.asJava.stream()
-        val stream =
-          if (spark.conf.get("graft.vacuum.parallel", "true").toBoolean)
-            stream0.parallel()
-          else stream0
-        stream.forEach { case (gp, bd) =>
+        // Parallel over (generation, bucket dir): the sweep is one list
+        // and a run of deletes per dir, so it scales with metadata
+        // latency; 2.0× per file over the serial walk even on a local
+        // page-cached FS (BASELINE §22.3).
+        pairs.toSeq.asJava.parallelStream().forEach { case (gp, bd) =>
           var left = 0L
           if (bd.isDirectory) {
             fs.listStatus(bd.getPath).foreach { f =>
@@ -2363,12 +2337,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           val bucketDirs = fs.listStatus(root).filter(s =>
             s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
           import scala.jdk.CollectionConverters._
-          val s0 = bucketDirs.toSeq.asJava.stream()
-          val s1 =
-            if (spark.conf.get("graft.vacuum.parallel", "true").toBoolean)
-              s0.parallel()
-            else s0
-          s1.forEach { bd =>
+          bucketDirs.toSeq.asJava.parallelStream().forEach { bd =>
             fs.listStatus(bd.getPath).foreach { f =>
               val logical = s"${bd.getPath.getName}/${f.getPath.getName}"
               if (f.isFile && !keep.contains(logical) &&
@@ -3070,8 +3039,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // where __src_ columns do not exist — falls back conservatively to
     // every bucket rather than guessing.
     val srcBks = srcStats.getSeq[Int](2).toSet
-    val bySourcePrune =
-      spark.conf.get("graft.merge.bySourcePrune", "true").toBoolean
     // The other clause families force the source keys' buckets into the
     // rewrite regardless; when those already cover every bucket the
     // prepass cannot prune anything — skip it exactly then.
@@ -3079,8 +3046,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       if (matched.nonEmpty || notMatched.nonEmpty) srcBks else Set[Int]()
     val affected: Set[Int] =
       if (notBySource.isEmpty) srcBks
-      else if (nSrc > bcastMax0 || !bySourcePrune ||
-          srcForced.size == t.buckets)
+      else if (nSrc > bcastMax0 || srcForced.size == t.buckets)
         (0 until t.buckets).toSet
       else {
         val anyCond = notBySource.map(cl => condOf(cl.condition))
@@ -3771,6 +3737,15 @@ object MppEngine {
     * (its flagship test attaches TWO mpp databases and switches with
     * USE — test/sql/mpp.test:15-31). */
   val registry = scala.collection.concurrent.TrieMap.empty[String, MppEngine]
+
+  /** Parquet row-group size of every data file the engine writes, by
+    * INSERT and by the COW rewrite alike (see stageAndSwap). */
+  private[mpp] val RowGroupBytes = 32L * 1024 * 1024
+  /** Target bytes per write task of a large shuffled COW rewrite. */
+  private[mpp] val CowTaskBytes = 256L * 1024 * 1024
+  /** Read split size a narrow COW rewrite is planned under (see
+    * stageAndSwap). */
+  private[mpp] val CowMaxPartitionBytes = 32L * 1024 * 1024
 
   /** Per-SESSION reentrancy state for the narrow-write
     * `spark.sql.files.maxPartitionBytes` override (see stageAndSwap).

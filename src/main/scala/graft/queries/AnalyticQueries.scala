@@ -145,7 +145,7 @@ object AnalyticQueries {
   def qAntiJoin(s: SparkSession, dir: String): DataFrame = {
     val open = t(s, dir, "orders").filter(col("o_orderstatus") === "O")
       .select(col("o_custkey"))
-    // shuffle_hash on the build side (round-15 AggFloor): the planner
+    // shuffle_hash on the build side (BASELINE §25.3): the planner
     // fell to a sort-merge anti join here, sorting BOTH the 4.5M-row
     // probe and the 22M-row build at sf30 — the hash anti join skips
     // both whole-side sorts (measured 1.86 → 1.30 s at sf30) and its
@@ -298,13 +298,13 @@ object AnalyticQueries {
       .orderBy("l_returnflag")
   }
 
-  /** Statistical aggregates: EXACT interpolated percentiles (Spark's
-    * `percentile`, the sort-based exact aggregate — same linear
+  /** Statistical aggregates: EXACT interpolated percentiles
+    * ([[graft.functions.QuantizedPercentiles]] — same linear
     * interpolation as DuckDB's `quantile_cont`), sample stddev,
     * correlation, sample covariance. Skewness is deliberately absent:
     * Spark computes the population estimator, DuckDB the sample-
     * adjusted one — a real definitional difference, not a bug to
-    * paper over with tolerance. Scale note: `percentile` buffers a
+    * paper over with tolerance. Scale note: the aggregate buffers a
     * value→count map per group (already histogram-compressed for
     * quantized domains like these; a round-9 explicit
     * histogram+window rewrite measured SLOWER at sf3 — 2.0 vs 1.1 s —
@@ -315,28 +315,22 @@ object AnalyticQueries {
     t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
-        // Optimization round 16: [[graft.functions.QuantizedPercentiles]]
-        // replaces the built-in `percentile` as the default exact
-        // aggregate — same value→count shape (exchange bounded by the
-        // distinct count, the compression that wins at scale) with
-        // primitive open-addressed arrays instead of the built-in's
-        // boxed OpenHashMap[AnyRef, Long] (the constant factor that
-        // dominated this row: the 99%-distinct price column alone was
-        // 1.37 s of the 1.5 s sf0.1 row). Measured min-of-3, values
+        // [[graft.functions.QuantizedPercentiles]] rather than the
+        // built-in `percentile`: the same value→count shape (exchange
+        // bounded by the distinct count, the compression that wins at
+        // scale) with primitive open-addressed arrays instead of the
+        // built-in's boxed OpenHashMap[AnyRef, Long] (the constant
+        // factor that dominated this row: the 99%-distinct price column
+        // alone was 1.37 s of the 1.5 s sf0.1 row). Measured min-of-3, values
         // bit-identical to the built-in: sf0.1 1.79 → 0.97 s, sf3
         // 1.85 → 0.99 s — faster than BOTH prior shapes at BOTH
-        // scales (the round-11 built-in-vs-ExactPercentiles trade was
-        // boxing vs compression; this keeps the compression and drops
-        // the boxing). graft.stats.exactPct=true still opts into the
-        // raw-array aggregate for truly continuous domains.
+        // scales (the built-in-vs-ExactPercentiles trade was boxing vs
+        // compression; this keeps the compression and drops the
+        // boxing; OPTIMIZATION_r16.md).
         round(QuantizedPercentiles.percentiles(s,
           col("l_quantity"), 0.5)(0), 4).as("p50_qty"),
-        (if (s.conf.get("graft.stats.exactPct", "false").toBoolean)
-          round(graft.functions.ExactPercentiles.percentiles(s,
-            col("l_extendedprice"), 0.9)(0), 4)
-        else round(QuantizedPercentiles.percentiles(s,
-          col("l_extendedprice"), 0.9)(0), 4))
-          .as("p90_price"),
+        round(QuantizedPercentiles.percentiles(s,
+          col("l_extendedprice"), 0.9)(0), 4).as("p90_price"),
         round(stddev_samp(col("l_extendedprice")), 4).as("sd_price"),
         round(corr(col("l_quantity"), col("l_extendedprice")), 4)
           .as("corr_qp"),
@@ -370,22 +364,13 @@ object AnalyticQueries {
       .groupBy(col("l_returnflag"))
       .agg(
         // Both domains here are quantized (integer quantities, cent
-        // prices), so the built-in's value→count map IS the
-        // compression — the round-11 isolated A/B reverted the
-        // round-10 primitive-array switch on prices (see qStatsAgg;
-        // same graft.stats.exactPct opt-in for truly continuous
-        // columns, where [[graft.functions.ExactPercentilesAgg]]
-        // skips the boxed map entirely).
-        // Same primitive value→count aggregate as qStatsAgg (round 16);
-        // one buffer serves both price quantiles, as before.
+        // prices), so a value→count map IS the compression: the same
+        // primitive aggregate as qStatsAgg, one buffer serving both
+        // price quantiles.
         QuantizedPercentiles.percentiles(s, col("l_quantity"), 0.5)(0)
           .as("e50"),
-        (if (s.conf.get("graft.stats.exactPct", "false").toBoolean)
-          graft.functions.ExactPercentiles.percentiles(s,
-            col("l_extendedprice"), 0.9, 0.99)
-        else QuantizedPercentiles.percentiles(s,
-          col("l_extendedprice"), 0.9, 0.99))
-          .as("e9x"),
+        QuantizedPercentiles.percentiles(s,
+          col("l_extendedprice"), 0.9, 0.99).as("e9x"),
         expr("percentile_approx(l_quantity, 0.5, 2000)").as("a50"),
         expr("percentile_approx(l_extendedprice, array(0.9, 0.99), 2000)")
           .as("a9x"))
@@ -758,13 +743,14 @@ object AnalyticQueries {
     // join's exchange |suppliers|-scale instead of a fourth fact-sized
     // shuffle; re-summing by name after the join is identical (names
     // are per-supplier).
-    // Optimization round 16, REJECTED probe (kept as a negative
-    // result): the Q21 aggregate form — one (order, supplier) groupBy
-    // computing nr/ns/nrs, EXISTS ⟺ ns ≥ 2, NOT EXISTS ⟺ nrs = 1 —
+    // Rejected rewrite (a negative result, OPTIMIZATION_r16.md
+    // "q_exists_chain"): the Q21 aggregate form — one (order,
+    // supplier) groupBy computing nr/ns/nrs, EXISTS ⟺ ns ≥ 2,
+    // NOT EXISTS ⟺ nrs = 1 —
     // removes all three fact join legs but replaces them with a
     // fact-sized hash aggregate over ~|lineitem| distinct keys, and
-    // measured WORSE and erratic (Profile steady min at sf3: 2.1 →
-    // 4.9 s, spikes to 16 s under GC pressure). Same finding as the
+    // measured WORSE and erratic (steady min at sf3: 2.1 → 4.9 s,
+    // spikes to 16 s under GC pressure). Same finding as the
     // span-dedup agg-vs-window probe: per-partition shuffled-hash join
     // builds beat full-cardinality hash aggregates on this engine.
     val perSupp = withNE.groupBy("l_suppkey").agg(count(lit(1)).as("nw"))
@@ -791,10 +777,10 @@ object AnalyticQueries {
     // every scale factor (the q5 customer-join lesson: leave
     // data-dependent sides to AQE, which broadcasts the measured-small
     // side and falls back to the shuffle join if a scale ever outgrows
-    // it). Measured (Profile, steady min, sf3): 1.36 → 1.22 s — the
-    // lineitem partial-agg merge is the row's floor; plan: 2 forced
-    // exchanges (orders, customer) → 0 (both joins broadcast the
-    // measured-small side).
+    // it). Measured (steady min, sf3; OPTIMIZATION_r16.md): 1.36 →
+    // 1.22 s — the lineitem partial-agg merge is the row's floor; plan:
+    // 2 forced exchanges (orders, customer) → 0 (both joins broadcast
+    // the measured-small side).
     val oc = ord.join(big, ord("o_orderkey") === big("l_orderkey"))
     oc.join(cust, oc("o_custkey") === cust("c_custkey"))
       .select(col("c_name"), col("c_custkey"), col("o_orderkey"),

@@ -69,7 +69,7 @@ object CorpusQueries {
     * exit). */
   private def survivorArrays(s: SparkSession, dir: String,
       surv: DataFrame): (DataFrame, Boolean) = {
-    val small = DedupQueries.smallCorpus(s, dir)
+    val small = DedupQueries.smallCorpus(dir)
     val da = DedupQueries.shingleArrays(s, dir)
       .join(surv.select("doc_id"), "doc_id")
     (if (small) DedupQueries.registerScratch(da.localCheckpoint()) else da,

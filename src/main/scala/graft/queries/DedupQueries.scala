@@ -133,13 +133,15 @@ object DedupQueries {
     * ADAPTIVE, not unconditional (round 9): the shingle arrays are
     * ~10× the compressed text — a 100 TB corpus would persist ~30 TB
     * of hashes, and the 15M-doc local probe filled 50 GB of scratch
-    * before DNF'ing. Above `graft.shingle.persistBudget` bytes of
-    * source parquet (default 1 GiB ≈ the sf30 mirror) the relation is
+    * before DNF'ing. Above [[ShinglePersistBudget]] bytes of source
+    * parquet (1 GiB ≈ the sf30 mirror) the relation is
     * returned UNPERSISTED: each consumer recomputes the fused kernel
     * from text — one cheap columnar scan per use, the classic Spark
     * recompute-beats-materialize trade for wide-but-cheap projections. */
   private val shingleCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
+  private val ShinglePersistBudget = 1L << 30
 
   private def docsParquetBytes(dir: String): Long = {
     def sz(f: java.io.File): Long =
@@ -151,11 +153,8 @@ object DedupQueries {
   /** True while `dir`'s documents fit the shingle-persist budget — the
     * one switch deciding whether shingle-derived relations are
     * materialized (cache/localCheckpoint) or recomputed per consumer. */
-  private[queries] def smallCorpus(s: SparkSession, dir: String): Boolean = {
-    val budget = s.conf.getOption("graft.shingle.persistBudget")
-      .map(_.toLong).getOrElse(1L << 30)
-    docsParquetBytes(dir) <= budget
-  }
+  private[queries] def smallCorpus(dir: String): Boolean =
+    docsParquetBytes(dir) <= ShinglePersistBudget
 
   private[queries] def shingleArrays(s: SparkSession, dir: String): DataFrame = {
     def plain = docs(s, dir)
@@ -166,7 +165,7 @@ object DedupQueries {
       .select(col("doc_id"),
         graft.functions.TextFunctions.shingle3Text(s, col("text")).as("sha"))
       .filter(size(col("sha")) >= 1)
-    if (!smallCorpus(s, dir)) plain
+    if (!smallCorpus(dir)) plain
     // Cache at the scan's own partitioning: repartitioning the cache
     // to the executor-pool width was probed in round 16 and measured
     // WORSE (sf0.1 LSH row 1.61 → 2.19 s steady) — the downstream
@@ -479,7 +478,7 @@ object DedupQueries {
     // Same small/large split as [[lshPairs]]: at scale, persist the
     // bounded batch×corpus collision sliver and candidate-restrict the
     // array probes; under the budget keep the single-consumer shape.
-    val small = smallCorpus(s, dir)
+    val small = smallCorpus(dir)
     val cand =
       if (small) cand0
       else {

@@ -520,11 +520,14 @@ object MppQueries {
     val q = graft.streaming.CdcRead.replicaPipeline(s, e.warehouse,
       "rep_src", e, "rep_dst", "s_suppkey", ckpt,
       org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    if (!q.awaitTermination(180000)) {
-      q.stop() // don't leave it racing the next pass's DROP
-      throw new IllegalStateException(
-        "q_stream_replica: replication did not drain in 180 s")
-    }
+    try {
+      if (!q.awaitTermination(180000)) {
+        q.stop() // don't leave it racing the next pass's DROP
+        throw new IllegalStateException(
+          "q_stream_replica: replication did not drain in 180 s")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(ckpt))
     e.table("rep_dst")
       .groupBy(col("s_nationkey").as("nk"))
       .agg(count(lit(1)).as("n"),

@@ -115,13 +115,16 @@ object OperatorQueries {
   // distributed tables bucketed 16 on custkey, exposed through
   // graft.sources.GraftCatalog. Fresh temp warehouse per JVM — the
   // inserts are the one-time cost the catalog's whole point is to
-  // amortize (no exportBucketed re-write afterwards).
+  // amortize (no exportBucketed re-write afterwards). The catalog is
+  // live until the JVM exits, so that is when the warehouse goes.
   private val dsv2Cats = TrieMap.empty[String, String]
 
-  private[graft] def dsv2Catalog(s: SparkSession, dir: String): String =
+  private def dsv2Catalog(s: SparkSession, dir: String): String =
     dsv2Cats.getOrElseUpdate(dir, {
       val wh = java.nio.file.Files
         .createTempDirectory(s"graft-dsv2-${dirTag(dir)}")
+      sys.addShutdownHook(
+        org.apache.commons.io.FileUtils.deleteQuietly(wh.toFile))
       val e = new graft.mpp.MppEngine(s, wh.toString)
       e.createDistributedTable("cust", "custkey BIGINT, c_name STRING",
         "custkey", 16)

@@ -11,10 +11,9 @@ import org.apache.hadoop.util.Progressable
 /** A Hadoop FileSystem whose every operation is a REAL network RPC —
   * HTTP requests to [[MiniFsServer]], which can run as a SEPARATE
   * PROCESS serving a local directory tree. The DATA-plane twin of
-  * `MiniObjectStoreServer` (round-14 verdict item 8): `slowfs:`
-  * measures remote LATENCY but its calls never leave the JVM; under
-  * `graftfs:` every open/create/list/rename/read crosses a process
-  * boundary over TCP, so the engine's DML battery exercises its
+  * `MiniObjectStoreServer`: under `graftfs:` every
+  * open/create/list/rename/read crosses a process boundary over TCP,
+  * so the engine's DML battery exercises its
   * metadata and data paths with genuine wire RPCs — serialization,
   * connection reuse, server-side atomicity and all.
   *
@@ -27,7 +26,7 @@ import org.apache.hadoop.util.Progressable
   * whole on close — catalog objects and bounded-row-group parquet
   * parts are MB-scale by design.
   *
-  * Wire-up (probe-side): `fs.graftfs.impl` = this FQCN,
+  * Wire-up: `fs.graftfs.impl` = this FQCN,
   * `fs.AbstractFileSystem.graftfs.impl` = [[HttpDataAbstractFs]],
   * warehouse `graftfs://127.0.0.1:<port>/<dir>`; the catalog needs
   * `graft.catalog.fs.assumeAtomic=true` (the server's rename/create
@@ -65,8 +64,6 @@ class HttpDataFileSystem extends FileSystem {
       params: Seq[(String, String)], body: Array[Byte] = null)
       : HttpResponse[Array[Byte]] = {
     HttpDataFileSystem.rpcs.increment()
-    HttpDataFileSystem.byOp.computeIfAbsent(op,
-      _ => new java.util.concurrent.atomic.LongAdder).increment()
     val q = (("op" -> op) +: params)
       .map { case (k, v) => s"$k=${enc(v)}" }.mkString("&")
     val b = HttpRequest.newBuilder(URI.create(s"$base/fs?$q"))
@@ -216,18 +213,11 @@ class HttpDataFileSystem extends FileSystem {
 
 object HttpDataFileSystem {
   /** Shared client (connection pooling — one engine makes thousands
-    * of calls) and a global RPC counter for probes. */
+    * of calls) and a global RPC counter, which HttpDataFsSpec and
+    * ClusterCheck read to prove the calls crossed the wire. */
   private val client = HttpClient.newBuilder()
     .connectTimeout(java.time.Duration.ofSeconds(20)).build()
   val rpcs = new java.util.concurrent.atomic.LongAdder
-  /** Per-operation counts (probe attribution — RpcProbe's graftfs
-    * mode diffs this around each phase). */
-  val byOp = new java.util.concurrent.ConcurrentHashMap[String,
-    java.util.concurrent.atomic.LongAdder]
-  def snapshotByOp(): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    byOp.asScala.map { case (k, v) => k -> v.sum() }.toMap
-  }
 }
 
 /** FileContext twin (the catalog's atomic replacing publish resolves
@@ -253,8 +243,8 @@ class HttpDataAbstractFs(uri: URI,
   * server-side (the property `graft.catalog.fs.assumeAtomic` asserts).
   * Forked via [[MiniFsServer.main]] it is a separate PROCESS, so every
   * filesystem call of the engine under test crosses a real process
-  * boundary. Optional fixed per-request delay emulates WAN latency. */
-final class MiniFsServer(port: Int, delayMs: Long = 0L) {
+  * boundary. */
+final class MiniFsServer(port: Int) {
 
   private val lock = new Object
 
@@ -275,7 +265,6 @@ final class MiniFsServer(port: Int, delayMs: Long = 0L) {
 
   server.createContext("/fs", { exchange =>
     try {
-      if (delayMs > 0) Thread.sleep(delayMs)
       val params = Option(exchange.getRequestURI.getRawQuery)
         .getOrElse("").split("&").filter(_.contains("="))
         .map { kv =>
@@ -418,13 +407,12 @@ final class MiniFsServer(port: Int, delayMs: Long = 0L) {
   def stop(): Unit = { server.stop(0); pool.shutdown() }
 }
 
-/** Forked-process entry (`runMain graft.tools.MiniFsServer <port>
-  * [delayMs]`): serve until killed. Prints one READY line once bound. */
+/** Forked-process entry (`runMain graft.tools.MiniFsServer <port>`):
+  * serve until killed. Prints one READY line once bound. */
 object MiniFsServer {
   def main(args: Array[String]): Unit = {
     val port = if (args.length > 0) args(0).toInt else 0
-    val delay = if (args.length > 1) args(1).toLong else 0L
-    val s = new MiniFsServer(port, delay).start()
+    val s = new MiniFsServer(port).start()
     println(s"MINIFS READY port=${s.boundPort}")
     Thread.sleep(Long.MaxValue)
   }

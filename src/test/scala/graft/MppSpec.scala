@@ -431,6 +431,23 @@ class MppSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == Seq((2L, 20.0), (3L, 103.0), (4L, 104.0), (5L, 50.0)),
       got.toString)
+    // Rows the next merge keeps (v < 100), so that some bucket dirs
+    // hold no row its BY SOURCE condition hits: k=2..5 share two dirs.
+    e.insertInto("m4", spark.range(10, 18).toDF("k")
+      .withColumn("v", col("k") * 1.0))
+    // Data file names per bucket dir, and the dirs holding a v >= 100
+    // row, read from the dirs themselves.
+    val root = new java.io.File(s"${e.warehouse}/data/m4")
+    def filesByBucket(): Map[String, Set[String]] =
+      root.listFiles().filter(_.getName.startsWith(
+          s"${BucketPruning.BucketCol}=")).map(d => d.getName ->
+        d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet)
+        .toMap
+    val before = filesByBucket()
+    val hit = before.keySet.filter(b => before(b).nonEmpty &&
+      spark.read.parquet(s"$root/$b").filter("v >= 100.0").count() > 0)
+    assert(hit.nonEmpty && (before.keySet -- hit).exists(before(_).nonEmpty),
+      s"layout must hold hit and clean buckets: $before, hit $hit")
     // ANSI corner: an EMPTY source makes every target row "not matched
     // by source" — the merge is NOT a no-op.
     val n2 = e.sql("MERGE INTO m4 t USING (SELECT * FROM m4_batch " +
@@ -440,7 +457,15 @@ class MppSpec extends SparkTestBase {
       .head().getLong(0)
     assert(n2 == 2L, s"empty source still BY-SOURCE-deletes, got $n2")
     val ks = e.table("m4").orderBy("k").collect().map(_.getLong(0)).toSeq
-    assert(ks == Seq(2L, 5L), ks.toString)
+    assert(ks == Seq(2L, 5L) ++ (10L until 18L), ks.toString)
+    // BY SOURCE match pruning: only the dirs holding a row the
+    // condition hits are rewritten; every other dir keeps its files.
+    val after = filesByBucket()
+    (before.keySet -- hit).foreach(b =>
+      assert(after.getOrElse(b, Set.empty) == before(b), s"$b rewritten"))
+    hit.foreach(b => assert(
+      (after.getOrElse(b, Set.empty) intersect before(b)).isEmpty,
+      s"$b not rewritten: ${before(b)} -> ${after.get(b)}"))
   }
 
   test("DROP TABLE marks metadata deleted and removes data (mpp.test)") {

@@ -11,8 +11,8 @@ import graft.sources.ColocatedFileIndex
   * SECOND engine invalidate through the published manifest diff, and
   * time-travel-off tables fall back to the mtime fingerprint. The RPC
   * economics (29 vs 81,951 RPCs per pruned point read) are recorded in
-  * BASELINE §24 via tools/RpcProbe; this spec pins the CORRECTNESS
-  * contract the economics ride on. */
+  * BASELINE §24; this spec pins the CORRECTNESS contract the economics
+  * ride on. */
 class ListingCacheSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =

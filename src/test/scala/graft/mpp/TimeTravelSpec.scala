@@ -442,18 +442,17 @@ class TimeTravelSpec extends SparkTestBase {
 
   test("DESCRIBE HISTORY, RESTORE and VACUUM list plain directories: " +
       "no located listing, history listings bounded by the layout") {
-    import graft.tools.{DelayedAbstractFs, DelayedFileSystem}
+    import graft.tools.{CountingAbstractFs, CountingFileSystem}
     val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.slowfs.impl", classOf[DelayedFileSystem].getName)
-    hc.set("fs.AbstractFileSystem.slowfs.impl",
-      classOf[DelayedAbstractFs].getName)
-    hc.set("fs.slowfs.delay.ms", "0")
+    hc.set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    hc.set("fs.AbstractFileSystem.countfs.impl",
+      classOf[CountingAbstractFs].getName)
     // The delegate is RawLocalFileSystem: rename/O_EXCL-create ARE
     // atomic, so the operator assertion is true by construction.
     spark.conf.set("graft.catalog.fs.assumeAtomic", "true")
     try {
-      val local = tempDir("graft-tt-slowfs")
-      val e = new MppEngine(spark, s"slowfs:$local")
+      val local = tempDir("graft-tt-countfs")
+      val e = new MppEngine(spark, s"countfs:$local")
       val buckets = 4
       e.sql("CREATE TABLE sh(k BIGINT, v DOUBLE) PARTITION BY (k) " +
         s"WITH BUCKETS $buckets")
@@ -463,9 +462,9 @@ class TimeTravelSpec extends SparkTestBase {
       e.sql("UPDATE sh SET v = -1 WHERE k % 3 = 0")
       e.sql("DELETE FROM sh WHERE k = 5")
       def ops[A](body: => A): (A, Map[String, Long]) = {
-        val before = DelayedFileSystem.snapshotByOp()
+        val before = CountingFileSystem.snapshotByOp()
         val out = body
-        (out, DelayedFileSystem.snapshotByOp().map { case (k, n) =>
+        (out, CountingFileSystem.snapshotByOp().map { case (k, n) =>
           k -> (n - before.getOrElse(k, 0L)) }.filter(_._2 > 0))
       }
       val (hist, histOps) = ops(e.sql("DESCRIBE HISTORY sh").collect())
@@ -489,8 +488,8 @@ class TimeTravelSpec extends SparkTestBase {
       }
     } finally {
       spark.conf.unset("graft.catalog.fs.assumeAtomic")
-      Seq("fs.slowfs.impl", "fs.AbstractFileSystem.slowfs.impl",
-        "fs.slowfs.delay.ms").foreach(hc.unset)
+      Seq("fs.countfs.impl", "fs.AbstractFileSystem.countfs.impl")
+        .foreach(hc.unset)
     }
   }
 
