@@ -214,13 +214,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_WARM_TABLES → graft.warm.tables: bounds which warehouse
-    // tables MppQueries.warm builds. Set here (not in main) so the
-    // fresh-JVM --one children honor it too — an isolated fork at a
-    // deep-scale mirror must not build the full DML warehouse to time
-    // one parquet-only row.
-    sys.env.get("GRAFT_WARM_TABLES")
-      .foreach(v => spark.conf.set("graft.warm.tables", v))
     spark
   }
 

@@ -354,13 +354,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           catch { case u: Throwable => e.addSuppressed(u) }
         throw e
     }
-    // With time travel off there is no manifest commit to carry the
-    // metadata — apply it directly.
-    if (!timeTravelEnabled) catalog.mutate(s =>
-      reshardState(t.tableOid, newBuckets)(s.copy(
-        tables = s.tables.map(x =>
-          if (x.tableOid == t.tableOid) x.copy(buckets = newBuckets)
-          else x))))
     mfs.delete(marker, false)
     BucketPruning.register(dataPath(name), t.partitionColumn, newBuckets)
     graft.sources.ColocatedFileIndex.invalidate(dataPath(name))
@@ -547,26 +540,19 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * (round 14): zero-RPC cache checks on ANY scheme — on an S3-class
     * warehouse the mtime fingerprint must bypass the cache and every
     * read re-lists O(dirs + files); the pointer advances exactly when
-    * the committed file set changes. TT off → None → the mtime
-    * fingerprint path (the pointer stops advancing on TT-off commits,
-    * so it would serve stale listings as a validity key).
+    * the committed file set changes.
     *
     * The key additionally requires the table's MANIFEST-COMPLETE
     * EPOCH (round-14 advisor): the pointer is a complete validity
-    * token only while every data mutation commits a manifest. A PEER
-    * JVM writing with TT off never advances the pointer — but its
-    * first TT-off statement CAS-clears the epoch, which
-    * refresh-on-read delivers here, so epoch-absent ⇒ fall back to
-    * the mtime fingerprint instead of serving stale listings
-    * indefinitely. Residual window: between the peer's file moves and
-    * its epoch-clear CAS, one statement here can serve the
-    * pre-statement listing — the same one-statement staleness peer
-    * DDL already has. Fleets should still run a consistent
-    * graft.timetravel.enabled; mixing it degrades this cache to the
-    * fingerprint path (and forfeits time travel), it does not corrupt. */
+    * token only while every data mutation commits a manifest. Every
+    * data mutation of this engine does, but a catalog written by an
+    * older build that could mutate data without a manifest carries a
+    * stale pointer and no epoch — epoch-absent ⇒ the mtime
+    * fingerprint, never that pointer. A table never written has
+    * neither and takes the fingerprint path too; its first commit
+    * sets both. */
   private[graft] def listingVersionKey(t: TableInfo): Option[String] =
-    if (timeTravelEnabled &&
-        catalog.state.manifestEpochs.contains(t.tableOid.toString))
+    if (catalog.state.manifestEpochs.contains(t.tableOid.toString))
       catalog.state.tableManifests.get(t.tableOid.toString)
     else None
 
@@ -612,12 +598,12 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     *    window where data is relaid under the new k while the catalog
     *    (and every peer's pruning registry) still carries the old k —
     *    leaves the marker behind, so a post-crash engine keeps serving
-    *    the last committed version (TT on; its files are archived, the
-    *    manifest resolves them) or fails loudly (TT off: nothing to
-    *    pin to) instead of hash-pruning against the wrong modulus and
-    *    silently returning zero/duplicate rows. `RESTORE TABLE … TO
-    *    VERSION AS OF` converges the layout either way and clears the
-    *    marker.
+    *    the last committed version (its files are archived, the
+    *    manifest resolves them) — or, for a table with no committed
+    *    manifest, fails loudly — instead of hash-pruning against the
+    *    wrong modulus and silently returning zero/duplicate rows.
+    *    `RESTORE TABLE … TO VERSION AS OF` converges the layout and
+    *    clears the marker.
     */
   private def relayMarker(t: TableInfo): Path =
     new Path(dataPath(t.name), graft.sources.ColocatedFileIndex.RelayMarker)
@@ -654,18 +640,16 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       spark.createDataFrame(rdd, fullSchema(t))
     }
     Some(try {
-      val files = (if (timeTravelEnabled)
-          catalog.state.tableManifests.get(t.tableOid.toString)
-        else None)
+      val files = catalog.state.tableManifests.get(t.tableOid.toString)
         .flatMap(m => loadManifest(m))
         .getOrElse(throw new IllegalStateException(
           s"table ${t.name}: a REBUCKET relay marker is present but " +
-            "no committed manifest exists to pin reads to (time " +
-            "travel off, or the manifest was swept) — the live " +
-            "layout cannot be trusted and there is no version to " +
-            "serve. Recover with RESTORE TABLE " +
-            s"${t.name} TO VERSION AS OF <version> (requires time " +
-            "travel), or re-create the table."))
+            "no committed manifest exists to pin reads to (the table " +
+            "was never written, or the manifest was swept) — the " +
+            "live layout cannot be trusted and there is no version " +
+            "to serve. Recover with RESTORE TABLE " +
+            s"${t.name} TO VERSION AS OF <version>, or re-create the " +
+            "table."))
       // No zone maps / bucket pruning on the pinned path: the window
       // is one relay (or one crashed relay awaiting RESTORE), and
       // correctness beats scan pruning there. BucketCol is synthesized
@@ -951,9 +935,9 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * state entirely; two engines' appends interleave without touching
     * each other's files. A crash mid-move leaves a partial append
     * visible — the reference's own non-transactional data guarantee
-    * (README.md:115); with time travel on the partial is absent from
-    * every committed manifest, so `RESTORE TABLE t TO VERSION AS OF
-    * <current>` sweeps it. */
+    * (README.md:115); the partial is absent from every committed
+    * manifest, so `RESTORE TABLE t TO VERSION AS OF <current>` sweeps
+    * it. */
   private def stagedAppend(t: TableInfo, shaped: DataFrame)(
       commit: (Vector[String],
         Seq[graft.sources.ColocatedFileIndex.AddedFile]) => Unit): Unit = {
@@ -1003,8 +987,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         // left nothing visible when a job aborted, and that
         // all-or-nothing failure shape is preserved here — without it
         // a disk-full on the Nth of M moves would leave N buckets'
-        // rows live (and, with time travel off, no manifest to RESTORE
-        // them away by).
+        // rows live, visible until a RESTORE sweeps them away.
         val moved =
           new java.util.concurrent.ConcurrentLinkedQueue[(Path, Path)]
         import scala.jdk.CollectionConverters._
@@ -1060,7 +1043,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
                 e.addSuppressed(new IllegalStateException(
                   s"append ${t.name}: ROLLBACK INCOMPLETE — undo rename " +
                     s"$dst -> $src failed; the partial append is VISIBLE. " +
-                    "With time travel on, `RESTORE TABLE " + t.name +
+                    "`RESTORE TABLE " + t.name +
                     " TO VERSION AS OF <current>` sweeps it.", u))
               }
             }
@@ -1203,7 +1186,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         val tag = UUID.randomUUID().toString // truncate archive gen
         (0 until t.buckets).foreach { k =>
           val d = new Path(dataRoot, s"$BucketCol=$k")
-          if (fs.exists(d)) archiveOrDelete(fs, d,
+          if (fs.exists(d)) archive(fs, d,
             new Path(archiveDirFor(t, tag), s"$BucketCol=$k"))
         }
         // Every bucket replaced with nothing: the manifest delta is a
@@ -1666,7 +1649,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       }
       // No staged dir means the rewrite emptied this bucket (all rows
       // deleted/moved): an archived (or dropped) aside IS the result.
-      if (hadOld) archiveOrDelete(fs, aside,
+      if (hadOld) archive(fs, aside,
         new Path(archiveDirFor(t, stagingName), s"$BucketCol=$k"))
     }
     fs.delete(new Path(staging), true)
@@ -1706,31 +1689,27 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   // corpus exactly as a past job saw it. Retention = the catalog's
   // snapshot window (MppCatalog.RetainSnapshots); archives and
   // manifests beyond it are swept by the amortized vacuum below.
-  // Disable with graft.timetravel.enabled=false (rewrites then delete
-  // replaced files immediately, as before round 11).
-
-  private def timeTravelEnabled: Boolean =
-    spark.conf.get("graft.timetravel.enabled", "true").toBoolean
+  // There is no off switch (the Delta transaction-log stance): how
+  // much history a table pins is the retention window's business, and
+  // `VACUUM`/`DESCRIBE HISTORY data_bytes` report it.
 
   private def archiveDirFor(t: TableInfo, tag: String): Path =
     new Path(dataPath(t.name), s".archive/$tag")
 
-  /** Move `src` under `dst` when time travel is on, else delete it.
-    * The archive keeps the bucket=k path segment, so a file's LOGICAL
-    * name (bucket=k/part-….parquet) never changes — manifests store
-    * logical names and resolve to live-or-archive at read time. */
-  private def archiveOrDelete(fs: org.apache.hadoop.fs.FileSystem,
-      src: Path, dst: Path): Unit =
-    if (!timeTravelEnabled) { fs.delete(src, true); () }
-    else {
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(src, dst)) {
-        // Archiving is best-effort durability of HISTORY, never of the
-        // live table: fall back to delete rather than fail the swap.
-        fs.delete(src, true)
-        ()
-      }
+  /** Move `src` under `dst` in the archive. The archive keeps the
+    * bucket=k path segment, so a file's LOGICAL name
+    * (bucket=k/part-….parquet) never changes — manifests store logical
+    * names and resolve to live-or-archive at read time. */
+  private def archive(fs: org.apache.hadoop.fs.FileSystem,
+      src: Path, dst: Path): Unit = {
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(src, dst)) {
+      // Archiving is best-effort durability of HISTORY, never of the
+      // live table: fall back to delete rather than fail the swap.
+      fs.delete(src, true)
+      ()
     }
+  }
 
   /** Logical live-file list of the table: `bucket=k/fileName` per data
     * file, the unit manifests record. Driver-side listing of the
@@ -1888,10 +1867,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * overhead. Readers reconstruct via [[loadManifest]]; vacuum keeps
     * the transitive base CLOSURE of every retained reference alive.
     * Manifest files written by lost CAS attempts are unreferenced and
-    * age-swept by vacuum. Same contract as all of time travel: history
-    * integrity assumes time travel was ON for the table's life (a
-    * `graft.timetravel.enabled=false` interlude leaves no archives to
-    * travel to either way — SURVEY §8). */
+    * age-swept by vacuum. */
   private[mpp] def commitManifest(t: TableInfo,
       tableTransform: TableInfo => TableInfo = identity,
       addedFiles: Option[Vector[String]] = None,
@@ -1899,34 +1875,21 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       replacedBuckets: Option[(Set[Int], Vector[String])] = None,
       stateTransform: CatalogState => CatalogState = identity,
       failOnContention: Boolean = false): Unit = {
-    if (!timeTravelEnabled) {
-      // Record the OFF interlude (verdict-13 item 7): this statement
-      // mutated data without committing a manifest, so the table's
-      // manifest history is no longer complete — clear its epoch so
-      // stray-sweeping VACUUMs stop trusting "unreferenced" for files
-      // predating the next TT-on commit. One CAS only on the first
-      // OFF statement; later ones see the epoch already gone.
-      val oid = t.tableOid.toString
-      if (catalog.state.manifestEpochs.contains(oid))
-        catalog.mutate(s =>
-          s.copy(manifestEpochs = s.manifestEpochs - oid))
-      return
-    }
-    // Epoch (re-)establishment rides every manifest-committing CAS:
-    // absent (new table, or post-interlude) → set to now. Files
-    // younger than it were written under complete manifest-keeping.
+    // Epoch establishment rides every manifest commit: absent (a table
+    // never written, or a catalog from an older build that could write
+    // without manifests) → set to now. Files younger than it were
+    // written under complete manifest-keeping.
     // "Now" is read from the WAREHOUSE's clock, not the driver's: the
     // epoch gates DEFAULT deletion against file MTIMES, which live in
     // the warehouse's clock domain — on a remote store whose clock
     // runs ahead of the committing driver, a driver-wall epoch would
-    // classify legitimate TT-off-interlude files (mtime > driver-now)
-    // as post-epoch strays and sweep them by default, the exact
+    // classify legitimate pre-epoch files (mtime > driver-now) as
+    // post-epoch strays and sweep them by default, the exact
     // misclassification the epoch exists to prevent (round-14
     // advisor). One probe file write+stat per establishment (once per
-    // table per TT-on era), falling back to driver wall when the
-    // probe fails. Ties (mtime == epoch) do not sweep — the sweep
-    // condition is strictly greater — so second-granularity mtimes
-    // stay on the safe side.
+    // table), falling back to driver wall when the probe fails. Ties
+    // (mtime == epoch) do not sweep — the sweep condition is strictly
+    // greater — so second-granularity mtimes stay on the safe side.
     val epochOid = t.tableOid.toString
     lazy val epochNow: Long = {
       try {
@@ -2289,11 +2252,13 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // manifest references. Detect them here (VACUUM already owns the
     // file-accounting walk), post-grace so an in-flight peer INSERT's
     // moved-but-not-yet-committed files are never misread as strays.
-    // REPORT by default; `graft.vacuum.sweepStrays=true` deletes —
-    // deletion is only sound when time travel has been on for the
-    // table's whole life (a stale manifest from a TT-off interlude
-    // would misclassify legitimate live files), so it is an explicit
-    // operator action, like Delta's VACUUM retention override.
+    // Strays younger than the table's manifest-complete epoch sweep by
+    // default; older ones are REPORTED, and
+    // `graft.vacuum.sweepStrays=true` deletes them too — sound only
+    // when every write the table ever saw committed a manifest (an
+    // older build could write without one, and its stale manifest would
+    // misclassify legitimate live files), so it is an explicit operator
+    // action, like Delta's VACUUM retention override.
     val strayFiles = new LongAdder
     val strayBytes = new LongAdder
     val sweptTables =
@@ -2326,10 +2291,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         // Manifest-complete epoch (verdict-13 item 7): strays YOUNGER
         // than it were written under complete manifest-keeping, so
         // "no retained manifest references it" is authoritative —
-        // those sweep BY DEFAULT. Strays older than the epoch (or any
-        // stray when the epoch is absent — a TT-off interlude means
-        // the stale manifest could misclassify legitimate live files)
-        // still need the explicit operator assertion.
+        // those sweep BY DEFAULT. Strays older than the epoch, or any
+        // stray when the epoch is absent (a catalog from an older build
+        // that could write without a manifest, whose stale manifest
+        // could misclassify legitimate live files), still need the
+        // explicit operator assertion.
         val epoch = catalog.state.manifestEpochs.get(oid)
         val root = new Path(dataPath(t.name))
         val fs = root.getFileSystem(conf)
@@ -2578,8 +2544,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * manifest), which is the retry story; unlike the DML family there
     * is no staging swap — nothing is written, only moved. */
   def restoreTable(name: String, version: Long): Unit = {
-    require(timeTravelEnabled,
-      "RESTORE requires graft.timetravel.enabled=true")
     val key = localKey(name)
     val snap = snapshotOrFail(version)
     val cur = info(key)
@@ -2606,11 +2570,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
          .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt))
     val live = liveLogicalFiles(cur,
       (diskBuckets ++ (0 until cur.buckets)).distinct.sorted).toSet
-    // Displaced live files archive out (time travel is on, so the
-    // pre-restore state stays reachable — RESTORE is itself undoable).
+    // Displaced live files archive out, so the pre-restore state stays
+    // reachable — RESTORE is itself undoable.
     val tag = UUID.randomUUID().toString
     (live -- target).foreach { lf =>
-      archiveOrDelete(fs, new Path(root, lf),
+      archive(fs, new Path(root, lf),
         new Path(archiveDirFor(cur, tag), lf))
     }
     // Missing target files rename back from their archive generation.
@@ -2682,10 +2646,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * this is the net feed, not the per-commit journal.
     *
     * Bootstrap semantics: a fromVersion at which the table held no
-    * manifest (created inside the interval, or data written before
-    * manifest-keeping / with time travel off) reports the full toVersion
-    * state as inserts — the same "first consumption loads everything"
-    * contract Delta CDF gives from version 0. */
+    * manifest (created inside the interval, never written before it,
+    * or written by an older build that kept no manifest) reports the
+    * full toVersion state as inserts — the same "first consumption
+    * loads everything" contract Delta CDF gives from version 0. */
   def tableChanges(name: String, fromVersion: Long,
       toVersion: Long): DataFrame =
     tableChanges(name, fromVersion, toVersion, boundScratch = true)

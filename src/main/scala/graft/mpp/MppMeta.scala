@@ -60,14 +60,17 @@ final case class CatalogState(
       * data committed for that table at this version. */
     tableManifests: Map[String, String] = Map.empty,
     /** Manifest-COMPLETE epoch (round-13 verdict item 7): tableOid →
-      * wall-clock ms of the table's first manifest commit after any
-      * time-travel-OFF interlude (cleared the moment a statement runs
-      * with TT off). While present, every live file YOUNGER than the
-      * epoch was written under complete manifest-keeping, so a
-      * post-grace unreferenced one is authoritatively garbage — VACUUM
-      * sweeps those by default; files older than the epoch (or any
-      * file when the epoch is absent) still need the explicit
-      * `graft.vacuum.sweepStrays=true` operator assertion. */
+      * warehouse-clock ms of the table's first manifest commit. Every
+      * data mutation commits a manifest, so the entry is set by a
+      * table's first write and never cleared; it is absent only for a
+      * table never written, or in a catalog from an older build that
+      * could write data without a manifest. While present, every live
+      * file YOUNGER than the epoch was written under complete
+      * manifest-keeping, so a post-grace unreferenced one is
+      * authoritatively garbage — VACUUM sweeps those by default; files
+      * older than the epoch (or any file when the epoch is absent)
+      * still need the explicit `graft.vacuum.sweepStrays=true`
+      * operator assertion. */
     manifestEpochs: Map[String, Long] = Map.empty) {
 
   def liveTable(name: String): Option[TableInfo] =

@@ -25,16 +25,6 @@ object MppQueries {
 
   private val sharedEnvs = TrieMap.empty[String, MppEngine]
 
-  /** Deep-scale probes set `graft.warm.tables=orders_u,orders_m,…` to
-    * build only the warehouse tables the probe touches: at the 500M-row
-    * mirror each orders table copy is ~6 GB, and warming all six is a
-    * 36 GB disk bill a three-row probe does not need. Empty (default)
-    * = build everything the source dir supports. */
-  private def warmWanted(s: SparkSession, table: String): Boolean = {
-    val only = s.conf.get("graft.warm.tables", "").trim
-    only.isEmpty || only.split(',').map(_.trim).contains(table)
-  }
-
   private def sharedEngine(s: SparkSession, dir: String): MppEngine =
     sharedEnvs.getOrElseUpdate(dir, {
       // Persistent warehouse per scale dir: the engine reloads its
@@ -45,8 +35,7 @@ object MppQueries {
       val wh = "/tmp/graft-wh-v2/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
       val e = new MppEngine(s, wh)
       def ensure(table: String)(build: => Unit): Unit =
-        if (warmWanted(s, table) &&
-          e.catalog.state.liveTable(table).isEmpty) build
+        if (e.catalog.state.liveTable(table).isEmpty) build
       // Table-subset mirrors (ScaleData's disk-budgeted deep-scale
       // form) may omit source tables; build only the warehouse tables
       // whose sources exist — the q_mpp rows over missing tables then

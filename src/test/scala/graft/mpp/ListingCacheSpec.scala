@@ -9,10 +9,11 @@ import graft.sources.ColocatedFileIndex
   * hits are zero-listing identity hits, commits rotate the key and the
   * rebuild picks up exactly the committed state, peer commits from a
   * SECOND engine invalidate through the published manifest diff, and
-  * time-travel-off tables fall back to the mtime fingerprint. The RPC
-  * economics (29 vs 81,951 RPCs per pruned point read) are recorded in
-  * BASELINE §24; this spec pins the CORRECTNESS contract the economics
-  * ride on. */
+  * tables without a manifest-complete epoch (never written, or left by
+  * an older build's manifest-less writes) fall back to the mtime
+  * fingerprint. The RPC economics (29 vs 81,951 RPCs per pruned point
+  * read) are recorded in BASELINE §24; this spec pins the CORRECTNESS
+  * contract the economics ride on. */
 class ListingCacheSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
@@ -231,42 +232,40 @@ class ListingCacheSpec extends SparkTestBase {
     e.insertInto("lti", spark.range(0, 100).toDF("k")
       .withColumn("v", col("k") * 1.0))
     assert(e.table("lti").count() == 100) // warm, version-keyed
-    spark.conf.set("graft.timetravel.enabled", "false")
-    try {
-      val peer = new MppEngine(spark, e.warehouse)
-      peer.insertInto("lti", spark.range(1000, 1010).toDF("k")
-        .withColumn("v", lit(2.0))) // pointer never advances
-    } finally spark.conf.unset("graft.timetravel.enabled")
+    // An older build's manifest-less write: it cleared the epoch, then
+    // moved files in without advancing the pointer.
+    OutOfBand.clearEpoch(e, "lti")
+    OutOfBand.writeRows(e, "lti", spark.range(1000, 1010).toDF("k")
+      .withColumn("v", lit(2.0)))
     // Round-14 shape: the unchanged pointer served the 100-row listing
     // indefinitely. Epoch-gated, the key falls back to the fingerprint
-    // and the peer's rows are visible. (The read also refreshes this
-    // engine's catalog snapshot — refresh-on-read — which is what
-    // delivers the peer's epoch-clear for the assert below.)
+    // and the out-of-band rows are visible.
     assert(e.table("lti").count() == 110)
     val oid = e.catalog.state.liveTable("lti").get.tableOid.toString
-    assert(!e.catalog.state.manifestEpochs.contains(oid),
-      "the TT-off statement must clear the epoch")
-    // A TT-on commit re-establishes the epoch and the keyed path.
+    assert(!e.catalog.state.manifestEpochs.contains(oid))
+    // The next commit re-establishes the epoch and the keyed path.
     e.insertInto("lti", spark.range(2000, 2005).toDF("k")
       .withColumn("v", lit(3.0)))
     assert(e.catalog.state.manifestEpochs.contains(oid))
     assert(e.table("lti").count() == 115)
   }
 
-  test("time travel OFF falls back to the mtime fingerprint — writes " +
-      "stay visible without any manifest pointer") {
-    spark.conf.set("graft.timetravel.enabled", "false")
-    try {
-      val e = freshEngine()
-      e.sql("CREATE TABLE lo(k BIGINT, v DOUBLE) PARTITION BY (k) " +
-        "WITH BUCKETS 2")
-      e.insertInto("lo", spark.range(0, 10).toDF("k")
-        .withColumn("v", col("k") * 1.0))
-      assert(e.table("lo").count() == 10)
-      e.insertInto("lo", spark.range(10, 25).toDF("k")
-        .withColumn("v", lit(1.0)))
-      assert(e.table("lo").count() == 25)
-      assert(e.catalog.state.tableManifests.isEmpty)
-    } finally spark.conf.unset("graft.timetravel.enabled")
+  test("a never-written table reads through the mtime fingerprint; " +
+      "its first INSERT sets the manifest pointer and the epoch") {
+    val e = freshEngine()
+    e.sql("CREATE TABLE lo(k BIGINT, v DOUBLE) PARTITION BY (k) " +
+      "WITH BUCKETS 2")
+    val t = e.catalog.state.liveTable("lo").get
+    val oid = t.tableOid.toString
+    assert(e.listingVersionKey(t).isEmpty)
+    assert(e.table("lo").count() == 0)
+    e.insertInto("lo", spark.range(0, 10).toDF("k")
+      .withColumn("v", col("k") * 1.0))
+    assert(e.catalog.state.tableManifests.contains(oid))
+    assert(e.catalog.state.manifestEpochs.contains(oid))
+    assert(e.table("lo").count() == 10)
+    e.insertInto("lo", spark.range(10, 25).toDF("k")
+      .withColumn("v", lit(1.0)))
+    assert(e.table("lo").count() == 25)
   }
 }

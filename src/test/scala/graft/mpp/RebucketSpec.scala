@@ -127,20 +127,38 @@ class RebucketSpec extends SparkTestBase {
     } finally spark.conf.unset("graft.vacuum.sweepStrays")
   }
 
-  test("REBUCKET with time travel OFF still commits the metadata") {
-    spark.conf.set("graft.timetravel.enabled", "false")
-    try {
-      val e = freshEngine()
-      e.sql("CREATE TABLE rn(k BIGINT, v DOUBLE) PARTITION BY (k) " +
-        "WITH BUCKETS 2")
-      e.insertInto("rn", spark.range(0, 100).toDF("k")
-        .withColumn("v", col("k") * 1.0))
-      e.sql("ALTER TABLE rn REBUCKET 6")
-      assert(e.catalog.state.liveTable("rn").get.buckets == 6)
-      assert(e.table("rn").count() == 100)
-      assert(e.explainShards(e.table("rn").filter("k = 7")) ==
-        "Shards: 1/6")
-    } finally spark.conf.unset("graft.timetravel.enabled")
+  test("REBUCKET commits the new bucket count, its shard rows and a " +
+      "new manifest pointer in one catalog version") {
+    val e = freshEngine()
+    e.sql("CREATE TABLE rn(k BIGINT, v DOUBLE) PARTITION BY (k) " +
+      "WITH BUCKETS 2")
+    e.insertInto("rn", spark.range(0, 100).toDF("k")
+      .withColumn("v", col("k") * 1.0))
+    val oid = e.catalog.state.liveTable("rn").get.tableOid
+    val before = e.catalog.state.tableManifests(oid.toString)
+    val vBefore = e.catalog.currentVersionOnDisk
+    e.sql("ALTER TABLE rn REBUCKET 6")
+    val versions = (vBefore + 1 to e.catalog.currentVersionOnDisk)
+      .map(v => v -> e.catalog.snapshotAt(v).get)
+    assert(versions.exists(_._2.tables
+      .exists(t => t.tableOid == oid && t.buckets == 6)),
+      "no catalog version carries buckets = 6")
+    // Every version is either wholly before the REBUCKET or wholly
+    // after it: no version pairs the new count with the old files.
+    versions.foreach { case (v, st) =>
+      val k = st.tables.find(_.tableOid == oid).get.buckets
+      val ptr = st.tableManifests.get(oid.toString)
+      if (k == 6) {
+        assert(st.shards.count(_.tableOid == oid) == 6, s"v$v shards")
+        assert(ptr.exists(_ != before), s"v$v kept the old manifest")
+      } else {
+        assert(k == 2 && ptr.contains(before), s"v$v: k=$k, $ptr")
+      }
+    }
+    assert(e.catalog.state.liveTable("rn").get.buckets == 6)
+    assert(e.table("rn").count() == 100)
+    assert(e.explainShards(e.table("rn").filter("k = 7")) ==
+      "Shards: 1/6")
   }
 
   test("both orderings of the writer-vs-REBUCKET race fail LOUDLY: " +
@@ -329,27 +347,25 @@ class RebucketSpec extends SparkTestBase {
     assert(e2.table("rx").count() == 301)
   }
 
-  test("time travel OFF: a crashed relay has no version to pin to — " +
-      "reads fail LOUDLY at execution (never mispruned rows), and " +
-      "engine bootstrap over the poisoned table still succeeds") {
-    spark.conf.set("graft.timetravel.enabled", "false")
-    try {
-      val e = freshEngine()
-      e.sql("CREATE TABLE rto(k BIGINT, v DOUBLE) PARTITION BY (k) " +
-        "WITH BUCKETS 2")
-      e.insertInto("rto", spark.range(0, 100).toDF("k")
-        .withColumn("v", col("k") * 1.0))
-      val root = java.nio.file.Paths.get(e.warehouse, "data", "rto")
-      java.nio.file.Files.write(root.resolve(".rebucket.json"),
-        """{"from":2,"to":4}""".getBytes("UTF-8"))
-      val e2 = new MppEngine(spark, e.warehouse) // bootstrap survives
-      val ex = intercept[Exception] { e2.table("rto").count() }
-      def chain(t: Throwable): Seq[Throwable] =
-        if (t == null) Nil else t +: chain(t.getCause)
-      assert(chain(ex).exists(
-        _.getMessage.contains("no committed manifest")),
-        s"wrong failure: $ex")
-    } finally spark.conf.unset("graft.timetravel.enabled")
+  test("a relay marker on a never-written table has no version to " +
+      "pin to — reads fail LOUDLY at execution (never mispruned rows), " +
+      "and engine bootstrap over the poisoned table still succeeds") {
+    val e = freshEngine()
+    e.sql("CREATE TABLE rto(k BIGINT, v DOUBLE) PARTITION BY (k) " +
+      "WITH BUCKETS 2")
+    val oid = e.catalog.state.liveTable("rto").get.tableOid.toString
+    assert(!e.catalog.state.tableManifests.contains(oid))
+    val root = java.nio.file.Paths.get(e.warehouse, "data", "rto")
+    java.nio.file.Files.createDirectories(root)
+    java.nio.file.Files.write(root.resolve(".rebucket.json"),
+      """{"from":2,"to":4}""".getBytes("UTF-8"))
+    val e2 = new MppEngine(spark, e.warehouse) // bootstrap survives
+    val ex = intercept[Exception] { e2.table("rto").count() }
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(ex).exists(
+      _.getMessage.contains("no committed manifest")),
+      s"wrong failure: $ex")
   }
 
   test("tableChanges across a REBUCKET forces the single-pass diff: " +

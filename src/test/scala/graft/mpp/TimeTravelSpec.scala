@@ -365,15 +365,10 @@ class TimeTravelSpec extends SparkTestBase {
     assert(e.table("rs").columns.toSeq == Seq("k", "v", "tier"))
     assert(e.table("rs").orderBy("k").collect().toSeq == sWrecked)
 
-    // Guards: unknown version errors clearly; kill switch respected.
+    // Guard: unknown version errors clearly.
     assert(intercept[IllegalArgumentException] {
       e.sql("RESTORE TABLE rs TO VERSION AS OF 99999")
     }.getMessage.contains("not retained"))
-    spark.conf.set("graft.timetravel.enabled", "false")
-    try assert(intercept[IllegalArgumentException] {
-      e.restoreTable("rs", v1)
-    }.getMessage.contains("timetravel"))
-    finally spark.conf.unset("graft.timetravel.enabled")
   }
 
   test("DESCRIBE HISTORY lists retained versions with change flags; " +
@@ -710,23 +705,21 @@ class TimeTravelSpec extends SparkTestBase {
     assert(st3.strayLiveFiles == 0L, st3)
     assert(java.nio.file.Files.exists(young))
     java.nio.file.Files.delete(young)
-    // Time-travel-OFF interlude: the statement clears the epoch —
-    // the stale manifest can no longer classify live files, so the
-    // OFF-era data file is REPORTED as a stray but never swept by
-    // default (sweeping it would delete real rows).
-    spark.conf.set("graft.timetravel.enabled", "false")
-    try {
-      e.insertInto("sv", spark.range(100, 105).toDF("k")
-        .withColumn("v", lit(-1.0)))
-    } finally spark.conf.unset("graft.timetravel.enabled")
+    // Time-travel-OFF interlude, as an older build left it: no epoch,
+    // and data files no manifest references. The stale manifest can no
+    // longer classify live files, so the OFF-era data file is REPORTED
+    // as a stray but never swept by default (sweeping it would delete
+    // real rows).
+    OutOfBand.clearEpoch(e, "sv")
+    OutOfBand.writeRows(e, "sv", spark.range(100, 105).toDF("k")
+      .withColumn("v", lit(-1.0)))
     val t = e.catalog.state.liveTable("sv").get
-    assert(!e.catalog.state.manifestEpochs
-      .contains(t.tableOid.toString), "OFF statement must clear epoch")
+    assert(!e.catalog.state.manifestEpochs.contains(t.tableOid.toString))
     val stOff = e.vacuumTimeTravel(graceMs = 0L)
     assert(stOff.strayLiveFiles >= 1L, stOff) // the OFF-era files
     assert(e.table("sv").count() == 25L,
       "no-epoch strays must survive the default sweep")
-    // The next TT-on commit re-establishes the epoch. OFF-era files
+    // The next commit re-establishes the epoch. OFF-era files
     // predate it → still survive the default sweep; a fresh stray
     // after it → sweeps again.
     e.insertInto("sv", spark.range(200, 201).toDF("k")
@@ -870,21 +863,5 @@ class TimeTravelSpec extends SparkTestBase {
       assert(e.tableAsOf("fm", v1).filter(col("v") === -1).count() == 0)
       assert(e.table("fm").filter(col("v") === -1).count() == 10)
     } finally spark.conf.unset("graft.manifest.incremental")
-  }
-
-  test("graft.timetravel.enabled=false restores delete-on-swap " +
-      "(no archive dirs, no manifests accumulate)") {
-    spark.conf.set("graft.timetravel.enabled", "false")
-    try {
-      val e = freshEngine()
-      e.sql("CREATE TABLE nt(k BIGINT, v DOUBLE) PARTITION BY (k) " +
-        "WITH BUCKETS 2")
-      e.insertInto("nt", spark.range(0, 10).toDF("k")
-        .withColumn("v", col("k") * 1.0))
-      e.sql("UPDATE nt SET v = -1 WHERE k % 2 = 0")
-      val arch = java.nio.file.Paths.get(e.warehouse, "data", "nt",
-        ".archive")
-      assert(!java.nio.file.Files.exists(arch))
-    } finally spark.conf.unset("graft.timetravel.enabled")
   }
 }
