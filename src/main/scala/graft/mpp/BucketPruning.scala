@@ -1,101 +1,25 @@
 package graft.mpp
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Shard (bucket) pruning for distributed tables.
+/** Shard (bucket) pruning for distributed tables: the pure
+  * predicate → bucket-set mapping.
   *
   * Port of the reference's optimize-time shard pruning
   * (`/root/reference/src/function/mpp_table_scan.cpp:68-143`: EQ / IN /
-  * IS NULL / OR on the partition column → `hash(const) % buckets`),
-  * re-expressed as a Catalyst `Rule[LogicalPlan]`: predicates on the
-  * partition column are mapped to a `bucket IN (…)` predicate on the
-  * table's physical partition directory column, which Spark's
-  * `FileSourceStrategy` then turns into partition-directory pruning — the
-  * scan never lists, opens, or schedules tasks for pruned buckets, the
-  * exact analogue of the reference never dispatching a gRPC query to a
-  * pruned shard. Handles both `col = const` and `const = col` (the
-  * reference only matches the former — SURVEY.md §2.3 quirk 4).
+  * IS NULL / OR on the partition column → `hash(const) % buckets`). The
+  * one scan of an mpp table, [[graft.sources.ColocatedScanBuilder]],
+  * applies it to its pushed filters against the table's own bucket
+  * count, so the scan never lists, opens, or schedules tasks for a
+  * pruned bucket — the exact analogue of the reference never
+  * dispatching a gRPC query to a pruned shard. Handles both
+  * `col = const` and `const = col` (the reference only matches the
+  * former — SURVEY.md §2.3 quirk 4).
   */
 object BucketPruning {
 
-  /** Registered distributed-table roots: canonical data path →
-    * (partition column name, bucket count). */
-  private val registry = TrieMap.empty[String, (String, Int)]
-
   /** Name of the physical bucket directory column. */
   val BucketCol = "bucket"
-
-  def register(dataPath: String, partitionCol: String, buckets: Int): Unit =
-    registry.put(normalize(dataPath), (partitionCol, buckets))
-
-  def unregister(dataPath: String): Unit = registry.remove(normalize(dataPath))
-
-  /** Scheme-insensitive, AUTHORITY-KEEPING canonical form
-    * (`authority/path`): a root registered as `scheme:/x` must match a
-    * file index reporting the QUALIFIED `scheme:///x` (and the
-    * historical bare-`file:` strip) — but two tables at the same path
-    * under DIFFERENT authorities (`s3://a/wh/t` vs `s3://b/wh/t`, two
-    * namenodes) must NOT collide: a collision would prune one scan
-    * under the other table's bucket count and silently drop rows
-    * (round-14 advisor). Scheme is still dropped (s3/s3a/s3n aliases
-    * of one store); an empty authority (`file:/x`, `countfs:///x`,
-    * default-fs `hdfs:/x`) canonicalizes to the bare path. Register
-    * and scan must agree on qualification for a NON-empty authority:
-    * both sides derive from the same warehouse string, which carries
-    * the authority whenever one exists. */
-  private[mpp] def normalize(p: String): String = {
-    val uri =
-      try new org.apache.hadoop.fs.Path(p).toUri
-      catch { case _: IllegalArgumentException => null }
-    val path = if (uri == null) null else uri.getPath
-    val auth =
-      if (uri == null) "" else Option(uri.getAuthority).getOrElse("")
-    (if (path == null || path.isEmpty) p.replaceFirst("^file:", "")
-     else auth + path).stripSuffix("/")
-  }
-
-  /** Registry entry for a scan's file index. Version-keyed listing
-    * indexes (round 14) report the BUCKET DIRS as their root paths —
-    * fall back to the shared parent (the table root). */
-  /** Registry get with a qualification fallback: scan roots go through
-    * `fs.makeQualified`, which ADDS the default-FS authority to a path
-    * the warehouse string lacked (warehouse `hdfs:/wh` under
-    * `fs.defaultFS=hdfs://nn:8020` registers `/wh/data/t`, the scan
-    * looks up `nn:8020/wh/data/t`) — without the fallback the miss
-    * silently disables bucket pruning on default-FS-qualified
-    * deployments (round-15 advisor). On a miss the authority is
-    * stripped and ONLY an empty-authority registration can match, so
-    * two tables registered under different non-empty authorities still
-    * never collide (the round-14 fix stands). */
-  private[mpp] def registryGet(key: String): Option[(String, Int)] =
-    registry.get(key).orElse {
-      val slash = key.indexOf('/')
-      if (slash > 0) registry.get(key.substring(slash)) else None
-    }
-
-  private def registryFor(
-      location: org.apache.spark.sql.execution.datasources.FileIndex)
-      : Option[(String, Int)] =
-    location.rootPaths.headOption.flatMap { p =>
-      registryGet(normalize(p.toString)).orElse {
-        if (p.getName.startsWith(s"$BucketCol=") && p.getParent != null)
-          registryGet(normalize(p.getParent.toString))
-        else None
-      }
-    }
-
-  private def lookup(rel: LogicalRelation): Option[(String, Int)] =
-    rel.relation match {
-      case fs: HadoopFsRelation => registryFor(fs.location)
-      case _ => None
-    }
 
   /** Bucket id of a constant value, matching the write side exactly:
     * `pmod(hash(col), buckets)` with Spark's Murmur3 seed 42. A null
@@ -143,54 +67,5 @@ object BucketPruning {
         }
       case _ => None
     }
-  }
-
-  /** The injected optimizer rule: conjoin `bucket IN (…)` onto filters
-    * over registered distributed-table scans. */
-  final class Rule_ extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-      case f @ Filter(cond, rel: LogicalRelation) =>
-        lookup(rel) match {
-          case Some((pcName, n))
-              // Idempotency: never rewrite a filter that already
-              // references the bucket column (ours, or user-written).
-              if !cond.references.exists(_.name == BucketCol) =>
-            val pc = rel.output.find(_.name == pcName)
-            val bucketAttr = rel.output.find(_.name == BucketCol)
-            (pc, bucketAttr) match {
-              case (Some(p), Some(b)) =>
-                bucketsFor(cond, p, n) match {
-                  case Some(ids) if ids.size < n =>
-                    val inList = In(b, ids.toSeq.sorted.map(i =>
-                      Literal(i, b.dataType)))
-                    Filter(And(cond, inList), rel)
-                  case _ => f
-                }
-              case _ => f
-            }
-          case _ => f
-        }
-    }
-  }
-
-  val rule: Rule[LogicalPlan] = new Rule_
-
-  /** EXPLAIN surface parity: the reference annotates its scan with
-    * `Shards: k/n` (`/root/reference/src/function/mpp_table_scan.cpp:373-380`,
-    * asserted by `test/sql/mpp_filter.test:61-87`). Returns the same
-    * string for the (single) distributed scan in `df`'s physical plan by
-    * listing the partition directories that survive pruning. */
-  def shards(df: DataFrame): String = {
-    val scans = df.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec
-          if registryFor(f.relation.location).isDefined => f
-    }
-    scans.headOption.map { f =>
-      val n = registryFor(f.relation.location).get._2
-      val staticFilters = f.partitionFilters.filterNot(
-        _.exists(_.isInstanceOf[PlanExpression[_]]))
-      val k = f.relation.location.listFiles(staticFilters, Nil).size
-      s"Shards: $k/$n"
-    }.getOrElse("Shards: -")
   }
 }

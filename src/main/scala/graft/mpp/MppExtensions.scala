@@ -9,7 +9,10 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** `SparkSessionExtensions` installer: injected delegating parser for the
-  * distributed DDL/DML dialect + the shard-pruning optimizer rule.
+  * distributed DDL/DML dialect, plus the catalog-path UPDATE/MERGE
+  * bridges. Shard pruning needs no rule: it runs inside the one scan
+  * of an mpp table ([[graft.sources.ColocatedScanBuilder]]), against
+  * that table's own bucket count.
   *
   * Mirrors the reference's extension registration
   * (`/root/reference/src/mpp_extension.cpp:18-25`: parser extension +
@@ -24,7 +27,6 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
 class MppExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectParser((_, delegate) => new MppParser(delegate))
-    ext.injectOptimizerRule(_ => BucketPruning.rule)
     // Catalog-path UPDATE: `UPDATE cat.t SET … WHERE …` over a
     // [[graft.sources.ColocatedTable]] delegates to the engine's COW
     // update (see Dsv2RowLevelDml's scaladoc for why this beats a

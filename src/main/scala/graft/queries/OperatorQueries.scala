@@ -115,7 +115,7 @@ object OperatorQueries {
   // distributed tables bucketed 16 on custkey, exposed through
   // graft.sources.GraftCatalog. Fresh temp warehouse per JVM — the
   // inserts are the one-time cost the catalog's whole point is to
-  // amortize (no exportBucketed re-write afterwards). The catalog is
+  // amortize (no re-clustering write afterwards). The catalog is
   // live until the JVM exits, so that is when the warehouse goes.
   private val dsv2Cats = TrieMap.empty[String, String]
 

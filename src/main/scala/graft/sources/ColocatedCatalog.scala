@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, Murmur3HashFunction}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Expression, GenericInternalRow, In, Literal, Murmur3HashFunction, Predicate => CatalystPredicate}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform, Expression => V2Expression, Literal => V2Literal}
@@ -20,6 +20,8 @@ import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import scala.jdk.CollectionConverters._
+
 import graft.mpp.{BucketPruning, MppEngine, TableInfo}
 
 /** DataSource V2 catalog exposing mpp distributed tables as
@@ -28,9 +30,8 @@ import graft.mpp.{BucketPruning, MppEngine, TableInfo}
   * The engine's bucket layout IS hash placement: directory `bucket=i`
   * of table `t` holds exactly the rows with `pmod(murmur3(pc), n) = i`
   * (`MppEngine.insertInto`). The reference's data model implies
-  * co-location but leaves it TODO (`/root/reference/README.md:104-120`);
-  * round 2 bridged the gap with `exportBucketed` — a full re-clustering
-  * write. This catalog removes that write entirely: a V2 `Scan` reports
+  * co-location but leaves it TODO (`/root/reference/README.md:104-120`).
+  * This catalog delivers it with no re-clustering write: a V2 `Scan` reports
   * `KeyGroupedPartitioning(bucket(n, pc))` straight over the existing
   * bucket directories, so Spark's storage-partitioned-join machinery
   * (SPARK-37377) plans
@@ -105,10 +106,8 @@ final class GraftCatalog extends TableCatalog with FunctionCatalog {
     // losing what it specified. Reject anything beyond the entries
     // Spark itself injects (round-5 ADVICE).
     val sparkInjected = Set(TableCatalog.PROP_OWNER, TableCatalog.PROP_PROVIDER)
-    val userProps = {
-      import scala.jdk.CollectionConverters._
+    val userProps =
       properties.asScala.keys.filterNot(sparkInjected).toSeq.sorted
-    }
     if (userProps.nonEmpty) throw new UnsupportedOperationException(
       "MPP tables do not store table properties/comment/location; " +
         s"unsupported: ${userProps.mkString(", ")}")
@@ -214,6 +213,10 @@ final case class GraftBucketBound(keyType: DataType)
 /** One mpp table as a V2 table reporting its bucket transform.
   *
   * Reads are key-group-partitioned scans ([[ColocatedScanBuilder]]).
+  * This is the ONLY scan of an mpp table: the engine's own reads
+  * ([[MppEngine.table]], its temp views and every DML scan) are frames
+  * over this same table, built without a catalog, so they skip the
+  * key grouping and run bytes-proportional splits instead.
   * Writes delegate wholesale to the engine's distributed INSERT
   * ([[MppEngine.insertInto]]: hash shuffle into `bucket=i`, NOT NULL
   * enforcement, observed-metrics row count) through the V1-write
@@ -234,14 +237,13 @@ final class ColocatedTable(spark: SparkSession, t: TableInfo, root: String,
 
   override def name(): String = t.name
 
-  /** The engine's `rowid` pseudo-column on the DSv2 surface (round-7
-    * missing #3): `SELECT rowid, … FROM cat.t` projects the SAME
-    * manifest-backed id as [[MppEngine.tableWithRowid]] — both key on
-    * [[MppEngine.rowidBases]], so the two scan paths can never
-    * disagree. Hidden until referenced, per the metadata-column
-    * contract. */
+  /** Hidden until referenced, per the metadata-column contract:
+    * `rowid`, the manifest-backed id ([[MppEngine.rowidBases]]) that
+    * `SELECT rowid, … FROM cat.t` and [[MppEngine.tableWithRowid]]
+    * both project, and `bucket`, the shard id the engine's DML scans
+    * read and filter on. */
   override def metadataColumns(): Array[MetadataColumn] =
-    Array(RowidMetadataColumn)
+    Array(RowidMetadataColumn, BucketMetadataColumn)
 
   /** Owning engine, for the row-level DML bridge. */
   private[graft] def owner: MppEngine = engine()
@@ -249,35 +251,13 @@ final class ColocatedTable(spark: SparkSession, t: TableInfo, root: String,
   /** Hash-partition column, for the MERGE bridge's ON validation. */
   private[graft] def partitionColumn: String = t.partitionColumn
 
-  /** User schema, with the engine's column defaults surfaced as the
-    * standard `CURRENT_DEFAULT`/`EXISTS_DEFAULT` field metadata — so
-    * stock analysis resolves `DEFAULT` in catalog-path INSERT/UPDATE
-    * statements to the ENGINE's default expression (reference
-    * `mpp_physical_insert.cpp:150-181`), not a null literal. */
-  override val schema: StructType = {
-    val base = StructType.fromDDL(t.schemaDdl)
-    if (t.defaults.isEmpty) base
-    else StructType(base.fields.map { f =>
-      t.defaults.get(f.name) match {
-        case Some(d) =>
-          // CURRENT_DEFAULT always (catalog-path INSERTs must resolve
-          // DEFAULT to the engine's expression — dropping it here
-          // would silently write NULL where the engine path writes the
-          // declared value); EXISTS_DEFAULT only when CONSTANT — an
-          // existence default must be foldable, and only constants can
-          // have one fixed value for all pre-existing rows.
-          val b = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putString("CURRENT_DEFAULT", d)
-          val md =
-            if (MppEngine.isConstantExpr(spark, d))
-              b.putString("EXISTS_DEFAULT", d).build()
-            else b.build()
-          f.copy(metadata = md)
-        case None => f
-      }
-    })
-  }
+  /** User schema with the engine's column defaults as the standard
+    * `CURRENT_DEFAULT`/`EXISTS_DEFAULT` field metadata
+    * ([[MppEngine.userSchema]]), so stock analysis resolves `DEFAULT`
+    * in catalog-path INSERT/UPDATE statements to the ENGINE's default
+    * expression (reference `mpp_physical_insert.cpp:150-181`), not a
+    * null literal. */
+  override val schema: StructType = engine().userSchema(t)
 
   override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
     predicates.forall(p => PredicateSql.translate(p).isDefined)
@@ -335,10 +315,16 @@ final class ColocatedTable(spark: SparkSession, t: TableInfo, root: String,
 
 /** Delegates pushdown (columns, filters) to Spark's own parquet scan
   * builder over the bucket directories, then wraps the built scan so it
-  * reports key-grouped partitioning. Additionally runs the engine's
-  * shard-pruning analysis ([[BucketPruning.bucketsFor]]) on the pushed
-  * filters: a point lookup on the partition column schedules ONE bucket,
-  * V1/V2 parity with the injected optimizer rule. */
+  * reports key-grouped partitioning. Shard pruning runs on the pushed
+  * filters, the reference's optimize-time pruning
+  * (`/root/reference/src/function/mpp_table_scan.cpp:68-143`): a
+  * conjunct on the partition column admits the buckets its constants
+  * hash into ([[BucketPruning.bucketsFor]]), so a point lookup
+  * schedules ONE bucket, and a conjunct on the `bucket` column alone
+  * (the engine's DML scans name their buckets that way) admits exactly
+  * the bucket ids it holds for. The surviving set also reaches the
+  * delegate as a filter on the `bucket` directory column, so pruned
+  * directories are never listed, split or zone-checked. */
 final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
     root: String, userSchema: StructType, engine: () => MppEngine)
     extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -350,7 +336,7 @@ final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
 
   private def mkInner() = ParquetScanBuilder(spark,
     // Manifest-pointer cache key + manifest-diff incremental
-    // invalidation — V1/V2 parity with the engine's readLiveDirs.
+    // invalidation (see ColocatedFileIndex.get).
     ColocatedFileIndex.get(spark, root, fullSchema,
       engine().listingVersionKey(t), t.buckets,
       engine().manifestDirDiff),
@@ -361,10 +347,9 @@ final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
   /** Bucket set statically implied by the pushed filters; None = all. */
   private var prunedBuckets: Option[Set[Int]] = None
 
-  /** Full conjunct list as pushed — evaluated against per-file zone
-    * maps at planning time ([[ZoneMaps]]). */
-  private var pushedConjuncts: Seq[
-    org.apache.spark.sql.catalyst.expressions.Expression] = Nil
+  /** Pushed conjuncts that name a data column — evaluated against
+    * per-file zone maps at planning time ([[ZoneMaps]]). */
+  private var pushedConjuncts: Seq[Expression] = Nil
 
   /** Schema pruning asked for the `rowid` metadata column: remember the
     * exact requested schema (readSchema must echo it) and prune the
@@ -377,30 +362,43 @@ final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
       // Rebuild the delegate WITHOUT pushed filters: the rowid reader
       // derives the row index by counting rows emitted per file, which
       // is only the true physical index when parquet cannot skip row
-      // groups/pages. Sound: ParquetScanBuilder returns every filter
-      // as a post-scan filter (parquet pushdown is best-effort), so
-      // Spark re-applies them above the scan either way — dropping the
-      // pushdown costs I/O on a rowid scan, never rows.
+      // groups/pages. Sound: ParquetScanBuilder returns every data
+      // filter as a post-scan filter (parquet pushdown is best-effort),
+      // so Spark re-applies them above the scan, and RowidScan drops
+      // the pruned buckets itself — dropping the pushdown costs I/O
+      // on a rowid scan, never rows.
       inner = mkInner()
       inner.pruneColumns(StructType(requiredSchema.fields
         .filterNot(_.name == RowidMetadataColumn.name)))
     } else inner.pruneColumns(requiredSchema)
 
-  override def pushFilters(
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    val post = inner.pushFilters(filters)
-    pushedConjuncts = filters
+  private def onBucketColOnly(c: Expression): Boolean =
+    c.references.nonEmpty &&
+      c.references.forall(_.name == BucketPruning.BucketCol)
+
+  /** Buckets one conjunct admits; None = cannot tell (all). */
+  private def bucketsOf(c: Expression): Option[Set[Int]] =
+    if (onBucketColOnly(c)) {
+      val p = CatalystPredicate.createInterpreted(c.transform {
+        case a: Attribute if a.name == BucketPruning.BucketCol =>
+          BoundReference(0, IntegerType, nullable = true)
+      })
+      Some((0 until t.buckets).filter(b => p.eval(InternalRow(b))).toSet)
+    } else c.references.collectFirst {
+      case a: Attribute if a.name == t.partitionColumn =>
+        BucketPruning.bucketsFor(c, a, t.buckets)
+    }.flatten
+
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
+    pushedConjuncts = filters.filterNot(onBucketColOnly)
     // Pruning analysis runs over the full incoming conjunct list (not just
     // the parquet-pushable subset): bucketsFor only derives an implied
     // bucket set, so a filter the scan cannot push is still safe to prune by.
-    prunedBuckets = filters.flatMap { c =>
-      c.references.collectFirst {
-        case a: Attribute if a.name == t.partitionColumn =>
-          BucketPruning.bucketsFor(c, a, t.buckets)
-      }.flatten
-    }.reduceOption(_ intersect _)
-    post
+    prunedBuckets = filters.flatMap(bucketsOf).reduceOption(_ intersect _)
+    val dirFilter = prunedBuckets.filter(_.size < t.buckets).map(ids =>
+      In(AttributeReference(BucketPruning.BucketCol, IntegerType)(),
+        ids.toSeq.sorted.map(Literal(_))))
+    inner.pushFilters(filters ++ dirFilter)
   }
 
   override def pushedFilters: Array[Predicate] = inner.pushedFilters
@@ -415,7 +413,7 @@ final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
         if (spark.conf.get(ZoneMaps.EnabledConf, "true").toBoolean)
           pushedConjuncts
         else Nil
-      new ColocatedScan(inner.build(), t.partitionColumn, t.buckets,
+      new ColocatedScan(spark, inner.build(), t.partitionColumn, t.buckets,
         prunedBuckets, zoneConjuncts, spark.sessionState.newHadoopConf())
   }
 }
@@ -442,8 +440,10 @@ object ColocatedFileIndex {
     * sits in a table's data root, the live bucket layout is mid-relay
     * (or a relay crashed before its catalog commit) and direct live
     * scans can double/zero-count rows or prune under a stale modulus.
-    * The engine's own scans route through the last committed manifest;
-    * this path (DSv2 / co-located reads off the raw dirs) has no
+    * The engine checks for the marker before it builds a frame and
+    * then reads the last committed manifest instead; a scan planned
+    * off the raw dirs while the marker is up (a catalog read, or an
+    * engine frame or view built before the relay began) has no
     * manifest to pin to, so it fails LOUDLY instead. */
   val RelayMarker = ".rebucket.json"
 
@@ -719,12 +719,22 @@ object ColocatedFileIndex {
   }
 }
 
-/** Wraps the delegate parquet scan: re-groups its planned file splits
-  * into exactly one [[InputPartition]] per (surviving) bucket, each
-  * carrying its bucket id as the partition key, and reports
-  * `KeyGroupedPartitioning(bucket(n, pc))`. With
-  * `spark.sql.sources.v2.bucketing.enabled`, Spark then plans
-  * joins/aggregations on the partition column without any Exchange.
+/** Wraps the delegate parquet scan: re-packs its planned file splits so
+  * that every [[InputPartition]] holds files of ONE (surviving) bucket
+  * and carries that bucket id as its partition key, and reports
+  * `KeyGroupedPartitioning(bucket(n, pc))`.
+  *
+  * Inside a bucket the splits are packed bytes-proportionally, at the
+  * delegate's own split size, so a fat bucket becomes several tasks
+  * rather than one straggler (the narrow COW rewrite plans its scan at
+  * `MppEngine.CowMaxPartitionBytes` for exactly this). Spark only
+  * honours the reported partitioning when it can resolve `bucket(n, c)`
+  * through a function catalog ([[GraftCatalog]]): it then groups the
+  * splits of each key into one task and, with
+  * `spark.sql.sources.v2.bucketing.enabled`, plans joins/aggregations
+  * on the partition column without any Exchange. An engine frame has
+  * no function catalog, reports no key-grouped partitioning, and runs
+  * each split as its own task.
   *
   * Beyond the static pruning computed at pushdown time, the scan
   * accepts RUNTIME filters on the partition column
@@ -740,11 +750,10 @@ object ColocatedFileIndex {
   * one. Statistics forward to the delegate file scan so small mpp dims
   * plan as broadcast — which is exactly the shape whose reused
   * broadcast feeds the DPP subquery. */
-final class ColocatedScan(delegate: FileScan, partCol: String,
-    buckets: Int, pruned: Option[Set[Int]],
-    zoneConjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-      = Nil,
-    hadoopConf: org.apache.hadoop.conf.Configuration = null)
+final class ColocatedScan(spark: SparkSession, private val delegate: FileScan,
+    partCol: String, buckets: Int, pruned: Option[Set[Int]],
+    private val zoneConjuncts: Seq[Expression],
+    hadoopConf: org.apache.hadoop.conf.Configuration)
     extends Scan with Batch
     with SupportsReportPartitioning with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
@@ -752,6 +761,12 @@ final class ColocatedScan(delegate: FileScan, partCol: String,
   private val emitted: Seq[Int] =
     pruned.map(_.toSeq.sorted)
       .getOrElse(0 until buckets)
+
+  /** EXPLAIN parity with the reference's scan annotation
+    * (`mpp_table_scan.cpp:373-380`, asserted by
+    * `test/sql/mpp_filter.test:61-87`): buckets left after static
+    * pruning, out of the table's bucket count. */
+  def shards: String = s"Shards: ${emitted.size}/$buckets"
 
   /** Buckets surviving runtime (DPP) filters; None until `filter()` is
     * called with a predicate we can derive a bucket set from. Written
@@ -771,14 +786,33 @@ final class ColocatedScan(delegate: FileScan, partCol: String,
 
   override def toBatch: Batch = this
 
+  /** Equal when the delegates are (same file index, schema and pushed
+    * filters — which fix the pruned buckets and the zone conjuncts too)
+    * and zone maps are on for both. Spark compares scans to reuse an
+    * exchange across identical subtrees, such as the two copies of a
+    * join the optimizer makes when it pushes the join through a union;
+    * without equality each copy runs its own scan and shuffle. */
+  override def equals(o: Any): Boolean = o match {
+    case c: ColocatedScan => delegate == c.delegate &&
+      zoneConjuncts.isEmpty == c.zoneConjuncts.isEmpty
+    case _ => false
+  }
+
+  override def hashCode(): Int = delegate.hashCode()
+
   override def estimateStatistics(): Statistics = delegate.estimateStatistics()
 
   override def outputPartitioning(): Partitioning =
     new KeyGroupedPartitioning(
       Array(Expressions.bucket(buckets, partCol)), emitted.size)
 
+  /** The partition column, when the scan reads it: Spark resolves
+    * these against the scan's output before it plans any dynamic
+    * pruning, and fails the query on a name the output lacks. */
   override def filterAttributes(): Array[NamedReference] =
-    Array(Expressions.column(partCol))
+    if (readSchema().fieldNames.exists(_.equalsIgnoreCase(partCol)))
+      Array(Expressions.column(partCol))
+    else Array.empty
 
   /** Runtime bucket pruning: intersect the bucket sets implied by each
     * IN / equality predicate on the partition column. Predicates we
@@ -823,6 +857,11 @@ final class ColocatedScan(delegate: FileScan, partCol: String,
   private val BucketDirRe =
     (".*/" + BucketPruning.BucketCol + "=(\\d+)/.*").r
 
+  private def bucketOf(f: PartitionedFile): Int = f.filePath.toString match {
+    case BucketDirRe(b) => b.toInt
+    case p => throw new IllegalStateException(s"file outside bucket layout: $p")
+  }
+
   /** Spec hooks: (files kept, files total) after the last zone-map
     * pass; None until [[planInputPartitions]] has run with conjuncts. */
   @volatile private var zoneCounts: Option[(Int, Int)] = None
@@ -831,33 +870,36 @@ final class ColocatedScan(delegate: FileScan, partCol: String,
   /** Planning-time file elimination by footer zone maps: keep a split
     * only if every pushed conjunct might match its file ([[ZoneMaps]]
     * errs to true on anything it cannot bound). Distinct-path counting
-    * because one file can arrive as several splits. */
+    * because one file can arrive as several splits. Footer reads are
+    * the cold-cache cost here and they are blocking I/O on the planner
+    * thread, so they fan out over a bounded parallel stream (the
+    * footer cache is thread-safe; warm listings stay in-memory
+    * lookups). */
   private def zoneFilter(
-      files: Array[PartitionedFile]): Array[PartitionedFile] = {
-    if (zoneConjuncts.isEmpty || hadoopConf == null) return files
-    val verdict = files.map(_.filePath.toString).distinct.map { p =>
-      val f = files.find(_.filePath.toString == p).get
-      p -> zoneConjuncts.forall(c => ZoneMaps.mightMatch(c,
-        ZoneMaps.zonesFor(hadoopConf, p, f.modificationTime, f.fileSize)))
-    }.toMap
-    zoneCounts = Some((verdict.count(_._2), verdict.size))
-    files.filter(f => verdict(f.filePath.toString))
+      files: Seq[PartitionedFile]): Seq[PartitionedFile] = {
+    if (zoneConjuncts.isEmpty) return files
+    val keep = new java.util.concurrent.ConcurrentHashMap[String, Boolean]
+    files.groupBy(_.filePath.toString).values.map(_.head).toSeq
+      .asJava.parallelStream.forEach { f =>
+        keep.put(f.filePath.toString, zoneConjuncts.forall(c =>
+          ZoneMaps.mightMatch(c, ZoneMaps.zonesFor(hadoopConf,
+            f.filePath.toString, f.modificationTime, f.fileSize))))
+      }
+    zoneCounts = Some((keep.values.asScala.count(identity), keep.size))
+    files.filter(f => keep.getOrDefault(f.filePath.toString, true))
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = zoneFilter(delegate.toBatch.planInputPartitions().flatMap {
-      case fp: FilePartition => fp.files
+    val splits = delegate.toBatch.planInputPartitions().toSeq.flatMap {
+      case fp: FilePartition => fp.files.toSeq
       case other => throw new IllegalStateException(
         s"unexpected partition from parquet scan: $other")
-    })
-    val byBucket: Map[Int, Array[PartitionedFile]] =
-      files.groupBy(f => f.filePath.toString match {
-        case BucketDirRe(b) => b.toInt
-        case p => throw new IllegalStateException(
-          s"file outside bucket layout: $p")
-      })
-    // Every surviving bucket becomes a partition — including empty ones,
-    // so two tables' partition keys always align for the join planner.
+    }
+    // The delegate's split size, recomputed over the files it split:
+    // packing inside a bucket must not exceed what the delegate packs.
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      splits.groupBy(_.filePath).values.map(_.head.fileSize + openCost).sum)
     // Runtime-pruned buckets are dropped entirely; BatchScanExec
     // re-aligns the key-grouped partitioning with empty groups for the
     // missing partition values (a subset is the supported shape).
@@ -865,9 +907,18 @@ final class ColocatedScan(delegate: FileScan, partCol: String,
       case Some(rs) => emitted.filter(rs.contains)
       case None => emitted
     }
-    live.map { b =>
-      BucketInputPartition(b,
-        FilePartition(b, byBucket.getOrElse(b, Array.empty)))
+    val liveSet = live.toSet
+    val byBucket = zoneFilter(splits.filter(f => liveSet(bucketOf(f))))
+      .groupBy(bucketOf)
+    // Every surviving bucket yields at least one partition — an empty
+    // one when no file survives — so two tables' partition keys always
+    // align for the join planner.
+    live.flatMap { b =>
+      val parts = byBucket.get(b).fold(Seq(FilePartition(0,
+        Array.empty[PartitionedFile]))) { fs =>
+        FilePartition.getFilePartitions(spark, fs.sortBy(-_.length), maxSplit)
+      }
+      parts.map(BucketInputPartition(b, _))
     }.toArray
   }
 
@@ -875,7 +926,7 @@ final class ColocatedScan(delegate: FileScan, partCol: String,
     UnwrapReaderFactory(delegate.toBatch.createReaderFactory())
 }
 
-/** One whole bucket of one table, keyed by its bucket id. */
+/** A bucket-pure group of file splits, keyed by its bucket id. */
 final case class BucketInputPartition(bucket: Int, files: FilePartition)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
@@ -885,8 +936,8 @@ final case class BucketInputPartition(bucket: Int, files: FilePartition)
 }
 
 /** The `rowid` pseudo-column as a DSv2 metadata column (hidden until a
-  * query references it). Values are bit-identical to the engine scan's:
-  * `(bucket << 40) | (manifest file base + row index within file)`. */
+  * query references it): `(bucket << 40) | (manifest file base + row
+  * index within file)`. */
 object RowidMetadataColumn extends MetadataColumn {
   override def name: String = "rowid"
   override def dataType: DataType =
@@ -894,6 +945,15 @@ object RowidMetadataColumn extends MetadataColumn {
   override def isNullable: Boolean = false
   override def comment: String =
     "stable per-bucket row id: (bucket << 40) | (file base + row index)"
+}
+
+/** The shard id as a DSv2 metadata column: the `bucket=<id>` directory
+  * value, read as a partition column by the delegate scan. */
+object BucketMetadataColumn extends MetadataColumn {
+  override def name: String = BucketPruning.BucketCol
+  override def dataType: DataType = IntegerType
+  override def comment: String =
+    "shard id: pmod(murmur3(partition column), bucket count)"
 }
 
 /** Scan variant projecting `rowid`: one input partition per WHOLE file

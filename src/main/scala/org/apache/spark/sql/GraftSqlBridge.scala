@@ -3,7 +3,9 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to Spark's `private[sql]` Dataset factory: execute an
-  * already-parsed (and rewritten) logical plan as a DataFrame.
+  * already-parsed (and rewritten) logical plan as a DataFrame. The
+  * engine's own table frames are built the same way, straight from a
+  * `DataSourceV2Relation` over its DSv2 table.
   *
   * The engine routes catalog-qualified mpp reads by rewriting
   * `UnresolvedRelation` nodes on the PARSED plan (never on raw SQL

@@ -1033,9 +1033,7 @@ class MppSpec extends SparkTestBase {
         s"(id + ${i * 400}) * 7 AS v FROM range(400)")
     }
     def fileCounts: Map[Int, Int] = {
-      val root = new java.io.File(
-        e.table("opt").inputFiles.head.stripPrefix("file:")
-          .replaceAll(s"/${graft.mpp.BucketPruning.BucketCol}=\\d+/[^/]+$$", ""))
+      val root = new java.io.File(s"${e.warehouse}/data/opt")
       (0 until 4).map { b =>
         b -> Option(new java.io.File(root,
             s"${graft.mpp.BucketPruning.BucketCol}=$b").listFiles())

@@ -211,42 +211,19 @@ class PlanQualitySpec extends SparkTestBase {
       "co-located join must not shuffle:\n" + plan.take(2000))
   }
 
-  test("exported mpp tables aggregate and join with zero exchanges") {
-    val e = new graft.mpp.MppEngine(spark, tempDir("graft-exb"))
-    e.sql("CREATE TABLE li_d(k BIGINT, q DOUBLE) PARTITION BY (k) WITH BUCKETS 4")
-    e.sql("CREATE TABLE ord_d(k BIGINT, p DOUBLE) PARTITION BY (k) WITH BUCKETS 4")
-    e.insertInto("li_d", spark.range(0, 2000).toDF("k")
-      .withColumn("q", col("k") * 0.5))
-    e.insertInto("ord_d", spark.range(0, 500).toDF("k")
-      .withColumn("p", col("k") * 2.0))
-    e.exportBucketed("li_d", "exb_li")
-    e.exportBucketed("ord_d", "exb_ord")
-    // groupBy on the partition column: partial+final agg, NO Exchange.
-    val agg = spark.table("exb_li").groupBy("k").count()
-    agg.collect()
-    val aggPlan = agg.queryExecution.executedPlan.toString
-    assert(!aggPlan.contains("Exchange hashpartitioning"),
-      "co-located aggregate must not shuffle:\n" + aggPlan.take(2000))
-    // join on the partition column: bucket-zipped, NO Exchange.
-    val j = graft.sources.BucketedTables
-      .colocatedJoin(spark, "exb_li", "exb_ord", "k")
-    j.collect()
-    val jPlan = j.queryExecution.executedPlan.toString
-    assert(!jPlan.contains("Exchange hashpartitioning"),
-      "co-located join must not shuffle:\n" + jPlan.take(2000))
-    // And the export is row-faithful to the distributed table.
-    assert(spark.table("exb_li").count() == e.table("li_d").count())
-  }
-
   test("distributed-table point lookup schedules only the pruned bucket") {
     val e = new graft.mpp.MppEngine(spark, tempDir("graft-pq"))
     e.sql("CREATE TABLE pq(id BIGINT, v DOUBLE) PARTITION BY (id) WITH BUCKETS 8")
     e.insertInto("pq", spark.range(0, 1000).toDF("id")
       .withColumn("v", col("id") * 0.5))
     val q = e.table("pq").filter(col("id") === 123L)
-    // Partition-directory pruning: the scan's selected partitions == 1.
-    val scan = scans(q).head
-    assert(scan.relation.location.listFiles(scan.partitionFilters, Nil)
-      .size == 1)
+    // Shard pruning in the scan: every planned split is of one bucket.
+    val scan = q.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+    val buckets = scan.inputPartitions.map {
+      case p: graft.sources.BucketInputPartition => p.bucket
+    }.toSet
+    assert(buckets.size == 1, buckets)
   }
 }

@@ -127,10 +127,9 @@ class ZoneMapSpec extends SparkTestBase {
       e.insertInto("zme", spark.range(i * 1000, i * 1000 + 1000)
         .toDF("k").withColumn("v", (col("k") * 7 % 3000)))
     }
-    graft.sources.ZoneMapFileIndex.lastCounts = None
     val before = e.table("zme").filter(col("v") >= 2700)
     val nBefore = before.count()
-    val (keptB, totalB) = graft.sources.ZoneMapFileIndex.lastCounts
+    val (keptB, totalB) = scanOf(before).zonePrunedFiles
       .getOrElse(fail("engine scan did not run the zone pass"))
     assert(totalB == 12, s"3 appends x 4 buckets = 12 files, saw $totalB")
     assert(keptB == 12, s"full-domain files must all survive, kept $keptB")
@@ -140,11 +139,10 @@ class ZoneMapSpec extends SparkTestBase {
     spark.conf.set("graft.optimize.maxRecordsPerFile", "250")
     try e.sql("OPTIMIZE zme SORT BY (v)")
     finally spark.conf.unset("graft.optimize.maxRecordsPerFile")
-    graft.sources.ZoneMapFileIndex.lastCounts = None
     val after = e.table("zme").filter(col("v") >= 2700)
     val nAfter = after.count()
     assert(nAfter == nBefore, "OPTIMIZE changed query results")
-    val (keptA, totalA) = graft.sources.ZoneMapFileIndex.lastCounts
+    val (keptA, totalA) = scanOf(after).zonePrunedFiles
       .getOrElse(fail("post-OPTIMIZE scan did not run the zone pass"))
     assert(keptA < totalA,
       s"after SORT BY(v) a v-range must plan fewer files ($keptA/$totalA)")

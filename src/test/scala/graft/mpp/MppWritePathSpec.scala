@@ -380,52 +380,6 @@ class MppWritePathSpec extends SparkTestBase {
       .withColumn("v", lit(-1.0)))
     assert(e.table("ip").count() == before + 400)
   }
-
-  test("pruning-registry canonical form keeps the AUTHORITY: same " +
-      "path under two buckets/namenodes must not collide (a collision " +
-      "prunes one scan under the other table's bucket count), while " +
-      "qualification-only differences still unify") {
-    // Distinct authorities, same path → distinct registry keys.
-    assert(BucketPruning.normalize("s3a://bucket-a/wh/data/t") !=
-      BucketPruning.normalize("s3a://bucket-b/wh/data/t"))
-    // Scheme aliases of one store unify (s3/s3a on the same bucket).
-    assert(BucketPruning.normalize("s3://bucket-a/wh/data/t") ==
-      BucketPruning.normalize("s3a://bucket-a/wh/data/t"))
-    // Qualification-only differences unify: bare path, file:/x,
-    // file:///x are one local root.
-    assert(BucketPruning.normalize("/wh/data/t") ==
-      BucketPruning.normalize("file:/wh/data/t"))
-    assert(BucketPruning.normalize("file:///wh/data/t") ==
-      BucketPruning.normalize("/wh/data/t"))
-    // Trailing-slash insensitivity survives the authority change.
-    assert(BucketPruning.normalize("hdfs://nn1:8020/wh/t/") ==
-      BucketPruning.normalize("hdfs://nn1:8020/wh/t"))
-    assert(BucketPruning.normalize("hdfs://nn1:8020/wh/t") !=
-      BucketPruning.normalize("hdfs://nn2:8020/wh/t"))
-  }
-
-  test("pruning-registry lookup tolerates filesystem-added " +
-      "qualification: a root registered WITHOUT an authority " +
-      "(warehouse 'hdfs:/wh') must still be found when the scan's " +
-      "makeQualified root carries the default-FS authority — a miss " +
-      "silently disables pruning (round-15 advisor) — while distinct " +
-      "non-empty authorities still never unify") {
-    BucketPruning.register("hdfs:/whq/data/tq", "k", 8)
-    try {
-      // The scan side after fs.makeQualified under defaultFS nn:8020.
-      assert(BucketPruning.registryGet(
-        BucketPruning.normalize("hdfs://nn:8020/whq/data/tq"))
-        .contains(("k", 8)))
-      // Registered WITH an authority: a different authority's scan
-      // must NOT fall back onto it (no empty-authority entry exists).
-      BucketPruning.register("hdfs://nnA:8020/whq2/data/tq", "k", 4)
-      assert(BucketPruning.registryGet(
-        BucketPruning.normalize("hdfs://nnB:8020/whq2/data/tq")).isEmpty)
-    } finally {
-      BucketPruning.unregister("hdfs:/whq/data/tq")
-      BucketPruning.unregister("hdfs://nnA:8020/whq2/data/tq")
-    }
-  }
 }
 
 /** Shared state for the mid-write-failure case: remember the first
