@@ -79,6 +79,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
 
   val catalog = new MppCatalog(spark, warehouse)
 
+  /** This engine's listing cache: every scan of its tables, engine
+    * frames and catalog reads alike, plans from it. */
+  private[graft] val listingCache = new graft.sources.ColocatedFileIndex
+
   /** Catalog alias when bootstrapped via `ATTACH … (TYPE mpp)`. */
   @volatile var attachedAs: Option[String] = None
 
@@ -178,10 +182,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     StructType(userSchema(t).fields :+ StructField(BucketCol, IntegerType))
 
   private def info(table: String): TableInfo = {
-    // Cross-engine metadata freshness: a peer's ALTER/REBUCKET/CREATE
-    // reaches this engine's READS at the next statement, not at its
-    // next CAS conflict (the data side already converges per query via
-    // the listing fingerprint; this closes the metadata half). One
+    // Cross-engine freshness: a peer's commit — ALTER/REBUCKET/CREATE
+    // and every data mutation, whose new manifest pointer keys this
+    // engine's listing cache — reaches this engine's READS at the next
+    // statement, not at its next CAS conflict. One
     // CURRENT-pointer read per call; disable with
     // graft.catalog.refreshOnRead=false for single-writer deployments
     // that want zero catalog RPCs on the read path.
@@ -221,6 +225,12 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // freshly loaded state, so a rebase can neither reuse an oid
     // another engine just took nor double-create a name (computing the
     // oid out here was exactly that bug).
+    // The table's first version is an empty manifest, committed with
+    // the table row: every live table has a manifest pointer, so reads,
+    // the listing cache and VACUUM have one answer to "what does this
+    // table hold". Written once, on the first attempt that passes the
+    // checks; a CAS retry reuses it.
+    lazy val emptyManifest = writeFullManifest(Vector.empty)
     catalog.mutate { st =>
       // Schema-qualified table: the schema must exist (reference binds
       // schema.table through MppSchemaEntry::GetEntry,
@@ -237,7 +247,8 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       // Round-robin shard placement over registered nodes — bookkeeping
       // for __mpp_system surface parity; Spark schedules by data split.
       // Same placement rule as REBUCKET/RESTORE (reshardState).
-      reshardState(oid, buckets)(st.copy(tables = st.tables :+ t))
+      reshardState(oid, buckets)(st.copy(tables = st.tables :+ t,
+        tableManifests = st.tableManifests + (oid.toString -> emptyManifest)))
     }
     val t = info(name)
     val fs = new Path(dataPath(name)).getFileSystem(
@@ -342,7 +353,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         throw e
     }
     mfs.delete(marker, false)
-    graft.sources.ColocatedFileIndex.invalidate(dataPath(name))
+    listingCache.invalidate(dataPath(name))
     refreshView(info(name))
   }
 
@@ -473,7 +484,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     val p = new Path(dataPath(name))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
-    graft.sources.ColocatedFileIndex.invalidate(dataPath(name))
+    listingCache.invalidate(dataPath(name))
   }
 
   def masterAddNode(host: String, port: Int): Unit = {
@@ -529,35 +540,37 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       case _ => None
     }
 
-  /** The committed manifest pointer as the listing-cache validity key
-    * (round 14): zero-RPC cache checks on ANY scheme — on an S3-class
-    * warehouse the mtime fingerprint must bypass the cache and every
-    * read re-lists O(dirs + files); the pointer advances exactly when
-    * the committed file set changes.
+  /** The table's committed manifest pointer: the listing cache's
+    * validity key, and the base every write composes its manifest
+    * onto. It advances exactly when the committed file set changes, and
+    * checking it costs zero filesystem RPCs on any scheme.
     *
-    * The key additionally requires the table's MANIFEST-COMPLETE
-    * EPOCH (round-14 advisor): the pointer is a complete validity
-    * token only while every data mutation commits a manifest. Every
-    * data mutation of this engine does, but a catalog written by an
-    * older build that could mutate data without a manifest carries a
-    * stale pointer and no epoch — epoch-absent ⇒ the mtime
-    * fingerprint, never that pointer. A table never written has
-    * neither and takes the fingerprint path too; its first commit
-    * sets both. */
-  private[graft] def listingVersionKey(t: TableInfo): Option[String] =
-    if (catalog.state.manifestEpochs.contains(t.tableOid.toString))
-      catalog.state.tableManifests.get(t.tableOid.toString)
-    else None
+    * Every table created by this engine has one from CREATE on. A live
+    * table without one — from a catalog an older build wrote, where
+    * CREATE committed no manifest — is upgraded here, the one place
+    * that hands the pointer out: one full listing of its live bucket
+    * dirs is committed as its manifest. That is a versioned commit, so
+    * RESTORE can undo it. The upgrade is a write, so it refuses while a
+    * REBUCKET relay marker is up: a listing taken mid-relay would
+    * commit a layout the catalog does not describe. */
+  private[graft] def listingVersionKey(t: TableInfo): String = {
+    val oid = t.tableOid.toString
+    catalog.state.tableManifests.getOrElse(oid, {
+      guardNoRelay(t)
+      commitManifest(t)
+      catalog.state.tableManifests(oid)
+    })
+  }
 
-  /** REBUCKET relay marker handling (r13 advisor + verdict item 6).
+  /** REBUCKET relay marker handling.
     *
     * `.rebucket.json` sits in the table's data root from just before
     * REBUCKET's staging write until just after its catalog commit —
-    * dot-prefixed, so parquet listings ignore it, while the
-    * [[graft.sources.ColocatedFileIndex]] fingerprint (a listStatus of
-    * the same root) sees it appear/vanish and invalidates. While it is
-    * present the live directories are (or are about to be) relaid
-    * under a bucket modulus the published catalog does not carry, so:
+    * dot-prefixed, so parquet listings ignore it, while every scan
+    * assembly probes for it ([[graft.sources.ColocatedFileIndex.get]]).
+    * While it is present the live directories are (or are about to be)
+    * relaid under a bucket modulus the published catalog does not
+    * carry, so:
     *
     *  - LIVE READS route through the last COMMITTED manifest
     *    ([[relayPinnedRead]]): a scan during the relay sees exactly
@@ -572,14 +585,13 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     *    depth for writers already past this check).
     *  - A CRASH between the dir-by-dir swap and the catalog CAS — the
     *    window where data is relaid under the new k while the catalog
-    *    (and every peer's pruning registry) still carries the old k —
-    *    leaves the marker behind, so a post-crash engine keeps serving
-    *    the last committed version (its files are archived, the
-    *    manifest resolves them) — or, for a table with no committed
-    *    manifest, fails loudly — instead of hash-pruning against the
-    *    wrong modulus and silently returning zero/duplicate rows.
-    *    `RESTORE TABLE … TO VERSION AS OF` converges the layout and
-    *    clears the marker.
+    *    still carries the old k — leaves the marker behind, so a
+    *    post-crash engine keeps serving the last committed version
+    *    (its files are archived, the manifest resolves them) instead
+    *    of hash-pruning against the wrong modulus and silently
+    *    returning zero/duplicate rows. A table that was never written
+    *    serves its empty created version. `RESTORE TABLE … TO VERSION
+    *    AS OF` converges the layout and clears the marker.
     */
   private def relayMarker(t: TableInfo): Path =
     new Path(dataPath(t.name), graft.sources.ColocatedFileIndex.RelayMarker)
@@ -616,16 +628,12 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       spark.createDataFrame(rdd, fullSchema(t))
     }
     Some(try {
-      val files = catalog.state.tableManifests.get(t.tableOid.toString)
-        .flatMap(m => loadManifest(m))
-        .getOrElse(throw new IllegalStateException(
-          s"table ${t.name}: a REBUCKET relay marker is present but " +
-            "no committed manifest exists to pin reads to (the table " +
-            "was never written, or the manifest was swept) — the " +
-            "live layout cannot be trusted and there is no version " +
-            "to serve. Recover with RESTORE TABLE " +
-            s"${t.name} TO VERSION AS OF <version>, or re-create the " +
-            "table."))
+      val m = listingVersionKey(t)
+      val files = loadManifest(m).getOrElse(throw new IllegalStateException(
+        s"table ${t.name}: a REBUCKET relay marker is present and the " +
+          s"committed manifest $m (or a base in its delta chain) is " +
+          "gone — there is no version to serve. Recover with RESTORE " +
+          s"TABLE ${t.name} TO VERSION AS OF <version>."))
       // No zone maps / bucket pruning on the pinned path: the window
       // is one relay (or one crashed relay awaiting RESTORE), and
       // correctness beats scan pruning there. BucketCol is synthesized
@@ -642,7 +650,16 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   }
 
   /** User-facing scan: bucket column hidden, shard pruning and zone
-    * maps in the scan. */
+    * maps in the scan.
+    *
+    * `Dataset.inputFiles` is empty for this frame (and every engine
+    * frame): Spark lists input files only for V1 file relations and
+    * V2 `FileTable`s, and [[graft.sources.ColocatedTable]] is neither.
+    * A caller that needs the files reads the table root
+    * (`<warehouse>/data/<table>/bucket=k/`) or, for exactly the
+    * committed set, the manifest: `loadManifest` (package `graft.mpp`)
+    * of the table's `catalog.state.tableManifests` entry lists
+    * `bucket=k/<file>` names relative to that root. */
   def table(name: String): DataFrame = {
     val t = info(localKey(name))
     readWithBucket(t).select(userSchema(t).fieldNames.map(col): _*)
@@ -841,7 +858,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // compose fast path is sound only against a manifest that cannot
     // have seen this statement's files, which is precisely one
     // committed before now.
-    val manifestBase = catalog.state.tableManifests.get(t.tableOid.toString)
+    val manifestBase = listingVersionKey(t)
     stagedAppend(t, shaped) { (added, statuses) =>
       // graft.manifest.incremental=false restores the full-listing
       // commit, the reference RebucketSpec and TimeTravelSpec compare
@@ -850,17 +867,16 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         if (spark.conf.get("graft.manifest.incremental", "true").toBoolean)
           Some(added)
         else None,
-        deltaBase = Some(manifestBase))
+        deltaBase = Some(Some(manifestBase)))
       // AFTER the commit: the view's file index is cache-keyed by the
       // committed manifest pointer — refreshed before the commit it
       // would capture the PRE-statement index and serve stale rows
-      // until the next refresh (round 14). An append's post-commit
+      // until the next refresh. An append's post-commit
       // index is ADVANCED in place from the published statuses when
       // the cached entry matches our compose base (zero re-listing;
       // falls back to the manifest-diff rebuild otherwise).
-      listingVersionKey(t).foreach(newKey =>
-        graft.sources.ColocatedFileIndex.advance(spark, dataPath(t.name),
-          fullSchema(t), manifestBase, newKey, t.buckets, statuses))
+      listingCache.advance(spark, dataPath(t.name), fullSchema(t),
+        manifestBase, listingVersionKey(t), t.buckets, statuses)
       refreshView(t)
     }
     observedLong(obs)
@@ -1132,8 +1148,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         val conf = spark.sessionState.newHadoopConf()
         val dataRoot = new Path(dataPath(t.name))
         val fs = dataRoot.getFileSystem(conf)
-        val manifestBase =
-          catalog.state.tableManifests.get(t.tableOid.toString)
+        val manifestBase = listingVersionKey(t)
         val tag = UUID.randomUUID().toString // truncate archive gen
         (0 until t.buckets).foreach { k =>
           val d = new Path(dataRoot, s"$BucketCol=$k")
@@ -1146,7 +1161,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         commitManifest(t,
           replacedBuckets = Some(((0 until t.buckets).toSet,
             Vector.empty[String])),
-          deltaBase = Some(manifestBase))
+          deltaBase = Some(Some(manifestBase)))
         refreshView(t)
         n
       case _ =>
@@ -1452,7 +1467,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     val fs = dataRoot.getFileSystem(conf)
     // Manifest the table had BEFORE any of this rewrite's moves — the
     // delta commit's uncontended-compose anchor (see commitManifest).
-    val manifestBase = catalog.state.tableManifests.get(t.tableOid.toString)
+    val manifestBase = listingVersionKey(t)
     val stagingName = UUID.randomUUID().toString
     val staging = s"$warehouse/.staging/$stagingName"
     // Lease heartbeat: a sibling `<uuid>.lease` file touched every
@@ -1610,11 +1625,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     commitManifest(t, tableTransform,
       replacedBuckets =
         Some((affected, liveLogicalFiles(t, affected.toVector.sorted))),
-      deltaBase = Some(manifestBase),
+      deltaBase = Some(Some(manifestBase)),
       stateTransform = stateTransform,
       failOnContention = failOnContention)
     // AFTER the commit: the view's file index is cache-keyed by the
-    // committed manifest pointer (round 14) — refreshed earlier it
+    // committed manifest pointer — refreshed earlier it
     // would capture the pre-statement index.
     refreshView(t)
     // The lease (heartbeat-refreshed) covers write, swap AND commit:
@@ -1786,31 +1801,42 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     }
   }
 
+  /** Write a FULL manifest (a plain JSON array of logical files) under
+    * a fresh name and return the name. */
+  private def writeFullManifest(files: Vector[String]): String = {
+    val name = UUID.randomUUID().toString + ".json"
+    catalog.io.writeBytes(s"${catalog.manifestDir}/$name",
+      MppCatalog.mapper.writeValueAsBytes(files))
+    name
+  }
+
   /** Commit the table's current file set as this version's manifest:
     * write `_mpp_catalog/manifests/<uuid>.json`, point the catalog's
     * `tableManifests` entry at it (CAS snapshot commit), then
     * amortized-vacuum history beyond the retention window. Called at
     * the end of every data-mutating statement.
     *
-    * `addedFiles` is the INCREMENTAL append path (round 13): a pure
-    * additive statement (INSERT) KNOWS its delta, so the new manifest
-    * is `previous manifest + delta` — zero listing RPCs — computed
-    * INSIDE the CAS closure from the freshly loaded state, so a lost
-    * race re-derives from the PEER's just-committed manifest and the
-    * two writers' deltas COMPOSE (the full-listing path can
-    * transiently miss a peer's mid-move files at that version; the
-    * incremental path cannot). `replacedBuckets` is the COW twin: a
-    * bucket-granular rewrite KNOWS which bucket dirs it swapped and
-    * what now lives there, so its manifest is `previous manifest −
-    * those buckets' entries + the new files`. Falls back to the full
-    * listing when no previous manifest survives or a peer contended.
+    * `addedFiles` is the INCREMENTAL append path: a pure additive
+    * statement (INSERT) KNOWS its delta, so the new manifest is
+    * `previous manifest + delta` — zero listing RPCs — computed INSIDE
+    * the CAS closure from the freshly loaded state, so a lost race
+    * re-derives from the PEER's just-committed manifest and the two
+    * writers' deltas COMPOSE (the full-listing path can transiently
+    * miss a peer's mid-move files at that version; the incremental path
+    * cannot). `replacedBuckets` is the COW twin: a bucket-granular
+    * rewrite KNOWS which bucket dirs it swapped and what now lives
+    * there, so its manifest is `previous manifest − those buckets'
+    * entries + the new files`. Both fall back to the full listing when
+    * no previous manifest can be read or a peer contended; with
+    * neither, the commit IS one full listing of the live bucket dirs
+    * (how [[listingVersionKey]] upgrades a table without a pointer).
     *
-    * Manifests are a DELTA LOG with checkpoints (round 13, second
-    * wave): the incremental paths write a small v2 delta file
-    * (`{base, depth, add, replaced}`) instead of re-serializing the
-    * whole table's file list — per-commit metadata I/O is O(statement)
-    * instead of O(table files), the term that dominates the commit
-    * tail once a table holds millions of files. Every
+    * Manifests are a DELTA LOG with checkpoints: the incremental paths
+    * write a small v2 delta file (`{base, depth, add, replaced}`)
+    * instead of re-serializing the whole table's file list —
+    * per-commit metadata I/O is O(statement) instead of O(table
+    * files), the term that dominates the commit tail once a table
+    * holds millions of files. Every
     * `graft.manifest.checkpointEvery`-th chain link (default 10)
     * writes a FULL manifest (a plain JSON array — the v1 format, so
     * old manifests read unchanged as depth-0 checkpoints), bounding
@@ -1826,47 +1852,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       replacedBuckets: Option[(Set[Int], Vector[String])] = None,
       stateTransform: CatalogState => CatalogState = identity,
       failOnContention: Boolean = false): Unit = {
-    // Epoch establishment rides every manifest commit: absent (a table
-    // never written, or a catalog from an older build that could write
-    // without manifests) → set to now. Files younger than it were
-    // written under complete manifest-keeping.
-    // "Now" is read from the WAREHOUSE's clock, not the driver's: the
-    // epoch gates DEFAULT deletion against file MTIMES, which live in
-    // the warehouse's clock domain — on a remote store whose clock
-    // runs ahead of the committing driver, a driver-wall epoch would
-    // classify legitimate pre-epoch files (mtime > driver-now) as
-    // post-epoch strays and sweep them by default, the exact
-    // misclassification the epoch exists to prevent (round-14
-    // advisor). One probe file write+stat per establishment (once per
-    // table), falling back to driver wall when the probe fails. Ties
-    // (mtime == epoch) do not sweep — the sweep condition is strictly
-    // greater — so second-granularity mtimes stay on the safe side.
-    val epochOid = t.tableOid.toString
-    lazy val epochNow: Long = {
-      try {
-        val probe = new Path(
-          s"$warehouse/.staging/.epoch-probe-${UUID.randomUUID()}")
-        val pfs = probe.getFileSystem(spark.sessionState.newHadoopConf())
-        pfs.mkdirs(probe.getParent)
-        pfs.create(probe, true).close()
-        val m = pfs.getFileStatus(probe).getModificationTime
-        pfs.delete(probe, false)
-        if (m > 0) m else System.currentTimeMillis()
-      } catch { case _: Exception => System.currentTimeMillis() }
-    }
-    def withEpoch(s: CatalogState): CatalogState =
-      if (s.manifestEpochs.contains(epochOid)) s
-      else s.copy(manifestEpochs = s.manifestEpochs + (epochOid -> epochNow))
     val incremental =
       spark.conf.get("graft.manifest.incremental", "true").toBoolean
     val checkpointEvery = math.max(1, spark.conf
       .get("graft.manifest.checkpointEvery", "10").toInt)
-    def writeFull(files: Vector[String]): String = {
-      val name = UUID.randomUUID().toString + ".json"
-      catalog.io.writeBytes(s"${catalog.manifestDir}/$name",
-        MppCatalog.mapper.writeValueAsBytes(files))
-      name
-    }
     def writeDelta(base: String, depth: Int, add: Vector[String],
         replaced: Vector[Int]): String = {
       // Depth rides in the NAME so the uncontended commit decides
@@ -1887,19 +1876,17 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // The manifest committed BEFORE this statement's moves began —
     // composing against it needs no reconciliation (the common,
     // uncontended case). The CALLER must capture it before moving
-    // any file (a capture taken here, after the moves, could
-    // already reflect a peer's full listing that saw them —
-    // review-found); callers that cannot say pass None and every
-    // compose takes the reconciling path.
+    // any file: a capture taken here, after the moves, could
+    // already reflect a peer's full listing that saw them. Callers
+    // that cannot say pass None and every compose takes the
+    // reconciling path.
     val baseManifest: Option[String] = deltaBase.flatten
     // Re-listed PER CAS ATTEMPT, not cached across retries: a lost
     // rebase means a peer committed mid-statement, and a listing taken
     // before that commit can miss the peer's freshly moved files — a
     // manifest built from it would quietly drop committed rows from
-    // the version (review-found; the old once-per-statement cache
-    // optimized the rebase storm at the cost of exactly this hole).
-    // Contended retries are rare; the O(k) walk per retry is the
-    // correct price.
+    // the version. Contended retries are rare; the O(k) walk per retry
+    // is the correct price.
     def fullListing(): Vector[String] = liveLogicalFiles(t)
     // A concurrent REBUCKET (or RESTORE across one) that relaid the
     // table mid-statement invalidates this statement's routing: its
@@ -1924,10 +1911,31 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
                 s"with RESTORE TABLE ${t.name} TO VERSION AS OF " +
                 "<pre-statement version>, then re-run the statement.")
         }
+    // REBUCKET's loud abort: a peer's commit that landed while every
+    // bucket was being relaid has its files archived inside this swap
+    // (absent from the staged output), so a quiet full-listing commit
+    // would make the peer's SUCCESSFUL statement silently vanish from
+    // the current version. Fail THIS statement instead; the peer's
+    // version is committed and RESTORE recovers everything. Checked in
+    // the incremental and the full-listing paths alike.
+    def guardContention(prev: Option[String]): Unit =
+      if (failOnContention && prev.isDefined && prev != baseManifest)
+        throw new IllegalStateException(
+          s"REBUCKET ${t.name}: a concurrent statement committed " +
+            "while the table was being relaid; its rows are archived " +
+            "inside this rebucket's swap and the rebucket is NOT " +
+            s"committed. Recover with RESTORE TABLE ${t.name} TO " +
+            "VERSION AS OF <the concurrent statement's version>, then " +
+            "re-run REBUCKET without concurrent writers.")
     // ONE CAS commit carries both the manifest pointer and any table
     // metadata change (RESTORE's schema rollback rides here): no
     // retained version can ever pair new metadata with a stale file
     // set or vice versa.
+    def commit(s: CatalogState, name: String): CatalogState =
+      stateTransform(s.copy(
+        tables = s.tables.map(x =>
+          if (x.tableOid == t.tableOid) tableTransform(x) else x),
+        tableManifests = s.tableManifests + (t.tableOid.toString -> name)))
     (addedFiles, replacedBuckets) match {
       case (Some(delta0), _) if incremental =>
         // Defense in depth: the manifest's name rule (no committer
@@ -1943,7 +1951,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           guardLayout(s)
           val prevName = s.tableManifests.get(t.tableOid.toString)
           val name = prevName match {
-            case None => writeFull(fullListing())
             case Some(pn) if prevName == baseManifest &&
                 catalog.io.exists(s"${catalog.manifestDir}/$pn") =>
               // Uncontended: the base cannot contain this statement's
@@ -1954,10 +1961,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
               val depth = manifestDepth(pn) + 1
               if (depth < checkpointEvery) writeDelta(pn, depth, delta, Vector.empty)
               else loadManifest(pn) match {
-                case Some(pf) => writeFull(pf ++ delta)
-                case None => writeFull(fullListing())
+                case Some(pf) => writeFullManifest(pf ++ delta)
+                case None => writeFullManifest(fullListing())
               }
-            case Some(pn) =>
+            case _ =>
               // CONTENDED: a peer committed a manifest for THIS table
               // while the statement ran. Its listing may already
               // contain some of our mid-move files (DEDUPE, or the
@@ -1966,10 +1973,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
               // (LIVENESS drop, or the version counts those rows
               // twice: once in the peer's rewrite output, once via
               // the archived original). Both checks touch only the
-              // DELTA — never the table.
-              loadManifest(pn) match {
-                case None => writeFull(fullListing())
-                case Some(pf) =>
+              // DELTA — never the table. No readable previous
+              // manifest: list the truth.
+              prevName.flatMap(pn => loadManifest(pn).map(pn -> _)) match {
+                case None => writeFullManifest(fullListing())
+                case Some((pn, pf)) =>
                   val pset = pf.toSet
                   import scala.jdk.CollectionConverters._
                   val fresh = delta.filterNot(pset)
@@ -1980,14 +1988,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
                   val depth = manifestDepth(pn) + 1
                   if (depth < checkpointEvery)
                     writeDelta(pn, depth, fresh, Vector.empty)
-                  else writeFull(pf ++ fresh)
+                  else writeFullManifest(pf ++ fresh)
               }
           }
-          withEpoch(stateTransform(s.copy(
-            tables = s.tables.map(x =>
-              if (x.tableOid == t.tableOid) tableTransform(x) else x),
-            tableManifests = s.tableManifests +
-              (t.tableOid.toString -> name))))
+          commit(s, name)
         }
       case (_, Some((affected, newFiles0))) if incremental =>
         val newFiles = newFiles0.filterNot { f =>
@@ -2005,72 +2009,29 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
                 writeDelta(pn, depth, newFiles, affected.toVector.sorted)
               else loadManifest(pn) match {
                 case Some(pf) =>
-                  writeFull(pf.filterNot(f =>
+                  writeFullManifest(pf.filterNot(f =>
                     affected.contains(manifestBucketOf(f))) ++ newFiles)
-                case None => writeFull(fullListing())
+                case None => writeFullManifest(fullListing())
               }
             case prev =>
-              // No base, or a peer contended mid-rewrite: a concurrent
-              // writer may have appended into the very buckets this
-              // statement swapped — its files went through the swap
-              // (or not) in ways only the filesystem knows.
-              if (failOnContention && prev.isDefined && prev != baseManifest)
-                // REBUCKET: a peer's commit landed while every bucket
-                // was being relaid — its files are archived inside
-                // this swap (absent from the staged output), so a
-                // quiet full-listing commit would make the peer's
-                // SUCCESSFUL statement silently vanish from the
-                // current version (review-found). Fail THIS statement
-                // loudly instead; the peer's version is committed and
-                // RESTORE recovers everything.
-                throw new IllegalStateException(
-                  s"REBUCKET ${t.name}: a concurrent statement " +
-                    "committed while the table was being relaid; its " +
-                    "rows are archived inside this rebucket's swap " +
-                    "and the rebucket is NOT committed. Recover with " +
-                    s"RESTORE TABLE ${t.name} TO VERSION AS OF " +
-                    "<the concurrent statement's version>, then " +
-                    "re-run REBUCKET without concurrent writers.")
-              // List the truth (exactly the pre-round-13 behavior).
-              writeFull(fullListing())
+              // No readable base, or a peer contended mid-rewrite: a
+              // concurrent writer may have appended into the very
+              // buckets this statement swapped — its files went
+              // through the swap (or not) in ways only the filesystem
+              // knows. List the truth.
+              guardContention(prev)
+              writeFullManifest(fullListing())
           }
-          withEpoch(stateTransform(s.copy(
-            tables = s.tables.map(x =>
-              if (x.tableOid == t.tableOid) tableTransform(x) else x),
-            tableManifests = s.tableManifests +
-              (t.tableOid.toString -> name))))
+          commit(s, name)
         }
       case _ =>
         catalog.mutate { s =>
           guardLayout(s)
-          // The loud-abort contract must hold with the incremental
-          // manifests OFF too: this fallback's full listing is the
-          // post-swap truth, which excludes a peer's rows the swap
-          // archived — quietly committing it would vanish the peer's
-          // SUCCESSFUL statement exactly as in the incremental arm
-          // (r13 advisor: the documented "both race orderings fail
-          // loudly" guarantee otherwise held only with
-          // graft.manifest.incremental=true).
-          val prevHere = s.tableManifests.get(t.tableOid.toString)
-          if (failOnContention && prevHere.isDefined &&
-              prevHere != baseManifest)
-            throw new IllegalStateException(
-              s"REBUCKET ${t.name}: a concurrent statement committed " +
-                "while the table was being relaid; its rows are " +
-                "archived inside this rebucket's swap and the " +
-                "rebucket is NOT committed. Recover with RESTORE " +
-                s"TABLE ${t.name} TO VERSION AS OF <the concurrent " +
-                "statement's version>, then re-run REBUCKET without " +
-                "concurrent writers.")
+          guardContention(s.tableManifests.get(t.tableOid.toString))
           // Written INSIDE the closure so a CAS retry re-lists and
           // re-writes against the freshly loaded state (same rationale
           // as fullListing being a def).
-          val name = writeFull(fullListing())
-          withEpoch(stateTransform(s.copy(
-            tables = s.tables.map(x =>
-              if (x.tableOid == t.tableOid) tableTransform(x) else x),
-            tableManifests = s.tableManifests +
-              (t.tableOid.toString -> name))))
+          commit(s, writeFullManifest(fullListing()))
         }
     }
     // Amortize the sweep: every 16th commit per engine (the window is
@@ -2090,11 +2051,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     *
     * The archive sweep fans the per-bucket listings and deletes out
     * over a bounded parallel stream (the ColocatedScan parallel-
-    * footer idiom) — the previous serial nested `listStatus` walk was
-    * a many-minute driver stall on a 64Ki-bucket churned table
-    * (round-11 "what's wrong #3"); deletions are tracked by counter,
-    * never by re-listing the directory. Returns the reclaim/retain
-    * accounting (round-11 item 1: VACUUM's answer must be measurable). */
+    * footer idiom): a serial nested `listStatus` walk is a many-minute
+    * driver stall on a 64Ki-bucket churned table. Deletions are
+    * tracked by counter, never by re-listing the directory. Returns
+    * the reclaim/retain accounting, so an operator can see what
+    * VACUUM freed and what the window still pins. */
   def vacuumTimeTravel(graceMs: Long = 10 * 60 * 1000L): VacuumStats =
     vacuumTimeTravel(graceMs, scanStrays = true)
 
@@ -2123,7 +2084,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // One memo PER TABLE, dropped when its window is done: chains only
     // ever share manifests within a table, and a warehouse-wide memo
     // would hold every table's reconstructed file lists on the driver
-    // simultaneously (review-found).
+    // simultaneously.
     val chainNames = Set.newBuilder[String]
     snaps.flatMap(_.tableManifests.toSeq).groupBy(_._1)
       .foreach { case (oid, refs) =>
@@ -2197,25 +2158,18 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
             fs.delete(g.getPath, true))
       }
     }
-    // Stray LIVE files (round-12 verdict item 7): a DRIVER crash in the
-    // staged INSERT's publish window leaves some bucket moves done with
-    // no manifest committed — files visible to scans that no retained
-    // manifest references. Detect them here (VACUUM already owns the
-    // file-accounting walk), post-grace so an in-flight peer INSERT's
-    // moved-but-not-yet-committed files are never misread as strays.
-    // Strays younger than the table's manifest-complete epoch sweep by
-    // default; older ones are REPORTED, and
-    // `graft.vacuum.sweepStrays=true` deletes them too — sound only
-    // when every write the table ever saw committed a manifest (an
-    // older build could write without one, and its stale manifest would
-    // misclassify legitimate live files), so it is an explicit operator
-    // action, like Delta's VACUUM retention override.
+    // Stray LIVE files: a DRIVER crash in the staged INSERT's publish
+    // window leaves some bucket moves done with no manifest committed —
+    // files visible to scans that no retained manifest references.
+    // Every table has a manifest from CREATE on and every data
+    // mutation commits one, so "no retained manifest references it" is
+    // authoritative: such a file is swept, post-grace so an in-flight
+    // peer INSERT's moved-but-not-yet-committed files are never
+    // misread as strays. VACUUM already owns the file-accounting walk.
     val strayFiles = new LongAdder
     val strayBytes = new LongAdder
     val sweptTables =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val sweepStrays =
-      spark.conf.get("graft.vacuum.sweepStrays", "false").toBoolean
     // A stray's AGE cannot come from file mtime alone: rename preserves
     // the staging write time, so a slow statement's freshly published
     // files can look hours old (write at T, moves+commit at T+15min).
@@ -2237,17 +2191,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     if (scanStrays && !leaseActive)
     catalog.state.tables.filterNot(_.deleted).foreach { t =>
       val oid = t.tableOid.toString
+      // A table without a pointer (an older build's catalog, not yet
+      // upgraded by a read or write) has nothing to classify against.
       if (catalog.state.tableManifests.contains(oid)) {
         val keep = referenced.getOrElse(oid, Set.empty)
-        // Manifest-complete epoch (verdict-13 item 7): strays YOUNGER
-        // than it were written under complete manifest-keeping, so
-        // "no retained manifest references it" is authoritative —
-        // those sweep BY DEFAULT. Strays older than the epoch, or any
-        // stray when the epoch is absent (a catalog from an older build
-        // that could write without a manifest, whose stale manifest
-        // could misclassify legitimate live files), still need the
-        // explicit operator assertion.
-        val epoch = catalog.state.manifestEpochs.get(oid)
         val root = new Path(dataPath(t.name))
         val fs = root.getFileSystem(conf)
         if (fs.exists(root)) {
@@ -2261,14 +2208,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
                   f.getModificationTime < cutoff) {
                 strayFiles.increment()
                 strayBytes.add(f.getLen)
-                if (sweepStrays ||
-                    epoch.exists(f.getModificationTime > _)) {
-                  fs.delete(f.getPath, false)
-                  filesDeleted.increment()
-                  bytesReclaimed.add(f.getLen)
-                  sweptTables.add(t.name)
-                  ()
-                }
+                fs.delete(f.getPath, false)
+                filesDeleted.increment()
+                bytesReclaimed.add(f.getLen)
+                sweptTables.add(t.name)
               }
             }
           }
@@ -2276,10 +2219,9 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       }
     }
     // A stray sweep deletes LIVE files without a manifest commit — the
-    // manifest-keyed listing cache (round 14) would keep referencing
-    // them until the table's next commit; invalidate explicitly.
-    sweptTables.forEach(n =>
-      graft.sources.ColocatedFileIndex.invalidate(dataPath(n)))
+    // manifest-keyed listing cache would keep referencing them until
+    // the table's next commit; invalidate explicitly.
+    sweptTables.forEach(n => listingCache.invalidate(dataPath(n)))
     VacuumStats(manifestsDeleted, filesDeleted.sum(),
       bytesReclaimed.sum(), filesRetained.sum(), bytesRetained.sum(),
       System.currentTimeMillis() - t0,
@@ -2572,7 +2514,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // again, so the relay marker (if any) comes off and live
     // reads/writes resume.
     fs.delete(relayMarker(cur), false)
-    graft.sources.ColocatedFileIndex.invalidate(dataPath(cur.name))
+    listingCache.invalidate(dataPath(cur.name))
     refreshView(info(key))
   }
 
@@ -3035,8 +2977,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       // Same staged-rename publish as INSERT (no shared `_temporary`
       // committer state with concurrent writers) and the same
       // incremental manifest: the appended files ARE the delta.
-      val manifestBase =
-        catalog.state.tableManifests.get(t.tableOid.toString)
+      val manifestBase = listingVersionKey(t)
       stagedAppend(t,
         routeToBuckets(enforceNotNull(t, inserts)
           .observe(obs, count(lit(1)).as("n")), affected)) {
@@ -3045,12 +2986,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           if (spark.conf.get("graft.manifest.incremental", "true").toBoolean)
             Some(added)
           else None,
-          deltaBase = Some(manifestBase))
+          deltaBase = Some(Some(manifestBase)))
         // After the commit (manifest-keyed index cache); advance the
         // listing cache from the published statuses as INSERT does.
-        listingVersionKey(t).foreach(newKey =>
-          graft.sources.ColocatedFileIndex.advance(spark, dataPath(t.name),
-            fullSchema(t), manifestBase, newKey, t.buckets, statuses))
+        listingCache.advance(spark, dataPath(t.name), fullSchema(t),
+          manifestBase, listingVersionKey(t), t.buckets, statuses)
         refreshView(t)
       }
       return observedLong(obs)

@@ -42,7 +42,14 @@ final case class TableInfo(
 
 /** Immutable catalog snapshot; commits replace the whole snapshot (the
   * Spark analogue of the reference's coordinator-only transactional
-  * metadata, `/root/reference/src/storage/mpp_transaction.cpp:10-52`). */
+  * metadata, `/root/reference/src/storage/mpp_transaction.cpp:10-52`).
+  *
+  * Snapshots written by older builds may carry a per-table epoch map
+  * (the time of the table's first manifest commit, which gated an
+  * mtime-keyed listing and VACUUM's stray sweep). Nothing reads it any
+  * more; it is ignored by name, so retained snapshots still load while
+  * any other unknown property still fails the read. */
+@com.fasterxml.jackson.annotation.JsonIgnoreProperties(Array("manifestEpochs"))
 final case class CatalogState(
     nodes: Vector[NodeInfo] = Vector.empty,
     tables: Vector[TableInfo] = Vector.empty,
@@ -56,22 +63,11 @@ final case class CatalogState(
       * table's data state at that version: `VERSION AS OF v` loads
       * snapshot v and reads its manifest's file list (the Delta/
       * Iceberg version-pointer idiom — the snapshot chain was already
-      * versioned, this pins the data files to it). Absent key = no
-      * data committed for that table at this version. */
-    tableManifests: Map[String, String] = Map.empty,
-    /** Manifest-COMPLETE epoch (round-13 verdict item 7): tableOid →
-      * warehouse-clock ms of the table's first manifest commit. Every
-      * data mutation commits a manifest, so the entry is set by a
-      * table's first write and never cleared; it is absent only for a
-      * table never written, or in a catalog from an older build that
-      * could write data without a manifest. While present, every live
-      * file YOUNGER than the epoch was written under complete
-      * manifest-keeping, so a post-grace unreferenced one is
-      * authoritatively garbage — VACUUM sweeps those by default; files
-      * older than the epoch (or any file when the epoch is absent)
-      * still need the explicit `graft.vacuum.sweepStrays=true`
-      * operator assertion. */
-    manifestEpochs: Map[String, Long] = Map.empty) {
+      * versioned, this pins the data files to it). CREATE sets the
+      * key to an empty manifest, so every live table has one; it is
+      * absent only in snapshots an older build wrote for a table it
+      * never wrote to (read as empty). */
+    tableManifests: Map[String, String] = Map.empty) {
 
   def liveTable(name: String): Option[TableInfo] =
     tables.find(t => t.name == name && !t.deleted)
@@ -92,8 +88,8 @@ final case class VacuumStats(
     wallMs: Long,
     /** LIVE-directory files referenced by NO retained manifest and
       * older than the grace window — the residue of a driver crash
-      * mid-INSERT-publish (SURVEY §8). Reported always; deleted (and
-      * then also counted in filesDeleted/bytesReclaimed) only with
-      * `graft.vacuum.sweepStrays=true`. */
+      * mid-INSERT-publish (SURVEY §8). Swept, and then also counted in
+      * filesDeleted/bytesReclaimed, unless a statement lease is active
+      * (then none are classified). */
     strayLiveFiles: Long = 0L,
     strayLiveBytes: Long = 0L)

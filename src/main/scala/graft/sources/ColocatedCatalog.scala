@@ -334,13 +334,15 @@ final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
     org.apache.spark.sql.types.StructField(BucketPruning.BucketCol,
       IntegerType))
 
-  private def mkInner() = ParquetScanBuilder(spark,
+  private def mkInner() = {
     // Manifest-pointer cache key + manifest-diff incremental
     // invalidation (see ColocatedFileIndex.get).
-    ColocatedFileIndex.get(spark, root, fullSchema,
-      engine().listingVersionKey(t), t.buckets,
-      engine().manifestDirDiff),
-    fullSchema, userSchema, CaseInsensitiveStringMap.empty())
+    val e = engine()
+    ParquetScanBuilder(spark,
+      e.listingCache.get(spark, root, fullSchema, e.listingVersionKey(t),
+        t.buckets, e.manifestDirDiff),
+      fullSchema, userSchema, CaseInsensitiveStringMap.empty())
+  }
 
   private var inner = mkInner()
 
@@ -418,23 +420,195 @@ final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
   }
 }
 
-/** Listing cache for the co-located read path: re-listing every file of
-  * every bucket on every query is the kind of per-query cost that stays
-  * invisible at test scale and dominates planning at 100 TB (Iceberg/
-  * Delta cache snapshot listings for the same reason). The cached
-  * [[InMemoryFileIndex]] is keyed by a one-RPC fingerprint — the bucket
-  * directories' (name, mtime, fileCount-bearing mtime) from a single
-  * `listStatus` of the table root — so any append (new files bump the
-  * bucket dir's mtime), COW swap (dir replaced), or truncate (dir gone)
-  * invalidates, while repeat reads of an unchanged table skip the full
-  * per-bucket listing entirely. The fingerprint needs directory-mtime
-  * semantics, so only filesystems known to provide them (local/HDFS)
-  * are cached — anything else bypasses automatically — and
-  * `graft.listingCache.enabled=false` force-disables caching
-  * everywhere (both enforced in [[get]], not just documented). */
-object ColocatedFileIndex {
+/** Listing cache for the co-located read path, one per engine (its
+  * `listingCache`): re-listing every file of every bucket
+  * on every query is the kind of per-query cost that stays invisible at
+  * test scale and dominates planning at 100 TB (Iceberg/Delta cache
+  * snapshot listings for the same reason).
+  *
+  * An entry is keyed by the table's committed MANIFEST POINTER, which
+  * every table has from CREATE on: a validity token that advances on
+  * every committed statement and needs ZERO filesystem RPCs to check,
+  * so the cache works on any scheme, object stores included. Measured
+  * on an 8192-bucket / 65k-file table over a latency-counting FS, a
+  * pruned point read that re-lists pays 8,193 listStatus + 73,748
+  * getFileStatus, and ~0 with the key (BASELINE §24).
+  *
+  * Rebuilds are DIRECTORY-INCREMENTAL: the index is constructed over
+  * the bucket dirs as root paths with a per-root FileStatusCache, and
+  * on a key rotation `dirDiff(oldKey, newKey)` — the engine diffs the
+  * two manifests' file lists, so it is correct for PEER commits from
+  * other JVMs too — names exactly the dirs whose entries drop. A 1-key
+  * COW commit then re-lists 1 bucket dir, not 8192 (None = unknown →
+  * all drop; measured §24).
+  *
+  * Semantics: the index serves exactly the state as of the manifest it
+  * is keyed by; a peer's commit changes the pointer (refresh-on-read
+  * delivers it) and invalidates — the snapshot-pointer idiom every
+  * lakehouse file catalog uses. Uncommitted in-flight files stay
+  * invisible until their commit.
+  *
+  * Entries are keyed by table root, so the cache belongs to the engine
+  * that owns those roots: two engines on two warehouses never share or
+  * invalidate each other's entries. */
+final class ColocatedFileIndex {
+  import ColocatedFileIndex._
+
   private val cache = scala.collection.concurrent.TrieMap
     .empty[String, (String, InMemoryFileIndex)]
+
+  /** Per-root directory-granular file-status caches: entry = bucket dir
+    * → its files. Survives key rotation so a rebuild re-lists only
+    * invalidated dirs. */
+  private val dirCaches = scala.collection.concurrent.TrieMap
+    .empty[String, org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache]
+
+  /** The index of `root` as of manifest `versionKey`. */
+  def get(spark: SparkSession, root: String, schema: StructType,
+      versionKey: String, buckets: Int,
+      dirDiff: (String, String) => Option[Seq[String]])
+      : InMemoryFileIndex = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // One marker probe per scan assembly, HITS INCLUDED: a relay
+    // renames files away without advancing the manifest pointer, so a
+    // warm hit would serve paths mid-rename. The read would fail
+    // either way (files only move, never mutate — no silent wrong
+    // data), but the typed relay error beats a task-level
+    // FileNotFound. Cost: one exists() per statement.
+    if (fs.exists(new Path(p, RelayMarker))) failRelay(root)
+    cache.get(root) match {
+      case Some((k, idx)) if k == versionKey => idx
+      case prev =>
+        val dc = dirCaches.getOrElseUpdate(root,
+          new org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache)
+        // FULLY QUALIFIED paths throughout — cache keys, invalidation
+        // keys, root paths AND basePath: partition inference compares
+        // leaf-dir parents against basePath by Path equality, and an
+        // unqualified "scheme:/x" vs a qualified "scheme:///x" SILENTLY
+        // yields an empty partition spec — no bucket column, no pruning
+        // (a point read then footer-read all 68k files); an unqualified
+        // INVALIDATION key likewise silently no-ops against qualified
+        // entries and stale listings serve swapped-away files.
+        val qp = fs.makeQualified(p)
+        prev match {
+          case Some((oldK, _)) =>
+            dirDiff(oldK, versionKey) match {
+              case Some(dirs) => dirs.foreach(d =>
+                dc.invalidate(new Path(qp, d)))
+              case None => dc.invalidateAll() // unknown: list all
+            }
+          case None =>
+            // First build, or after a clear: the dir cache's provenance
+            // is unknown — safe only if everything re-lists.
+            dc.invalidateAll()
+        }
+        put(root, versionKey, index(spark, qp, schema, buckets, dc))
+    }
+  }
+
+  /** Drop a table's cached listing (DROP TABLE, REBUCKET, RESTORE, a
+    * VACUUM that swept live files). */
+  def invalidate(root: String): Unit = {
+    cache.remove(root)
+    dirCaches.remove(root)
+    ()
+  }
+
+  /** Advance a table's cache entry in place after a commit whose added
+    * files the caller already knows (the INSERT publish loop holds
+    * every staged status it renames): append the statuses to the
+    * per-dir cache and rebuild the index from it under the new key —
+    * ZERO listing RPCs, where even the directory-incremental rebuild
+    * re-lists every touched dir (a high-k INSERT touches ~all of them:
+    * measured 12.2k of a 1k-row INSERT's 22.6k FileSystem ops were
+    * exactly this re-listing).
+    *
+    * Sound only when the cached entry is keyed by `expectedBase` (the
+    * manifest this statement's commit composed against): a peer commit
+    * interleaving between our base and our publish means the cached
+    * listing may miss the peer's files — return false and let the next
+    * read's rebuild (manifest-diff-driven) handle it. Dirs the cache
+    * never listed stay absent and re-list lazily on the rebuild this
+    * call performs. */
+  def advance(spark: SparkSession, root: String, schema: StructType,
+      expectedBase: String, newKey: String, buckets: Int,
+      added: Seq[AddedFile]): Boolean = {
+    if (!cache.get(root).exists(_._1 == expectedBase)) return false
+    val dc = dirCaches.getOrElse(root, return false)
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // A relay marker here means a REBUCKET started AFTER our commit
+    // already succeeded (advance runs post-commit): throwing would make
+    // a COMMITTED statement surface as a failure — inviting a retry
+    // that duplicates rows — so the rotation is merely REFUSED: drop
+    // the cached entry and let the next read's rebuild path see the
+    // marker and report the relay.
+    if (fs.exists(new Path(p, RelayMarker))) { invalidate(root); return false }
+    val qp = fs.makeQualified(p)
+    added.groupBy(_.dir).foreach { case (dir, files) =>
+      val dp = new Path(qp, dir)
+      dc.getLeafFiles(dp) match {
+        case Some(existing) =>
+          // Dedupe by name: a concurrent same-JVM reader that saw the
+          // new manifest pointer may have re-listed this dir (already
+          // containing the just-renamed file) into the shared per-dir
+          // cache between our key check and here — a plain append
+          // would then double-count the file's rows silently.
+          val names = files.iterator.map(_.name).toSet
+          val sts = files.map(f => new org.apache.hadoop.fs.FileStatus(
+            f.len, false, 1, f.blockSize, f.mtimeMs,
+            new Path(dp, f.name))).toArray
+          dc.putLeafFiles(dp,
+            existing.filterNot(e => names.contains(e.getPath.getName)) ++ sts)
+        case None => () // never listed: the rebuild lists it lazily
+      }
+    }
+    put(root, newKey, index(spark, qp, schema, buckets, dc))
+    true
+  }
+
+  /** The index over the table's `buckets` dirs under the qualified
+    * root `qp`, served from (and filling) the per-dir cache `dc`. */
+  private def index(spark: SparkSession, qp: Path, schema: StructType,
+      buckets: Int,
+      dc: org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache)
+      : InMemoryFileIndex = {
+    val roots = (0 until buckets)
+      .map(i => new Path(qp, s"${BucketPruning.BucketCol}=$i"))
+    val idx = org.apache.spark.sql.GraftSqlBridge.fileIndex(
+      spark, roots, Map("basePath" -> qp.toString), Some(schema), dc)
+    // Negative-cache dirs the listing found absent, or every rebuild
+    // re-probes each missing bucket dir.
+    roots.foreach(r =>
+      if (dc.getLeafFiles(r).isEmpty) dc.putLeafFiles(r, Array.empty))
+    // Inference-failure guard: files present but no bucket partition
+    // column means every downstream layer silently loses pruning AND
+    // reads bucket as null — fail loudly.
+    if (idx.partitionSpec().partitionColumns.isEmpty &&
+        idx.allFiles().nonEmpty)
+      throw new IllegalStateException(
+        s"$qp: bucket partition inference failed on the " +
+          "version-keyed listing (basePath mismatch?)")
+    idx
+  }
+
+  /** Bound the cache: DROP invalidates its table and DETACH drops the
+    * engine with its cache, but a table a PEER engine dropped is never
+    * hit again and never invalidated here, so a hard cap with full
+    * reset is kept — the next queries re-warm it. */
+  private def put(root: String, key: String,
+      idx: InMemoryFileIndex): InMemoryFileIndex = {
+    cache.put(root, (key, idx))
+    if (cache.size > MaxEntries) cache.clear()
+    idx
+  }
+}
+
+object ColocatedFileIndex {
+
+  /** Cached tables per engine before the cache resets. */
+  private val MaxEntries = 256
 
   /** REBUCKET relay marker (see MppEngine's relay handling): while it
     * sits in a table's data root, the live bucket layout is mid-relay
@@ -455,190 +629,6 @@ object ColocatedFileIndex {
         "the relay to finish, or recover with RESTORE TABLE … TO " +
         "VERSION AS OF <version>.")
 
-  /** Writes inside one mtime tick are invisible to the fingerprint: a
-    * file landing in a bucket dir in the same tick we already listed
-    * would serve a stale index. Any table written to this recently is
-    * treated as hot and re-listed; only tables quiescent for longer
-    * than the guard are served from cache. */
-  private val FreshnessGuardMs = 2000L
-
-  /** Conf kill-switch: `graft.listingCache.enabled=false` forces a
-    * fresh listing on every query. */
-  val EnabledConf = "graft.listingCache.enabled"
-
-  /** Filesystems known to maintain directory mtimes, which the
-    * fingerprint depends on. Everything else (S3A and friends have no
-    * real directories — the fingerprint would never change and appends
-    * would stay permanently invisible) bypasses the cache
-    * automatically; the conf can still force-disable the allowlisted
-    * schemes. */
-  private val MtimeSchemes = Set("file", "hdfs", "viewfs")
-
-  /** (fingerprint, max dir mtime, relay marker present) from ONE
-    * listStatus of the root — the marker check rides the listing the
-    * fingerprint already pays for, zero extra RPCs. */
-  private def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): (String, Long, Boolean) = {
-    if (!fs.exists(p)) ("absent", 0L, false)
-    else {
-      val dirs = fs.listStatus(p).sortBy(_.getPath.getName)
-      (dirs.map(d =>
-          s"${d.getPath.getName}:${d.getModificationTime}:${d.getLen}")
-        .mkString("|"),
-        if (dirs.isEmpty) 0L else dirs.map(_.getModificationTime).max,
-        dirs.exists(_.getPath.getName == RelayMarker))
-    }
-  }
-
-  def get(spark: SparkSession, root: String,
-      schema: StructType): InMemoryFileIndex =
-    get(spark, root, schema, None, 0, (_, _) => None)
-
-  /** Per-root directory-granular file-status caches for the
-    * version-keyed path: entry = bucket dir → its files. Survives
-    * index-key rotation so a rebuild re-lists only invalidated dirs. */
-  private val dirCaches = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache]
-
-  /** As [[get]]; `versionKey` (round 14) is the engine's committed
-    * MANIFEST POINTER for the table — a validity token that advances
-    * on every committed statement and needs ZERO filesystem RPCs to
-    * check. With it, the cache works on ANY scheme — including the
-    * object stores the mtime fingerprint must bypass (S3-class dirs
-    * have no mtimes), where the bypass costs a FULL O(dirs + files)
-    * re-listing per read: measured on an 8192-bucket / 65k-file table
-    * over a latency-counting FS, a single pruned point read paid
-    * 8,193 listStatus + 73,748 getFileStatus before this key, and ~0
-    * after (BASELINE §24).
-    *
-    * Rebuilds are DIRECTORY-INCREMENTAL: the index is constructed
-    * over the bucket dirs as root paths with a per-root
-    * FileStatusCache, and on a key rotation `dirDiff(oldKey, newKey)`
-    * — the engine diffs the two manifests' file lists, so it is
-    * correct for PEER commits from other JVMs too — names exactly the
-    * dirs whose entries drop. A 1-key COW commit then re-lists 1
-    * bucket dir, not 8192 (None = unknown → all drop; measured §24).
-    *
-    * Semantics: the index serves exactly the state as of the manifest
-    * it is keyed by; a peer's commit changes the pointer
-    * (refresh-on-read delivers it) and invalidates — the
-    * snapshot-pointer idiom every lakehouse file catalog uses.
-    * Uncommitted in-flight files stay invisible until their commit,
-    * strictly better isolation than the mtime fingerprint's "whatever
-    * the dirs held at listing time". */
-  def get(spark: SparkSession, root: String, schema: StructType,
-      versionKey: Option[String], buckets: Int,
-      dirDiff: (String, String) => Option[Seq[String]])
-      : InMemoryFileIndex = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val enabled = spark.conf.get(EnabledConf, "true").toBoolean
-    versionKey match {
-      case Some(v) if enabled && buckets > 0 =>
-        val key = s"v:$v"
-        cache.get(root) match {
-          case Some((k, idx)) if k == key =>
-            // One marker probe per scan assembly, HITS INCLUDED
-            // (round-14 verdict item 4): a relay renames files away
-            // without advancing the manifest pointer, so a warm
-            // version-keyed hit would serve paths mid-rename — the
-            // read fails either way (the pointer hasn't advanced, so
-            // files only move, never mutate — no silent wrong data),
-            // but the typed relay error beats a task-level
-            // FileNotFound. Cost: one exists() per statement,
-            // O(1) against the O(statement-touched dirs) rebuild.
-            if (fs.exists(new Path(p, RelayMarker))) failRelay(root)
-            return idx
-          case prev =>
-            // One explicit marker probe per REBUILD (the fingerprint
-            // path reads it off the listing it already pays for; this
-            // path exists to skip that listing on hits).
-            if (fs.exists(new Path(p, RelayMarker))) failRelay(root)
-            val dc = dirCaches.getOrElseUpdate(root,
-              new org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache)
-            // FULLY QUALIFIED paths throughout — cache keys,
-            // invalidation keys, root paths AND basePath: partition
-            // inference compares leaf-dir parents against basePath by
-            // Path equality, and an unqualified "scheme:/x" vs a
-            // qualified "scheme:///x" SILENTLY yields an empty
-            // partition spec — no bucket column, no pruning (caught by
-            // the RPC probe: a point read footer-read all 68k files);
-            // an unqualified INVALIDATION key likewise silently
-            // no-ops against qualified entries and stale listings
-            // serve swapped-away files (caught by the suite).
-            val qp = fs.makeQualified(p)
-            prev match {
-              case Some((oldK, _)) if oldK.startsWith("v:") =>
-                dirDiff(oldK.stripPrefix("v:"), v) match {
-                  case Some(dirs) => dirs.foreach(d =>
-                    dc.invalidate(new Path(qp, d)))
-                  case None => dc.invalidateAll() // unknown: list all
-                }
-              case _ =>
-                // Fingerprint-keyed predecessor, post-clear, or first
-                // build: the dir cache's provenance is unknown — safe
-                // only if everything re-lists.
-                dc.invalidateAll()
-            }
-            val roots = (0 until buckets)
-              .map(i => new Path(qp, s"${BucketPruning.BucketCol}=$i"))
-            val idx = org.apache.spark.sql.GraftSqlBridge.fileIndex(
-              spark, roots, Map("basePath" -> qp.toString),
-              Some(schema), dc)
-            // Negative-cache dirs the listing found absent, or every
-            // rebuild re-probes each missing bucket dir.
-            roots.foreach(r =>
-              if (dc.getLeafFiles(r).isEmpty)
-                dc.putLeafFiles(r, Array.empty))
-            // Inference-failure guard: files present but no bucket
-            // partition column means every downstream layer silently
-            // loses pruning AND reads bucket as null — fail loudly.
-            if (idx.partitionSpec().partitionColumns.isEmpty &&
-                idx.allFiles().nonEmpty)
-              throw new IllegalStateException(
-                s"$root: bucket partition inference failed on the " +
-                  "version-keyed listing (basePath mismatch?)")
-            cache.put(root, (key, idx))
-            if (cache.size > 256) cache.clear()
-            return idx
-        }
-      case _ => // fall through to the mtime fingerprint
-    }
-    // getUri.getScheme, not getScheme: the FileSystem base class
-    // default for the latter THROWS UnsupportedOperationException.
-    val cacheable = enabled &&
-      MtimeSchemes.contains(
-        Option(fs.getUri.getScheme).getOrElse("").toLowerCase)
-    if (!cacheable) {
-      if (fs.exists(new Path(p, RelayMarker))) failRelay(root)
-      return new InMemoryFileIndex(spark, Seq(p), Map.empty, Some(schema))
-    }
-    val (fp, lastWrite, relaying) = fingerprint(fs, p)
-    if (relaying) failRelay(root)
-    val quiescent =
-      System.currentTimeMillis() - lastWrite > FreshnessGuardMs
-    cache.get(root) match {
-      case Some((f, idx)) if f == s"f:$fp" && quiescent => idx
-      case _ =>
-        val idx = new InMemoryFileIndex(spark, Seq(new Path(root)),
-          Map.empty, Some(schema))
-        if (quiescent) cache.put(root, (s"f:$fp", idx))
-        else cache.remove(root)
-        // Bound the cache under table churn (temp warehouses, drops):
-        // entries for dead roots are never hit again, so a hard cap
-        // with full reset is enough — the next queries re-warm it.
-        if (cache.size > 256) cache.clear()
-        idx
-    }
-  }
-
-  /** Drop a table's cached listing (DROP TABLE / DETACH). */
-  def invalidate(root: String): Unit = {
-    cache.remove(root)
-    dirCaches.remove(root)
-    ()
-  }
-
   /** One published data file, as the INSERT publish path knows it —
     * enough to reconstruct the FileStatus a re-listing would return
     * (length/blockSize ride the staged status; rename preserves them
@@ -647,76 +637,6 @@ object ColocatedFileIndex {
     * re-read, never correctness). */
   final case class AddedFile(dir: String, name: String, len: Long,
       blockSize: Long, mtimeMs: Long)
-
-  /** Advance a table's VERSION-KEYED cache entry in place after a
-    * commit whose added files the caller already knows (the INSERT
-    * publish loop holds every staged status it renames): append the
-    * statuses to the per-dir cache and rebuild the index from it
-    * under the new key — ZERO listing RPCs, where even the
-    * directory-incremental rebuild re-lists every touched dir (a
-    * high-k INSERT touches ~all of them: measured 12.2k of the 1k-row
-    * INSERT's 22.6k FileSystem ops were exactly this re-listing —
-    * round-14 verdict item 3).
-    *
-    * Sound only when the cached entry is keyed by `expectedBase` (the
-    * manifest this statement's commit composed against): a peer
-    * commit interleaving between our base and our publish means the
-    * cached listing may miss the peer's files — return false and let
-    * the caller's normal rebuild path (manifest-diff-driven) handle
-    * it. Dirs the cache never listed stay absent and re-list lazily
-    * on the rebuild this call performs. */
-  def advance(spark: SparkSession, root: String, schema: StructType,
-      expectedBase: Option[String], newKey: String, buckets: Int,
-      added: Seq[AddedFile]): Boolean = {
-    val enabled = spark.conf.get(EnabledConf, "true").toBoolean
-    if (!enabled || buckets <= 0 || expectedBase.isEmpty) return false
-    if (!cache.get(root).exists(_._1 == s"v:${expectedBase.get}"))
-      return false
-    val dc = dirCaches.getOrElse(root, return false)
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // A relay marker here means a REBUCKET started AFTER our commit
-    // already succeeded (advance runs post-commit): throwing would
-    // make a COMMITTED statement surface as a failure — inviting a
-    // retry that duplicates rows — so the rotation is merely REFUSED:
-    // drop the cached entry and let the next read's rebuild path see
-    // the marker and report the relay (advisor, round 15).
-    if (fs.exists(new Path(p, RelayMarker))) { invalidate(root); return false }
-    val qp = fs.makeQualified(p)
-    added.groupBy(_.dir).foreach { case (dir, files) =>
-      val dp = new Path(qp, dir)
-      dc.getLeafFiles(dp) match {
-        case Some(existing) =>
-          // Dedupe by name: a concurrent same-JVM reader that saw the
-          // new manifest pointer may have re-listed this dir (already
-          // containing the just-renamed file) into the shared per-dir
-          // cache between our key check and here — a plain append
-          // would then double-count the file's rows silently
-          // (advisor, round 15).
-          val names = files.iterator.map(_.name).toSet
-          val sts = files.map(f => new org.apache.hadoop.fs.FileStatus(
-            f.len, false, 1, f.blockSize, f.mtimeMs,
-            new Path(dp, f.name))).toArray
-          dc.putLeafFiles(dp,
-            existing.filterNot(e => names.contains(e.getPath.getName)) ++ sts)
-        case None => () // never listed: the rebuild lists it lazily
-      }
-    }
-    val roots = (0 until buckets)
-      .map(i => new Path(qp, s"${BucketPruning.BucketCol}=$i"))
-    val idx = org.apache.spark.sql.GraftSqlBridge.fileIndex(
-      spark, roots, Map("basePath" -> qp.toString), Some(schema), dc)
-    roots.foreach(r =>
-      if (dc.getLeafFiles(r).isEmpty) dc.putLeafFiles(r, Array.empty))
-    if (idx.partitionSpec().partitionColumns.isEmpty &&
-        idx.allFiles().nonEmpty)
-      throw new IllegalStateException(
-        s"$root: bucket partition inference failed on the " +
-          "version-keyed listing (basePath mismatch?)")
-    cache.put(root, (s"v:$newKey", idx))
-    if (cache.size > 256) cache.clear()
-    true
-  }
 }
 
 /** Wraps the delegate parquet scan: re-packs its planned file splits so

@@ -141,23 +141,41 @@ class ColocatedCatalogSpec extends SparkTestBase {
     assert(spark.table("mppcat.li").count() == 2000)
   }
 
-  test("listing cache honors the graft.listingCache.enabled kill-switch") {
-    engine
-    val root = s"${engine.warehouse}/data/li"
+  test("the engine's cached, version-keyed listing holds exactly the " +
+      "files of a fresh uncached listing, before and after an INSERT " +
+      "and an UPDATE") {
+    engine.sql("CREATE TABLE lpar(k BIGINT, q DOUBLE) " +
+      "PARTITION BY (k) WITH BUCKETS 4")
+    engine.insertInto("lpar", spark.range(0, 500).toDF("k")
+      .withColumn("q", col("k") * 0.5))
+    val root = s"${engine.warehouse}/data/lpar"
     val schema = org.apache.spark.sql.types.StructType
       .fromDDL("k BIGINT, q DOUBLE, bucket INT")
-    import graft.sources.ColocatedFileIndex
-    Thread.sleep(2100) // pass the freshness guard so the cache CAN serve
-    val a = ColocatedFileIndex.get(spark, root, schema)
-    val b = ColocatedFileIndex.get(spark, root, schema)
-    assert(a eq b, "expected the cached index when enabled and quiescent")
-    spark.conf.set(ColocatedFileIndex.EnabledConf, "false")
-    try {
-      val c = ColocatedFileIndex.get(spark, root, schema)
-      assert(!(c eq b), "kill-switch must bypass the cached index")
-      val d = ColocatedFileIndex.get(spark, root, schema)
-      assert(!(c eq d), "kill-switch must force a fresh listing per call")
-    } finally spark.conf.unset(ColocatedFileIndex.EnabledConf)
+    def cached() = {
+      val t = engine.catalog.state.liveTable("lpar").get
+      engine.listingCache.get(spark, root, schema,
+        engine.listingVersionKey(t), t.buckets, engine.manifestDirDiff)
+    }
+    def files(idx: org.apache.spark.sql.execution.datasources.FileIndex) =
+      idx.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath)
+        .toSet
+    def check(rows: Long): Unit = {
+      assert(spark.table("mppcat.lpar").count() == rows) // warms the cache
+      val c = cached()
+      assert(c eq cached(), "expected the cached index")
+      val fresh = new org.apache.spark.sql.execution.datasources
+        .InMemoryFileIndex(spark, Seq(new org.apache.hadoop.fs.Path(root)),
+          Map.empty, Some(schema))
+      assert(files(fresh).nonEmpty)
+      assert(files(c) == files(fresh))
+    }
+    check(500)
+    engine.insertInto("lpar", spark.range(500, 600).toDF("k")
+      .withColumn("q", lit(1.0)))
+    check(600)
+    engine.sql("UPDATE lpar SET q = -1 WHERE k = 7")
+    check(600)
+    assert(spark.table("mppcat.lpar").filter(col("q") === -1).count() == 1)
   }
 
   test("NULL partition keys land in the deterministic null bucket and read back") {

@@ -3,17 +3,16 @@ package graft.mpp
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.sources.ColocatedFileIndex
 
-/** Pins the manifest-pointer-keyed listing cache (round 14): cache
-  * hits are zero-listing identity hits, commits rotate the key and the
-  * rebuild picks up exactly the committed state, peer commits from a
-  * SECOND engine invalidate through the published manifest diff, and
-  * tables without a manifest-complete epoch (never written, or left by
-  * an older build's manifest-less writes) fall back to the mtime
-  * fingerprint. The RPC economics (29 vs 81,951 RPCs per pruned point
-  * read) are recorded in BASELINE §24; this spec pins the CORRECTNESS
-  * contract the economics ride on. */
+/** Pins the manifest-pointer-keyed listing cache: cache hits are
+  * zero-listing identity hits, commits rotate the key and the rebuild
+  * picks up exactly the committed state, peer commits from a SECOND
+  * engine invalidate through the published manifest diff, every table
+  * has a pointer from CREATE on (a table from an older build's catalog
+  * is upgraded to one), and each engine owns its cache. The RPC
+  * economics (29 vs 81,951 RPCs per pruned point read) are recorded in
+  * BASELINE §24; this spec pins the CORRECTNESS contract the economics
+  * ride on. */
 class ListingCacheSpec extends SparkTestBase {
 
   private def freshEngine(): MppEngine =
@@ -28,13 +27,12 @@ class ListingCacheSpec extends SparkTestBase {
       .withColumn("v", col("k") * 1.0))
     val root = s"${e.warehouse}/data/lc"
     val t = e.catalog.state.liveTable("lc").get
-    val key = e.catalog.state.tableManifests.get(t.tableOid.toString)
-    assert(key.isDefined)
+    val key = e.catalog.state.tableManifests(t.tableOid.toString)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "k BIGINT, v DOUBLE, bucket INT")
-    val i1 = ColocatedFileIndex.get(spark, root, schema, key, 4,
+    val i1 = e.listingCache.get(spark, root, schema, key, 4,
       e.manifestDirDiff)
-    val i2 = ColocatedFileIndex.get(spark, root, schema, key, 4,
+    val i2 = e.listingCache.get(spark, root, schema, key, 4,
       e.manifestDirDiff)
     assert(i1 eq i2, "same pointer must be an identity cache hit")
     // The index exposes the bucket partition column (pruning rides it).
@@ -43,9 +41,9 @@ class ListingCacheSpec extends SparkTestBase {
     // Commit → pointer rotates → rebuild sees the new rows.
     e.insertInto("lc", spark.range(500, 520).toDF("k")
       .withColumn("v", lit(1.0)))
-    val key2 = e.catalog.state.tableManifests.get(t.tableOid.toString)
+    val key2 = e.catalog.state.tableManifests(t.tableOid.toString)
     assert(key2 != key, "a commit must advance the pointer")
-    val i3 = ColocatedFileIndex.get(spark, root, schema, key2, 4,
+    val i3 = e.listingCache.get(spark, root, schema, key2, 4,
       e.manifestDirDiff)
     assert(!(i3 eq i1))
     assert(i3.allFiles().size > i1.allFiles().size)
@@ -56,7 +54,7 @@ class ListingCacheSpec extends SparkTestBase {
     java.nio.file.Files.createDirectories(bucketDir)
     java.nio.file.Files.write(bucketDir.resolve("part-stray.parquet"),
       Array.fill[Byte](16)(1))
-    val i4 = ColocatedFileIndex.get(spark, root, schema, key2, 4,
+    val i4 = e.listingCache.get(spark, root, schema, key2, 4,
       e.manifestDirDiff)
     assert(i4 eq i3, "an uncommitted stray must not invalidate")
     java.nio.file.Files.delete(bucketDir.resolve("part-stray.parquet"))
@@ -95,22 +93,22 @@ class ListingCacheSpec extends SparkTestBase {
       .withColumn("v", col("k") * 1.0))
     val root = s"${e.warehouse}/data/lrm"
     val t = e.catalog.state.liveTable("lrm").get
-    val key = e.catalog.state.tableManifests.get(t.tableOid.toString)
+    val key = e.catalog.state.tableManifests(t.tableOid.toString)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "k BIGINT, v DOUBLE, bucket INT")
-    val i1 = ColocatedFileIndex.get(spark, root, schema, key, 2,
+    val i1 = e.listingCache.get(spark, root, schema, key, 2,
       e.manifestDirDiff) // warm the cache
     val marker = java.nio.file.Paths.get(root, ".rebucket.json")
     java.nio.file.Files.write(marker, "{}".getBytes)
     try {
       val ex = intercept[IllegalStateException] {
-        ColocatedFileIndex.get(spark, root, schema, key, 2,
+        e.listingCache.get(spark, root, schema, key, 2,
           e.manifestDirDiff)
       }
       assert(ex.getMessage.contains("REBUCKET relay"), ex.getMessage)
     } finally java.nio.file.Files.delete(marker)
     // Marker gone → the same pointer serves the warm hit again.
-    assert(ColocatedFileIndex.get(spark, root, schema, key, 2,
+    assert(e.listingCache.get(spark, root, schema, key, 2,
       e.manifestDirDiff) eq i1)
   }
 
@@ -124,32 +122,32 @@ class ListingCacheSpec extends SparkTestBase {
       .withColumn("v", col("k") * 1.0))
     val root = s"${e.warehouse}/data/lad"
     val t = e.catalog.state.liveTable("lad").get
-    val key1 = e.catalog.state.tableManifests.get(t.tableOid.toString)
+    val key1 = e.catalog.state.tableManifests(t.tableOid.toString)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "k BIGINT, v DOUBLE, bucket INT")
-    val i1 = ColocatedFileIndex.get(spark, root, schema, key1, 2,
+    val i1 = e.listingCache.get(spark, root, schema, key1, 2,
       e.manifestDirDiff)
     // A base that is not the cached key: refused (a peer commit
     // interleaved — the cached listing may miss its files).
-    assert(!ColocatedFileIndex.advance(spark, root, schema,
-      Some("not-the-cached-base"), "k2", 2, Nil))
-    assert(ColocatedFileIndex.get(spark, root, schema, key1, 2,
+    assert(!e.listingCache.advance(spark, root, schema,
+      "not-the-cached-base", "k2", 2, Nil))
+    assert(e.listingCache.get(spark, root, schema, key1, 2,
       e.manifestDirDiff) eq i1, "a refused advance must not disturb")
     // Matching base: in-place rotation. The sentinel diff throws if a
     // rebuild runs — the rotated entry must serve as an identity hit.
-    val added = Seq(ColocatedFileIndex.AddedFile(
+    val added = Seq(graft.sources.ColocatedFileIndex.AddedFile(
       "bucket=0", "part-synthetic.parquet", 123L, 1L << 20, 42L))
-    assert(ColocatedFileIndex.advance(spark, root, schema, key1,
+    assert(e.listingCache.advance(spark, root, schema, key1,
       "synthetic-key", 2, added))
-    val i2 = ColocatedFileIndex.get(spark, root, schema,
-      Some("synthetic-key"), 2,
+    val i2 = e.listingCache.get(spark, root, schema,
+      "synthetic-key", 2,
       (_, _) => throw new AssertionError(
         "rebuild ran — advance() did not pre-rotate the key"))
     assert(!(i2 eq i1))
     assert(i2.allFiles().exists(f =>
       f.getPath.getName == "part-synthetic.parquet" && f.getLen == 123L),
       "the advanced index must contain the appended status")
-    ColocatedFileIndex.invalidate(root) // drop the synthetic entry
+    e.listingCache.invalidate(root) // drop the synthetic entry
     // End-to-end: with a warm cache, a real INSERT goes through the
     // advance path and its rows are immediately visible.
     assert(e.table("lad").count() == 20)
@@ -169,27 +167,27 @@ class ListingCacheSpec extends SparkTestBase {
       .withColumn("v", col("k") * 1.0))
     val root = s"${e.warehouse}/data/ladd"
     val t = e.catalog.state.liveTable("ladd").get
-    val key1 = e.catalog.state.tableManifests.get(t.tableOid.toString)
+    val key1 = e.catalog.state.tableManifests(t.tableOid.toString)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "k BIGINT, v DOUBLE, bucket INT")
-    ColocatedFileIndex.get(spark, root, schema, key1, 2, e.manifestDirDiff)
-    val added = Seq(ColocatedFileIndex.AddedFile(
+    e.listingCache.get(spark, root, schema, key1, 2, e.manifestDirDiff)
+    val added = Seq(graft.sources.ColocatedFileIndex.AddedFile(
       "bucket=0", "part-racedup.parquet", 99L, 1L << 20, 7L))
     // First advance puts the file in the per-dir cache — exactly the
     // state a racing reader's re-list would leave behind. The second
     // advance then merges the SAME status again; without name-dedupe
     // the index would list it twice.
-    assert(ColocatedFileIndex.advance(spark, root, schema, key1,
+    assert(e.listingCache.advance(spark, root, schema, key1,
       "race-k2", 2, added))
-    assert(ColocatedFileIndex.advance(spark, root, schema,
-      Some("race-k2"), "race-k3", 2, added))
-    val idx = ColocatedFileIndex.get(spark, root, schema,
-      Some("race-k3"), 2,
+    assert(e.listingCache.advance(spark, root, schema,
+      "race-k2", "race-k3", 2, added))
+    val idx = e.listingCache.get(spark, root, schema,
+      "race-k3", 2,
       (_, _) => throw new AssertionError("rebuild ran"))
     assert(idx.allFiles().count(
       _.getPath.getName == "part-racedup.parquet") == 1,
       "the merged listing must contain the file exactly once")
-    ColocatedFileIndex.invalidate(root)
+    e.listingCache.invalidate(root)
   }
 
   test("advance(): a relay marker REFUSES the rotation instead of " +
@@ -203,69 +201,135 @@ class ListingCacheSpec extends SparkTestBase {
       .withColumn("v", col("k") * 1.0))
     val root = s"${e.warehouse}/data/ladr"
     val t = e.catalog.state.liveTable("ladr").get
-    val key1 = e.catalog.state.tableManifests.get(t.tableOid.toString)
+    val key1 = e.catalog.state.tableManifests(t.tableOid.toString)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "k BIGINT, v DOUBLE, bucket INT")
-    ColocatedFileIndex.get(spark, root, schema, key1, 2, e.manifestDirDiff)
+    e.listingCache.get(spark, root, schema, key1, 2, e.manifestDirDiff)
     val marker = java.nio.file.Paths.get(root, ".rebucket.json")
     java.nio.file.Files.write(marker, "{}".getBytes)
     try {
       // No throw; refused; the cached entry is dropped so the next
       // read takes the rebuild path (which reports the relay).
-      assert(!ColocatedFileIndex.advance(spark, root, schema, key1,
+      assert(!e.listingCache.advance(spark, root, schema, key1,
         "relay-k2", 2, Nil))
       val ex = intercept[IllegalStateException] {
-        ColocatedFileIndex.get(spark, root, schema, key1, 2,
+        e.listingCache.get(spark, root, schema, key1, 2,
           e.manifestDirDiff)
       }
       assert(ex.getMessage.contains("REBUCKET relay"))
     } finally java.nio.file.Files.delete(marker)
   }
 
-  test("a TT-OFF interlude (e.g. a PEER writing without time travel) " +
-      "clears the manifest-complete epoch and degrades the key to the " +
-      "fingerprint: rows committed without manifests become visible " +
-      "instead of the stale pointer serving old listings forever") {
+  test("a live table without a manifest pointer (a catalog an older " +
+      "build wrote) is upgraded at its first read: one full listing " +
+      "of its bucket dirs, committed in one new catalog version, with " +
+      "every row visible") {
     val e = freshEngine()
     e.sql("CREATE TABLE lti(k BIGINT, v DOUBLE) PARTITION BY (k) " +
       "WITH BUCKETS 2")
     e.insertInto("lti", spark.range(0, 100).toDF("k")
       .withColumn("v", col("k") * 1.0))
-    assert(e.table("lti").count() == 100) // warm, version-keyed
-    // An older build's manifest-less write: it cleared the epoch, then
-    // moved files in without advancing the pointer.
-    OutOfBand.clearEpoch(e, "lti")
-    OutOfBand.writeRows(e, "lti", spark.range(1000, 1010).toDF("k")
-      .withColumn("v", lit(2.0)))
-    // Round-14 shape: the unchanged pointer served the 100-row listing
-    // indefinitely. Epoch-gated, the key falls back to the fingerprint
-    // and the out-of-band rows are visible.
-    assert(e.table("lti").count() == 110)
     val oid = e.catalog.state.liveTable("lti").get.tableOid.toString
-    assert(!e.catalog.state.manifestEpochs.contains(oid))
-    // The next commit re-establishes the epoch and the keyed path.
+    // What an older build left: rows in the bucket dirs, no pointer.
+    e.catalog.mutate(s => s.copy(tableManifests = s.tableManifests - oid))
+    val v0 = e.catalog.currentVersionOnDisk
+    assert(e.table("lti").count() == 100)
+    assert(e.catalog.currentVersionOnDisk == v0 + 1,
+      "the upgrade must be exactly one catalog version")
+    val root = java.nio.file.Paths.get(e.warehouse, "data", "lti")
+    val live = (0 until 2).flatMap { b =>
+      val d = root.resolve(s"bucket=$b")
+      val s = java.nio.file.Files.list(d)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet")).map(n => s"bucket=$b/$n").toVector
+      } finally s.close()
+    }.toSet
+    val m = e.catalog.state.tableManifests(oid)
+    assert(e.loadManifest(m).get.toSet == live)
+    // Upgraded once: later reads commit nothing, writes compose onto it.
+    assert(e.table("lti").count() == 100)
+    assert(e.catalog.currentVersionOnDisk == v0 + 1)
     e.insertInto("lti", spark.range(2000, 2005).toDF("k")
       .withColumn("v", lit(3.0)))
-    assert(e.catalog.state.manifestEpochs.contains(oid))
-    assert(e.table("lti").count() == 115)
+    assert(e.table("lti").count() == 105)
+    assert(e.tableAsOf("lti", v0 + 1).count() == 100)
   }
 
-  test("a never-written table reads through the mtime fingerprint; " +
-      "its first INSERT sets the manifest pointer and the epoch") {
+  test("a freshly created table has a manifest pointer and reads 0 " +
+      "rows through the version-keyed cache; its first INSERT " +
+      "composes a delta onto the empty manifest") {
     val e = freshEngine()
     e.sql("CREATE TABLE lo(k BIGINT, v DOUBLE) PARTITION BY (k) " +
       "WITH BUCKETS 2")
     val t = e.catalog.state.liveTable("lo").get
-    val oid = t.tableOid.toString
-    assert(e.listingVersionKey(t).isEmpty)
+    val created = e.catalog.state.tableManifests(t.tableOid.toString)
+    assert(e.listingVersionKey(t) == created)
+    assert(e.loadManifest(created).contains(Vector.empty))
     assert(e.table("lo").count() == 0)
     e.insertInto("lo", spark.range(0, 10).toDF("k")
       .withColumn("v", col("k") * 1.0))
-    assert(e.catalog.state.tableManifests.contains(oid))
-    assert(e.catalog.state.manifestEpochs.contains(oid))
+    val first = e.catalog.state.tableManifests(t.tableOid.toString)
+    assert(first.endsWith(".d1.json"), s"not a delta on the empty base: $first")
     assert(e.table("lo").count() == 10)
     e.insertInto("lo", spark.range(10, 25).toDF("k")
       .withColumn("v", lit(1.0)))
     assert(e.table("lo").count() == 25)
+  }
+
+  test("CREATE sets the manifest pointer in the table's own catalog " +
+      "version; a snapshot carrying an older build's manifestEpochs " +
+      "loads and reads back; two engines keep separate listing caches") {
+    val e1 = freshEngine()
+    val v0 = e1.catalog.currentVersionOnDisk
+    e1.sql("CREATE TABLE lw(k BIGINT, v DOUBLE) PARTITION BY (k) " +
+      "WITH BUCKETS 2")
+    assert(e1.catalog.currentVersionOnDisk == v0 + 1,
+      "CREATE must stay one catalog version")
+    val t1 = e1.catalog.state.liveTable("lw").get
+    val snap = e1.catalog.snapshotAt(v0 + 1).get
+    assert(snap.tableManifests.contains(t1.tableOid.toString))
+    e1.insertInto("lw", spark.range(0, 40).toDF("k")
+      .withColumn("v", col("k") * 1.0))
+    // An older build's snapshot format: the same JSON plus a
+    // `manifestEpochs` map. It must load, and VERSION AS OF must read
+    // that version exactly.
+    val v1 = e1.catalog.currentVersionOnDisk
+    val snapFile = java.nio.file.Paths.get(e1.warehouse, "_mpp_catalog",
+      f"v$v1%05d.json")
+    val json = new String(java.nio.file.Files.readAllBytes(snapFile), "UTF-8")
+    assert(json.endsWith("}"), json)
+    java.nio.file.Files.write(snapFile, (json.dropRight(1) +
+      s""","manifestEpochs":{"${t1.tableOid}":1700000000000}}""")
+      .getBytes("UTF-8"))
+    val reopened = new MppEngine(spark, e1.warehouse)
+    assert(reopened.catalog.snapshotAt(v1).isDefined)
+    assert(reopened.tableAsOf("lw", v1).orderBy("k").collect().toSeq ==
+      e1.table("lw").orderBy("k").collect().toSeq)
+    assert(reopened.table("lw").count() == 40)
+    // Two engines on two warehouses: separate caches. One engine
+    // invalidating the other's table root leaves the other's cached
+    // index untouched, and it never serves the other's entry.
+    val a = freshEngine()
+    val b = freshEngine()
+    Seq(a, b).foreach { e =>
+      e.sql("CREATE TABLE lx(k BIGINT, v DOUBLE) PARTITION BY (k) " +
+        "WITH BUCKETS 2")
+      e.insertInto("lx", spark.range(0, 10).toDF("k")
+        .withColumn("v", col("k") * 1.0))
+    }
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "k BIGINT, v DOUBLE, bucket INT")
+    val tb = b.catalog.state.liveTable("lx").get
+    val rootB = s"${b.warehouse}/data/lx"
+    val keyB = b.catalog.state.tableManifests(tb.tableOid.toString)
+    val idxB = b.listingCache.get(spark, rootB, schema, keyB, 2,
+      b.manifestDirDiff)
+    a.listingCache.invalidate(rootB)
+    assert(b.listingCache.get(spark, rootB, schema, keyB, 2,
+      b.manifestDirDiff) eq idxB)
+    assert(!(a.listingCache.get(spark, rootB, schema, keyB, 2,
+      b.manifestDirDiff) eq idxB))
   }
 }

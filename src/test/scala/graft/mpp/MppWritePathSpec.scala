@@ -368,8 +368,7 @@ class MppWritePathSpec extends SparkTestBase {
       java.nio.file.Files.delete(victim)
       java.nio.file.Files.move(saved, victim)
     }
-    graft.sources.ColocatedFileIndex.invalidate(
-      root.toString)
+    e.listingCache.invalidate(root.toString)
     // No partial rows: the moves that succeeded before the failure
     // were undone, so the failed statement contributed NOTHING.
     assert(e.table("ip").filter(col("v") === -1.0).count() == 0L,

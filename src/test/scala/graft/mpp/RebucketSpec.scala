@@ -118,13 +118,11 @@ class RebucketSpec extends SparkTestBase {
     assert(e.tableAsOf("rg",
       e.catalog.currentVersionOnDisk).count() == 500)
     assert(e.explainShards(e.table("rg").filter("k = 7")) == "Shards: 1/8")
-    // End-to-end data-safety: an aggressive stray-sweeping vacuum
-    // finds nothing unreferenced among the restored files.
-    spark.conf.set("graft.vacuum.sweepStrays", "true")
-    try {
-      e.vacuumTimeTravel(graceMs = 0L)
-      assert(e.table("rg").count() == 500)
-    } finally spark.conf.unset("graft.vacuum.sweepStrays")
+    // End-to-end data-safety: the stray-sweeping default vacuum, with
+    // no grace window, finds nothing unreferenced among the restored
+    // files.
+    e.vacuumTimeTravel(graceMs = 0L)
+    assert(e.table("rg").count() == 500)
   }
 
   test("REBUCKET commits the new bucket count, its shard rows and a " +
@@ -254,11 +252,14 @@ class RebucketSpec extends SparkTestBase {
     }
     // Raw bucket-directory scans (the DSv2/co-located path) have no
     // manifest to pin to — loud failure, never a double/zero count.
-    graft.sources.ColocatedFileIndex.invalidate(root.toString)
+    e.listingCache.invalidate(root.toString)
+    val t = e.catalog.state.liveTable("rr").get
     val exS = intercept[IllegalStateException] {
-      graft.sources.ColocatedFileIndex.get(spark, root.toString,
+      e.listingCache.get(spark, root.toString,
         org.apache.spark.sql.types.StructType.fromDDL(
-          "k BIGINT, v DOUBLE"))
+          "k BIGINT, v DOUBLE, bucket INT"),
+        e.catalog.state.tableManifests(t.tableOid.toString), t.buckets,
+        e.manifestDirDiff)
     }
     assert(exS.getMessage.contains("REBUCKET relay"), exS.getMessage)
     // Relay completes: aside archives... here, moves back; marker off.
@@ -316,7 +317,6 @@ class RebucketSpec extends SparkTestBase {
     }
     java.nio.file.Files.write(root.resolve(".rebucket.json"),
       """{"from":3,"to":6}""".getBytes("UTF-8"))
-    graft.sources.ColocatedFileIndex.invalidate(root.toString)
     // A fresh engine on this warehouse boots (poisoning is lazy) and
     // serves the LAST COMMITTED version — exact rows, correct pruned
     // point-reads — while writes stay disabled.
@@ -347,25 +347,26 @@ class RebucketSpec extends SparkTestBase {
     assert(e2.table("rx").count() == 301)
   }
 
-  test("a relay marker on a never-written table has no version to " +
-      "pin to — reads fail LOUDLY at execution (never mispruned rows), " +
-      "and engine bootstrap over the poisoned table still succeeds") {
+  test("a relay marker on a never-written table pins reads to its " +
+      "empty created version (0 rows, never mispruned rows), writes " +
+      "fail loudly, and engine bootstrap over the table succeeds") {
     val e = freshEngine()
     e.sql("CREATE TABLE rto(k BIGINT, v DOUBLE) PARTITION BY (k) " +
       "WITH BUCKETS 2")
     val oid = e.catalog.state.liveTable("rto").get.tableOid.toString
-    assert(!e.catalog.state.tableManifests.contains(oid))
+    assert(e.loadManifest(e.catalog.state.tableManifests(oid))
+      .contains(Vector.empty))
     val root = java.nio.file.Paths.get(e.warehouse, "data", "rto")
     java.nio.file.Files.createDirectories(root)
     java.nio.file.Files.write(root.resolve(".rebucket.json"),
       """{"from":2,"to":4}""".getBytes("UTF-8"))
     val e2 = new MppEngine(spark, e.warehouse) // bootstrap survives
-    val ex = intercept[Exception] { e2.table("rto").count() }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Nil else t +: chain(t.getCause)
-    assert(chain(ex).exists(
-      _.getMessage.contains("no committed manifest")),
-      s"wrong failure: $ex")
+    assert(e2.table("rto").count() == 0)
+    val exW = intercept[IllegalStateException] {
+      e2.insertInto("rto", spark.range(0, 10).toDF("k")
+        .withColumn("v", lit(1.0)))
+    }
+    assert(exW.getMessage.contains("REBUCKET relay"), exW.getMessage)
   }
 
   test("tableChanges across a REBUCKET forces the single-pass diff: " +

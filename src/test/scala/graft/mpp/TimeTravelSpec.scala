@@ -663,16 +663,14 @@ class TimeTravelSpec extends SparkTestBase {
     assert(manifest.distinct == manifest, "duplicate manifest entries")
   }
 
-  test("VACUUM sweeps post-epoch stray live files BY DEFAULT (the " +
-      "staged INSERT's driver-crash residue), while files predating " +
-      "the manifest-complete epoch — or any stray after a " +
-      "time-travel-OFF interlude — survive without the explicit " +
-      "operator assertion") {
+  test("VACUUM sweeps stray live files BY DEFAULT (the staged " +
+      "INSERT's driver-crash residue) once they are past the grace " +
+      "window, and leaves committed rows untouched") {
     val e = freshEngine()
     e.sql("CREATE TABLE sv(k BIGINT, v DOUBLE) PARTITION BY (k) " +
       "WITH BUCKETS 2")
     e.insertInto("sv", spark.range(0, 20).toDF("k")
-      .withColumn("v", col("k") * 1.0)) // first commit sets the epoch
+      .withColumn("v", col("k") * 1.0))
     def bucketDir = {
       val d = java.nio.file.Paths.get(e.warehouse, "data", "sv")
       val s = java.nio.file.Files.list(d)
@@ -683,19 +681,18 @@ class TimeTravelSpec extends SparkTestBase {
             p.getFileName.toString.contains("=")).toSeq.head
       } finally s.close()
     }
-    Thread.sleep(20) // stray mtime strictly after the epoch
     // Crash residue: a parquet-shaped file in a live bucket dir that
     // NO manifest references (a driver death between the staged
-    // INSERT's bucket moves and commitManifest — SURVEY §8). Written
-    // AFTER the epoch, so "unreferenced" is authoritative: swept by
-    // default, no conf needed (round-13 verdict item 7).
+    // INSERT's bucket moves and commitManifest — SURVEY §8). Every
+    // table has a manifest from CREATE on, so "unreferenced" is
+    // authoritative: swept by default, no conf needed.
     val stray = bucketDir.resolve("part-stray-crash-residue.parquet")
     java.nio.file.Files.write(stray, Array.fill[Byte](128)(1))
     val st1 = e.vacuumTimeTravel(graceMs = 0L)
     assert(st1.strayLiveFiles == 1L && st1.strayLiveBytes == 128L, st1)
     assert(st1.filesDeleted >= 1L, st1)
     assert(!java.nio.file.Files.exists(stray),
-      "post-epoch stray must sweep by default")
+      "a stray past the grace window must sweep by default")
     assert(e.table("sv").count() == 20L) // committed data untouched
     // A file younger than the grace window (an in-flight peer INSERT's
     // moved-but-uncommitted output) is never reported, never swept.
@@ -705,47 +702,13 @@ class TimeTravelSpec extends SparkTestBase {
     assert(st3.strayLiveFiles == 0L, st3)
     assert(java.nio.file.Files.exists(young))
     java.nio.file.Files.delete(young)
-    // Time-travel-OFF interlude, as an older build left it: no epoch,
-    // and data files no manifest references. The stale manifest can no
-    // longer classify live files, so the OFF-era data file is REPORTED
-    // as a stray but never swept by default (sweeping it would delete
-    // real rows).
-    OutOfBand.clearEpoch(e, "sv")
-    OutOfBand.writeRows(e, "sv", spark.range(100, 105).toDF("k")
-      .withColumn("v", lit(-1.0)))
-    val t = e.catalog.state.liveTable("sv").get
-    assert(!e.catalog.state.manifestEpochs.contains(t.tableOid.toString))
-    val stOff = e.vacuumTimeTravel(graceMs = 0L)
-    assert(stOff.strayLiveFiles >= 1L, stOff) // the OFF-era files
-    assert(e.table("sv").count() == 25L,
-      "no-epoch strays must survive the default sweep")
-    // The next commit re-establishes the epoch. OFF-era files
-    // predate it → still survive the default sweep; a fresh stray
-    // after it → sweeps again.
-    e.insertInto("sv", spark.range(200, 201).toDF("k")
-      .withColumn("v", lit(2.0)))
-    assert(e.catalog.state.manifestEpochs
-      .contains(t.tableOid.toString))
-    val stPre = e.vacuumTimeTravel(graceMs = 0L)
-    assert(e.table("sv").count() == 26L,
-      s"pre-epoch (OFF-era) files must survive: $stPre")
-    Thread.sleep(20)
+    // The SQL statement reports and sweeps the same way.
     val stray2 = bucketDir.resolve("part-stray-2.parquet")
     java.nio.file.Files.write(stray2, Array.fill[Byte](64)(1))
-    e.vacuumTimeTravel(graceMs = 0L)
-    assert(!java.nio.file.Files.exists(stray2),
-      "post-re-epoch stray must sweep by default")
-    // The explicit operator assertion still sweeps EVERYTHING
-    // unreferenced — including the OFF-era rows, which is exactly why
-    // it is an assertion ("time travel was on for the table's life").
     val row = e.sql("VACUUM RETAIN 0 HOURS").head()
-    assert(row.getAs[Long]("stray_live_files") >= 1L, row.toString)
-    try {
-      spark.conf.set("graft.vacuum.sweepStrays", "true")
-      e.vacuumTimeTravel(graceMs = 0L)
-      assert(e.table("sv").count() == 21L,
-        "the operator assertion sweeps pre-epoch strays too")
-    } finally spark.conf.unset("graft.vacuum.sweepStrays")
+    assert(row.getAs[Long]("stray_live_files") == 1L, row.toString)
+    assert(!java.nio.file.Files.exists(stray2))
+    assert(e.table("sv").count() == 20L)
   }
 
   // --- manifest delta log (format v2) ---------------------------------
