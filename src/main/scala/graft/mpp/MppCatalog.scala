@@ -72,14 +72,13 @@ final class MppCatalog(spark: SparkSession, val warehouse: String) {
   def rollback(): Unit = synchronized { staged = None }
 
   /** Re-align the cached state with the warehouse's published CURRENT
-    * when a PEER has committed since this engine last looked — one
-    * tiny pointer read per call (the same cost class as the listing
-    * fingerprint every scan already pays), a full snapshot load only
-    * when the version actually moved. Bucket count became MUTABLE
-    * with REBUCKET and schemas evolve via ALTER, so a pure READER on
-    * a second JVM must converge without waiting for its own next CAS
-    * conflict; inside a transaction the staged state stays pinned
-    * (begin()-time semantics, unchanged). */
+    * when a PEER has committed since this engine last looked: one
+    * CURRENT-pointer read per call, plus a full snapshot load only when
+    * the version moved. Bucket count became MUTABLE with REBUCKET and
+    * schemas evolve via ALTER, so a pure READER on a second JVM must
+    * converge without waiting for its own next CAS conflict; inside a
+    * transaction the staged state stays pinned (begin()-time
+    * semantics, unchanged). */
   private[mpp] def refreshIfStale(): Unit = synchronized {
     if (staged.isEmpty && committedVersion() != version) refreshFromDisk()
   }

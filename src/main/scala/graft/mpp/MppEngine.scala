@@ -4,8 +4,9 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, Filter, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -2694,6 +2695,28 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   // --- MERGE (capability superset: the reference has no MERGE — same
   // precedent as CTAS, which it rejects at mpp_catalog.cpp:109-112) ----
 
+  /** Per-row byte estimate of `df` for the merge broadcast decision:
+    * variable-width columns by their actual lengths (strings/binary by
+    * octet_length, arrays by element count × element width) plus a
+    * small per-object overhead, fixed-width columns by their Catalyst
+    * default size. Intentionally cheap and conservative-ish — the
+    * consumer compares the SUM against a ~120 MB bound where a 2×
+    * estimate error cannot turn a safe broadcast into an OOM. */
+  private def estRowBytes(df: DataFrame): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.types._
+    df.schema.fields.map { f =>
+      f.dataType match {
+        case StringType | BinaryType =>
+          coalesce(octet_length(col(f.name)).cast("long"), lit(0L)) +
+            lit(20L)
+        case at: ArrayType =>
+          coalesce(size(col(f.name)).cast("long"), lit(0L)) *
+            lit(math.max(at.elementType.defaultSize, 1).toLong) + lit(16L)
+        case dt => lit(dt.defaultSize.toLong)
+      }
+    }.reduceOption(_ + _).getOrElse(lit(8L))
+  }
+
   /** MERGE INTO … USING source ON target.pc = source.pc — the upsert
     * that completes the DSv2/dialect DML story: incremental corpus
     * ingestion is `MERGE INTO corpus USING batch ON fingerprint WHEN
@@ -2732,46 +2755,19 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * rows actually SELECT the same target row; we reject on duplicate
     * keys without evaluating clause conditions.) Insert-only merges
     * permit duplicates — each unmatched source row is a legal insert.
+    *
+    * `WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET …|DELETE`
+    * clauses (first-match-wins among themselves) act on target rows
+    * without a source match. They widen the rewrite to every bucket
+    * that holds such a row satisfying a clause condition: any bucket
+    * may, so the source keys alone cannot prune it (an empty source,
+    * e.g., updates/deletes every target row).
+    *
     * Returns updated + deleted + inserted row count. */
   def merge(name: String, source0: DataFrame,
       matched: Seq[MergeWhenMatched],
-      notMatched: Seq[MergeWhenNotMatched]): Long =
-    merge(name, source0, matched, notMatched, Nil)
-
-  /** Per-row byte estimate of `df` for the merge broadcast decision:
-    * variable-width columns by their actual lengths (strings/binary by
-    * octet_length, arrays by element count × element width) plus a
-    * small per-object overhead, fixed-width columns by their Catalyst
-    * default size. Intentionally cheap and conservative-ish — the
-    * consumer compares the SUM against a ~120 MB bound where a 2×
-    * estimate error cannot turn a safe broadcast into an OOM. */
-  private def estRowBytes(df: DataFrame): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types._
-    df.schema.fields.map { f =>
-      f.dataType match {
-        case StringType | BinaryType =>
-          coalesce(octet_length(col(f.name)).cast("long"), lit(0L)) +
-            lit(20L)
-        case at: ArrayType =>
-          coalesce(size(col(f.name)).cast("long"), lit(0L)) *
-            lit(math.max(at.elementType.defaultSize, 1).toLong) + lit(16L)
-        case dt => lit(dt.defaultSize.toLong)
-      }
-    }.reduceOption(_ + _).getOrElse(lit(8L))
-  }
-
-  /** Full-surface merge including `WHEN NOT MATCHED BY SOURCE [AND
-    * cond] THEN UPDATE SET …|DELETE` clauses (first-match-wins among
-    * themselves, acting on target rows without a source match). BY
-    * SOURCE clauses widen the rewrite to EVERY bucket — any bucket may
-    * hold unmatched target rows, so the affected-bucket pruning that
-    * makes matched/insert merges batch-local cannot apply; that is the
-    * ANSI semantics' true cost, not an implementation choice (an empty
-    * source, e.g., updates/deletes every target row). */
-  def merge(name: String, source0: DataFrame,
-      matched: Seq[MergeWhenMatched],
       notMatched: Seq[MergeWhenNotMatched],
-      notBySource: Seq[MergeWhenNotBySource]): Long = {
+      notBySource: Seq[MergeWhenNotBySource] = Nil): Long = {
     val t = info(name)
     guardNoRelay(t)
     val pc = t.partitionColumn
@@ -3120,116 +3116,14 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     observedLong(obs) + cnt("del") + cnt("ins") + cnt("s_upd") + cnt("s_del")
   }
 
-  /** Parse the dialect's WHEN-clause tail into the engine's clause
-    * model. Top-level keyword scanning (quotes and parens masked), so
-    * literals containing WHEN/THEN survive; an UNPARENTHESIZED `CASE
-    * WHEN … THEN …` inside a clause condition or value would confuse
-    * the splitter — parenthesize it (the DSv2 surface, which uses
-    * Spark's full parser, has no such restriction). */
-  private def parseMergeClauses(tableName: String, tAlias: String,
-      tail: String, xlate: String => String)
-      : (Seq[MergeWhenMatched], Seq[MergeWhenNotMatched],
-        Seq[MergeWhenNotBySource]) = {
-    def unsupported(what: String): Nothing =
-      throw new UnsupportedOperationException(
-        s"MERGE INTO $tableName: $what (supported: WHEN MATCHED " +
-          "[AND cond] THEN UPDATE SET */assignments | DELETE, " +
-          "WHEN NOT MATCHED [AND cond] THEN INSERT * | " +
-          "INSERT (cols) VALUES (exprs), WHEN NOT MATCHED BY SOURCE " +
-          "[AND cond] THEN UPDATE SET assignments | DELETE)")
-    def stripKey(k: String): String = k.trim.replaceFirst(
-      "(?i)^(" + java.util.regex.Pattern.quote(tAlias) + "|" +
-        java.util.regex.Pattern.quote(tableName) + ")\\.", "")
-    val clauses = splitKeywordTopLevel(tail, "WHEN")
-    if (clauses.isEmpty) unsupported("no WHEN clause found")
-    val m = Seq.newBuilder[MergeWhenMatched]
-    val i = Seq.newBuilder[MergeWhenNotMatched]
-    val sb = Seq.newBuilder[MergeWhenNotBySource]
-    def condThen(rest: String): (Option[String], String) = {
-      val r = rest.trim
-      val thenPos = keywordPositions(r, "THEN")
-      if (thenPos.isEmpty) unsupported(s"missing THEN in WHEN $r")
-      val pre = r.substring(0, thenPos.head).trim
-      val action = r.substring(thenPos.head + 4).trim
-      val cond =
-        if (pre.isEmpty) None
-        else pre match {
-          case MergeAndCondRe(c) => Some(xlate(c.trim))
-          case _ => unsupported(s"unrecognized WHEN qualifier '$pre'")
-        }
-      (cond, action)
-    }
-    clauses.foreach {
-      case c if MergeNotBySourceRe.matches(c.trim) =>
-        val MergeNotBySourceRe(rest) = c.trim: @unchecked
-        val (cond, action) = condThen(rest)
-        action match {
-          case MergeDeleteRe() => sb += MergeWhenNotBySource.Delete(cond)
-          case MergeUpdateRe(setsStr) =>
-            if (setsStr.trim == "*")
-              unsupported("NOT MATCHED BY SOURCE UPDATE SET * (no " +
-                "source row exists; list the assignments)")
-            val sets = splitTopLevel(setsStr).map { a =>
-              val Array(ck, e) = a.split("=", 2)
-              stripKey(ck) -> xlate(e.trim)
-            }
-            sb += MergeWhenNotBySource.Update(cond, sets)
-          case other =>
-            unsupported(s"NOT MATCHED BY SOURCE action '${other.take(60)}'")
-        }
-      case MergeNotMatchedRe(rest) =>
-        val (cond, action) = condThen(rest)
-        action match {
-          case MergeInsertStarRe() => i += MergeWhenNotMatched(cond, None)
-          case MergeInsertListRe(cols, vals) =>
-            val names = cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            val exprs = splitTopLevel(vals)
-            require(names.length == exprs.length,
-              s"MERGE INTO $tableName: INSERT column list has " +
-                s"${names.length} columns but VALUES has ${exprs.length}")
-            i += MergeWhenNotMatched(cond,
-              Some(names.zip(exprs).map { case (k, v) =>
-                stripKey(k) -> xlate(v) }))
-          case other => unsupported(s"INSERT shape '${other.take(60)}'")
-        }
-      case MergeMatchedRe(rest) =>
-        val (cond, action) = condThen(rest)
-        action match {
-          case MergeDeleteRe() => m += MergeWhenMatched.Delete(cond)
-          case MergeUpdateRe(setsStr) =>
-            val sets =
-              if (setsStr.trim == "*") Nil
-              else splitTopLevel(setsStr).map { a =>
-                val Array(ck, e) = a.split("=", 2)
-                stripKey(ck) -> xlate(e.trim)
-              }
-            m += MergeWhenMatched.Update(cond, sets)
-          case other => unsupported(s"matched action '${other.take(60)}'")
-        }
-      case other => unsupported(s"clause 'WHEN ${other.take(60)}'")
-    }
-    (m.result(), i.result(), sb.result())
-  }
-
-  /** Minimal-shape sugar kept for the common upsert call sites:
-    * `matchedSets` None/Some(Nil)/Some(list) as one unconditional
-    * UPDATE, `insertNotMatched` as one unconditional INSERT *. */
-  def merge(name: String, source0: DataFrame,
-      matchedSets: Option[Seq[(String, String)]],
-      insertNotMatched: Boolean): Long =
-    merge(name, source0,
-      matchedSets.toSeq.map(ss =>
-        MergeWhenMatched.Update(None, ss): MergeWhenMatched),
-      if (insertNotMatched) Seq(MergeWhenNotMatched(None, None)) else Nil)
-
   // --- transactions (metadata-only, reference T1 semantics) -------------
 
   def begin(): Unit = catalog.begin()
 
   /** Commit; a CAS conflict (another engine committed since BEGIN)
     * rolls the transaction back — including the engine-side cleanup
-    * below, so ghost temp views / pruning registrations of tables the
-    * failed transaction created do not outlive it. */
+    * below, so the temp views of tables the failed transaction created
+    * do not outlive it. */
   def commit(): Unit = {
     val staged = catalog.state.tables.filterNot(_.deleted).map(_.name).toSet
     try catalog.commit()
@@ -3329,11 +3223,13 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
 
   // --- SQL dialect ------------------------------------------------------
 
-  /** Engine SQL entry: intercepts the distributed DDL/DML dialect
-    * (`CREATE TABLE … PARTITION BY (c) WITH BUCKETS n`, INSERT/UPDATE/
-    * DELETE/DROP on distributed tables), delegates everything else to
-    * `spark.sql` — the same delegation split as the reference's parser
-    * extension (`mpp_parser_extension.cpp:13-96`). */
+  /** Engine SQL entry: intercepts the distributed DDL dialect
+    * (`CREATE TABLE … PARTITION BY (c) WITH BUCKETS n`, DROP and the
+    * maintenance statements) and INSERT/UPDATE/DELETE/MERGE on
+    * distributed tables — those parsed by Spark's stock grammar, see
+    * [[LiveDml]] — and delegates everything else to `spark.sql`: the
+    * same delegation split as the reference's parser extension
+    * (`mpp_parser_extension.cpp:13-96`). */
   def sql(text: String): DataFrame = {
     import spark.implicits._
     val s = text.trim.stripSuffix(";")
@@ -3344,21 +3240,27 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         throw new UnsupportedOperationException(
           "Conflict action is not supported for MPP table! " +
             "(reference parity: mpp_plan_insert.cpp:16-18)")
-      case InsertReturningRe(name)
+      case InsertWithReturningRe(name)
           if catalog.state.liveTable(localKey(name)).isDefined =>
         throw new UnsupportedOperationException(
           "INSERT with RETURNING is not supported for MPP table! " +
             "(reference parity: mpp_plan_insert.cpp:13-15)")
-      case UpdateReturningRe(name)
+      case UpdateWithReturningRe(name)
           if catalog.state.liveTable(localKey(name)).isDefined =>
         throw new UnsupportedOperationException(
           "Does not support UPDATE with returning " +
             "(reference parity: mpp_plan_update.cpp:13-16)")
-      case DeleteReturningRe(name)
+      case DeleteWithReturningRe(name)
           if catalog.state.liveTable(localKey(name)).isDefined =>
         throw new UnsupportedOperationException(
           "Does not support DELETE with returning " +
             "(reference parity: mpp_plan_delete.cpp)")
+      case BySourceSetStarRe(name)
+          if catalog.state.liveTable(localKey(name)).isDefined =>
+        throw new UnsupportedOperationException(
+          s"MERGE INTO $name: WHEN NOT MATCHED BY SOURCE THEN UPDATE " +
+            "SET * is not supported (no source row exists; list the " +
+            "assignments)")
       case DescribeHistoryRe(name)
           if catalog.state.liveTable(localKey(name)).isDefined =>
         describeHistory(name)
@@ -3424,71 +3326,8 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         createDistributedTable(name, src.schema.toDDL, pc, n.toInt)
         val cnt = insertInto(name, src)
         Seq(s"CREATE TABLE $name AS ($cnt rows)").toDF("result")
-      case InsertRe(name, colList, source)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        val src = MppEngine.readSql(spark, source)
-        val targetCols = Option(colList)
-          .map(_.split(",").map(_.trim).toSeq)
-          .getOrElse(userSchema(info(name)).fieldNames.toSeq
-            .take(src.columns.length))
-        val n = insertInto(name, src.toDF(targetCols: _*))
-        Seq(n).toDF("Count")
-      case UpdateRe(name, rest)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        val (setsStr, whereStr) = splitWhere(rest)
-        val sets = splitTopLevel(setsStr).map { a =>
-          val Array(c, e) = a.split("=", 2)
-          (c.trim, e.trim)
-        }
-        val n = update(name, sets, whereStr)
-        Seq(n).toDF("Count")
-      case DeleteRe(name, whereStr)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        val n = delete(name, Option(whereStr).map(_.trim))
-        Seq(n).toDF("Count")
-      case MergeRe(name, tAliasRaw, sourceStr, sAlias, q1, c1, q2, c2,
-          whenTail) if catalog.state.liveTable(localKey(name)).isDefined =>
-        val t = info(name)
-        val pc = t.partitionColumn
-        val tAlias = Option(tAliasRaw).getOrElse(name)
-        def isTgt(q: String) =
-          q.equalsIgnoreCase(tAlias) || q.equalsIgnoreCase(name)
-        require((isTgt(q1) && q2.equalsIgnoreCase(sAlias)) ||
-          (isTgt(q2) && q1.equalsIgnoreCase(sAlias)),
-          s"MERGE ${t.name}: ON must join the target and source aliases")
-        require(c1.equalsIgnoreCase(pc) && c2.equalsIgnoreCase(pc),
-          s"MERGE ${t.name}: ON must equate the partition column $pc " +
-            "on both sides (bucket-local merge)")
-        // Alias translation into the engine's joined-frame namespace
-        // (source refs → __src_<col>, target refs → bare) done on the
-        // PARSED expression tree, not the SQL text: qualifiers inside
-        // string literals and alias/column collisions survive intact
-        // (round-7 ADVICE — the old regex rewrote literals too).
-        val namePts = name.split("\\.").toSeq.map(_.toLowerCase)
-        def xlate(e: String): String =
-          spark.sessionState.sqlParser.parseExpression(e).transform {
-            case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-                if ua.nameParts.length >= 2 =>
-              val qual = ua.nameParts.dropRight(1).map(_.toLowerCase)
-              val last = ua.nameParts.last
-              if (qual == Seq(sAlias.toLowerCase))
-                org.apache.spark.sql.catalyst.analysis
-                  .UnresolvedAttribute(Seq(s"__src_$last"))
-              else if (qual == Seq(tAlias.toLowerCase) || qual == namePts ||
-                  qual == Seq(namePts.last))
-                org.apache.spark.sql.catalyst.analysis
-                  .UnresolvedAttribute(Seq(last))
-              else ua
-          }.sql
-        val srcSql =
-          if (sourceStr.trim.startsWith("("))
-            sourceStr.trim.drop(1).dropRight(1)
-          else s"SELECT * FROM $sourceStr"
-        val (mcls, icls, scls) =
-          parseMergeClauses(t.name, tAlias, whenTail, xlate)
-        val n = merge(name, MppEngine.readSql(spark, srcSql), mcls, icls,
-          scls)
-        Seq(n).toDF("Count")
+      case LiveDml(name, plan) =>
+        Seq(runDml(name, plan)).toDF("Count")
       case DropRe(name) if catalog.state.liveTable(localKey(name)).isDefined =>
         dropTable(name)
         Seq(s"DROP TABLE $name").toDF("result")
@@ -3526,20 +3365,22 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
             plan.linesIterator.toSeq).toDF("plan")
         }
         inner match {
-          case UpdateRe(name, rest)
-              if catalog.state.liveTable(localKey(name)).isDefined =>
-            dmlExplain(name, "UPDATE", splitWhere(rest)._2)
-          case DeleteRe(name, whereStr)
-              if catalog.state.liveTable(localKey(name)).isDefined =>
-            dmlExplain(name, "DELETE FROM", Option(whereStr).map(_.trim))
-          case InsertRe(name, _, source)
-              if catalog.state.liveTable(localKey(name)).isDefined =>
-            val t = info(name)
-            val plan = MppEngine.readSql(spark, source).queryExecution
-              .explainString(org.apache.spark.sql.execution.SimpleMode)
-            (Seq(s"INSERT INTO ${t.name} (hash shuffle on " +
-              s"${t.partitionColumn} into ${t.buckets} buckets, " +
-              "parallel append)") ++ plan.linesIterator.toSeq).toDF("plan")
+          case LiveDml(name, plan) => plan match {
+            case u: UpdateTable =>
+              dmlExplain(name, "UPDATE", u.condition.map(userText))
+            case d: DeleteFromTable =>
+              dmlExplain(name, "DELETE FROM", whereOf(d))
+            case i: InsertIntoStatement =>
+              val t = info(name)
+              val explained = MppEngine.readPlan(spark, i.query)
+                .queryExecution
+                .explainString(org.apache.spark.sql.execution.SimpleMode)
+              (Seq(s"INSERT INTO ${t.name} (hash shuffle on " +
+                s"${t.partitionColumn} into ${t.buckets} buckets, " +
+                "parallel append)") ++ explained.linesIterator.toSeq)
+                .toDF("plan")
+            case _ => MppEngine.readSql(spark, text) // MERGE: stock planner
+          }
           case sel if sel.trim.matches("(?is)^(SELECT|WITH)\\b.*") =>
             val df = MppEngine.readSql(spark, sel)
             val header = explainShards(df)
@@ -3574,6 +3415,127 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           s"cannot parse distributed-dialect statement: $s")
         MppEngine.readSql(spark, text)
     }
+  }
+
+  /** INSERT/UPDATE/DELETE/MERGE on a live table of this engine, parsed
+    * by Spark's stock grammar: the session's parser, or the delegate
+    * under an injected [[MppParser]] (which would intercept the same
+    * text again). Yields the target as written and the parsed
+    * statement, which [[runDml]] lowers without running the analyzer —
+    * validation and its errors stay in update/delete/merge. */
+  private object LiveDml {
+    def unapply(s: String): Option[(String, LogicalPlan)] =
+      if (!DmlRe.matches(s)) None
+      else {
+        val plan = (spark.sessionState.sqlParser match {
+          case p: MppParser => p.delegate
+          case p => p
+        }).parsePlan(s)
+        val target = PartialFunction.condOpt(plan) {
+          case i: InsertIntoStatement => i.table
+          case u: UpdateTable => u.table
+          case d: DeleteFromTable => d.table
+          case m: MergeIntoTable => m.targetTable
+        }
+        target.map(EliminateSubqueryAliases(_)).collect {
+          case u: UnresolvedRelation => u.multipartIdentifier.mkString(".")
+        }.filter(n => catalog.state.liveTable(localKey(n)).isDefined)
+          .map(_ -> plan)
+      }
+  }
+
+  /** Run one parsed dialect DML statement on `name`; returns the row
+    * count. UPDATE and DELETE hand over the user's own expression text
+    * (see [[userText]]), so they plan the same pruned scans as the
+    * API calls. */
+  private def runDml(name: String, plan: LogicalPlan): Long = plan match {
+    case i: InsertIntoStatement =>
+      require(i.partitionSpec.isEmpty && !i.byName && !i.ifPartitionNotExists,
+        s"INSERT INTO $name: PARTITION, BY NAME and IF NOT EXISTS are " +
+          "not supported")
+      val src = MppEngine.readPlan(spark, i.query)
+      val targetCols =
+        if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
+        else userSchema(info(name)).fieldNames.toSeq.take(src.columns.length)
+      insertInto(name, src.toDF(targetCols: _*))
+    case u: UpdateTable =>
+      update(name, setList(u.assignments, userText), u.condition.map(userText))
+    case d: DeleteFromTable => delete(name, whereOf(d))
+    case m: MergeIntoTable => mergeStatement(name, m)
+  }
+
+  /** The user's own text of a parsed expression (its origin span in the
+    * statement), or its SQL rendering where the parser kept no span. */
+  private def userText(e: Expression): String = {
+    val o = e.origin
+    (for (t <- o.sqlText; a <- o.startIndex; b <- o.stopIndex)
+      yield t.substring(a, b + 1)).getOrElse(e.sql)
+  }
+
+  /** A parsed DELETE's WHERE text; the parser fills a missing WHERE
+    * with the shared `true` literal. */
+  private def whereOf(d: DeleteFromTable): Option[String] =
+    Some(d.condition).filterNot(_ eq Literal.TrueLiteral).map(userText)
+
+  /** `SET col = expr, …` as (last name part of col, rendered expr). */
+  private def setList(as: Seq[Assignment],
+      render: Expression => String): Seq[(String, String)] =
+    as.map(a => (a.key: @unchecked) match {
+      case UnresolvedAttribute(k) => k.last -> render(a.value)
+    })
+
+  /** Lower a parsed dialect MERGE onto [[merge]]. ON must equate the
+    * partition column of the target and the source (bucket-local
+    * merge). Clause expressions move into the engine's joined-frame
+    * namespace on the parsed tree — source refs → `__src_<col>`, target
+    * refs → bare — so qualifiers inside string literals and alias/column
+    * collisions survive intact. */
+  private def mergeStatement(name: String, m: MergeIntoTable): Long = {
+    val t = info(name)
+    val pc = t.partitionColumn
+    def alias(p: LogicalPlan): Option[Seq[String]] = p match {
+      case SubqueryAlias(id, _) => Some(Seq(id.name.toLowerCase))
+      case u: UnresolvedRelation =>
+        Some(Seq(u.multipartIdentifier.last.toLowerCase))
+      case _ => None
+    }
+    val namePts = name.split("\\.").toSeq.map(_.toLowerCase)
+    val tgtQuals = Set(namePts, Seq(namePts.last)) ++ alias(m.targetTable)
+    val srcQual = alias(m.sourceTable)
+    def qual(parts: Seq[String]) = parts.init.map(_.toLowerCase)
+    def isSrc(parts: Seq[String]) = srcQual.contains(qual(parts))
+    def isTgt(parts: Seq[String]) = tgtQuals(qual(parts))
+    require(m.mergeCondition match {
+        case EqualTo(UnresolvedAttribute(a), UnresolvedAttribute(b)) =>
+          Seq(a, b).forall(_.last.equalsIgnoreCase(pc)) &&
+            (isTgt(a) && isSrc(b) || isSrc(a) && isTgt(b))
+        case _ => false
+      }, s"MERGE ${t.name}: ON must equate the partition column $pc " +
+        "of the target and the source (bucket-local merge)")
+    def xlate(e: Expression): String = e.transform {
+      case UnresolvedAttribute(parts) if isSrc(parts) =>
+        UnresolvedAttribute(Seq(s"__src_${parts.last}"))
+      case UnresolvedAttribute(parts) if isTgt(parts) =>
+        UnresolvedAttribute(Seq(parts.last))
+    }.sql
+    // Each clause family admits only these actions in Spark's grammar.
+    merge(name, MppEngine.readPlan(spark, m.sourceTable),
+      m.matchedActions.map(a => (a: @unchecked) match {
+        case UpdateStarAction(c) => MergeWhenMatched.Update(c.map(xlate), Nil)
+        case UpdateAction(c, as, _) =>
+          MergeWhenMatched.Update(c.map(xlate), setList(as, xlate))
+        case DeleteAction(c) => MergeWhenMatched.Delete(c.map(xlate))
+      }),
+      m.notMatchedActions.map(a => (a: @unchecked) match {
+        case InsertStarAction(c) => MergeWhenNotMatched(c.map(xlate), None)
+        case InsertAction(c, as) =>
+          MergeWhenNotMatched(c.map(xlate), Some(setList(as, xlate)))
+      }),
+      m.notMatchedBySourceActions.map(a => (a: @unchecked) match {
+        case UpdateAction(c, as, _) =>
+          MergeWhenNotBySource.Update(c.map(xlate), setList(as, xlate))
+        case DeleteAction(c) => MergeWhenNotBySource.Delete(c.map(xlate))
+      }))
   }
 }
 
@@ -3829,9 +3791,12 @@ object MppEngine {
     if (registry.isEmpty) spark.sql(text)
     else spark.sessionState.sqlParser match {
       case _: MppParser => spark.sql(text)
-      case p => org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-        rewritePlan(p.parsePlan(text)))
+      case p => readPlan(spark, p.parsePlan(text))
     }
+
+  /** A parsed read plan with mpp references routed (see [[rewritePlan]]). */
+  private[mpp] def readPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, rewritePlan(plan))
 
   /** Resolve a possibly-qualified table reference:
     * `table` | `cat.table` | `schema.table` | `cat.schema.table`.
@@ -3859,38 +3824,17 @@ object MppEngine {
     }
   }
 
+  /** Statement heads `LiveDml` hands to Spark's parser. */
+  private val DmlRe =
+    """(?is)^(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO)\b.*""".r
   private val CreateRe =
     """(?is)^CREATE\s+TABLE\s+((?:\w+\.){0,2}\w+)\s*\((.*)\)\s*PARTITION\s+BY\s*\(\s*(\w+)\s*\)\s*WITH\s+BUCKETS\s+(\d+)$""".r
-  private val InsertRe =
-    """(?is)^INSERT\s+INTO\s+((?:\w+\.){0,2}\w+)\s*(?:\(([^)]*)\))?\s*((?:VALUES|SELECT|WITH|TABLE)\b.*)$""".r
-  private val UpdateRe =
-    """(?is)^UPDATE\s+((?:\w+\.){0,2}\w+)\s+SET\s+(.*)$""".r
-  private val DeleteRe =
-    """(?is)^DELETE\s+FROM\s+((?:\w+\.){0,2}\w+)(?:\s+WHERE\s+(.*))?$""".r
   private val DropRe =
     """(?is)^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?((?:\w+\.){0,2}\w+)$""".r
   private val OptimizeRe =
     ("""(?is)^OPTIMIZE\s+((?:\w+\.){0,2}\w+)""" +
       """(?:\s+SORT\s+BY\s*\(([^)]*)\))?""" +
       """(?:\s+ZORDER\s+BY\s*\(([^)]*)\))?$""").r
-  /** MERGE INTO t [AS a] USING (query)|table [AS] s ON x.c = y.c WHEN …
-    * (clause tail parsed by [[MppEngine.parseMergeClauses]]). */
-  private[mpp] val MergeRe =
-    ("""(?is)^MERGE\s+INTO\s+((?:\w+\.){0,2}\w+)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?""" +
-      """\s+USING\s+(\(.*\)|(?:\w+\.){0,2}\w+)\s+(?:AS\s+)?(\w+)""" +
-      """\s+ON\s+(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)""" +
-      """\s+(WHEN\s+.+)$""").r
-  private[mpp] val MergeMatchedRe = """(?is)^MATCHED\b(.*)$""".r
-  private[mpp] val MergeNotMatchedRe =
-    """(?is)^NOT\s+MATCHED(?:\s+BY\s+TARGET)?\b(.*)$""".r
-  private[mpp] val MergeNotBySourceRe =
-    """(?is)^NOT\s+MATCHED\s+BY\s+SOURCE\b(.*)$""".r
-  private[mpp] val MergeAndCondRe = """(?is)^AND\s+(.+)$""".r
-  private[mpp] val MergeDeleteRe = """(?is)^DELETE$""".r
-  private[mpp] val MergeUpdateRe = """(?is)^UPDATE\s+SET\s+(.+)$""".r
-  private[mpp] val MergeInsertStarRe = """(?is)^INSERT\s+\*$""".r
-  private[mpp] val MergeInsertListRe =
-    """(?is)^INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.*)\)$""".r
   private val CtasRe =
     """(?is)^CREATE\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+PARTITION\s+BY\s*\(\s*(\w+)\s*\)\s*WITH\s+BUCKETS\s+(\d+)\s+AS\s+(.*)$""".r
   private val CreateSchemaRe =
@@ -3903,12 +3847,19 @@ object MppEngine {
     """(?is)^(BEGIN|COMMIT|ROLLBACK)(?:\s+TRANSACTION)?$""".r
   private val InsertConflictRe =
     """(?is)^INSERT\s+INTO\s+((?:\w+\.){0,2}\w+)\b.*\bON\s+CONFLICT\b.*$""".r
-  private val InsertReturningRe =
+  private val InsertWithReturningRe =
     """(?is)^INSERT\s+INTO\s+((?:\w+\.){0,2}\w+)\b.*\bRETURNING\b.*$""".r
-  private val UpdateReturningRe =
+  private val UpdateWithReturningRe =
     """(?is)^UPDATE\s+((?:\w+\.){0,2}\w+)\s+SET\b.*\bRETURNING\b.*$""".r
-  private val DeleteReturningRe =
+  private val DeleteWithReturningRe =
     """(?is)^DELETE\s+FROM\s+((?:\w+\.){0,2}\w+)\b.*\bRETURNING\b.*$""".r
+  /** `WHEN NOT MATCHED BY SOURCE … THEN UPDATE SET *`: Spark's grammar
+    * has no star in that action (no source row exists), so the engine
+    * rejects it before parsing. */
+  private val BySourceSetStarRe =
+    ("""(?is)^MERGE\s+INTO\s+((?:\w+\.){0,2}\w+)\b.*""" +
+      """\bNOT\s+MATCHED\s+BY\s+SOURCE\b(?:(?!\bWHEN\b).)*""" +
+      """\bTHEN\s+UPDATE\s+SET\s*\*.*$""").r
   /** True when `sql` parses to a foldable (constant) expression —
     * the eligibility test for existence-default metadata. */
   private[graft] def isConstantExpr(spark: SparkSession, sql: String): Boolean =
@@ -3973,74 +3924,6 @@ object MppEngine {
     }
     if (cur.nonEmpty) out += cur.toString
     out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** Start offsets of whole-word `kw` occurrences sitting outside
-    * single-quoted literals and parens (the [[splitWhere]] masking
-    * rules, generalized to any keyword). */
-  private[mpp] def keywordPositions(s: String, kw: String): Seq[Int] = {
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    val out = Vector.newBuilder[Int]
-    var depth = 0
-    var inQ = false
-    var i = 0
-    val n = kw.length
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' if inQ && i + 1 < s.length => i += 1
-        case '\'' => inQ = !inQ
-        case '(' if !inQ => depth += 1
-        case ')' if !inQ => depth -= 1
-        case c if !inQ && depth == 0 &&
-            c.toUpper == kw.charAt(0).toUpper &&
-            i + n <= s.length && s.regionMatches(true, i, kw, 0, n) &&
-            (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-            (i + n == s.length || !isWordChar(s.charAt(i + n))) =>
-          out += i
-          i += n - 1
-        case _ =>
-      }
-      i += 1
-    }
-    out.result()
-  }
-
-  /** Segments between top-level `kw` occurrences (keyword itself
-    * dropped); text before the first occurrence is discarded. */
-  private[mpp] def splitKeywordTopLevel(s: String, kw: String): Seq[String] = {
-    val pos = keywordPositions(s, kw)
-    pos.zip(pos.drop(1) :+ s.length).map { case (a, b) =>
-      s.substring(a + kw.length, b).trim
-    }
-  }
-
-  /** Split "set-list [WHERE cond]" on the first WHERE keyword that sits
-    * outside quotes and parens — `SET note = ' where x'` is a literal,
-    * not a clause boundary. */
-  private[mpp] def splitWhere(s: String): (String, Option[String]) = {
-    var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        // Backslash-escaped char inside a literal (Spark's default
-        // non-ANSI escaping): content, not a delimiter — same rule as
-        // the read-path mask.
-        case '\\' if inQ && i + 1 < s.length => i += 1
-        case '\'' => inQ = !inQ
-        case '(' if !inQ => depth += 1
-        case ')' if !inQ => depth -= 1
-        case c if !inQ && depth == 0 && (c == 'w' || c == 'W')
-            && i + 5 <= s.length
-            && s.regionMatches(true, i, "WHERE", 0, 5)
-            && (i == 0 || s.charAt(i - 1).isWhitespace)
-            && (i + 5 == s.length || s.charAt(i + 5).isWhitespace) =>
-          return (s.substring(0, i).trim, Some(s.substring(i + 5).trim))
-        case _ =>
-      }
-      i += 1
-    }
-    (s.trim, None)
   }
 
   private val ColDefRe =

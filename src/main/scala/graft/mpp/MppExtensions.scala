@@ -40,7 +40,7 @@ class MppExtensions extends (SparkSessionExtensions => Unit) {
 
 /** Delegating parser: routes dialect statements to [[MppSqlCommand]],
   * everything else to the session's stock parser. */
-final class MppParser(delegate: ParserInterface) extends ParserInterface {
+final class MppParser(val delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
     if (MppParser.intercepts(sqlText)) MppSqlCommand(sqlText)

@@ -407,6 +407,32 @@ class MppSpec extends SparkTestBase {
       "s.v is literal")
   }
 
+  test("dialect DML parses with Spark's grammar: unparenthesized CASE " +
+      "in MERGE clauses, a backquoted SET column") {
+    val e = freshEngine()
+    e.sql("CREATE TABLE m5(k BIGINT, v DOUBLE, tag TEXT) " +
+      "PARTITION BY (k) WITH BUCKETS 4")
+    e.sql("INSERT INTO m5 VALUES (1, 1.0, 'a'), (2, 2.0, 'b'), (3, 3.0, 'c')")
+    import spark.implicits._
+    Seq((1L, 10.0, "x"), (2L, -20.0, "y"), (4L, 40.0, "z"))
+      .toDF("k", "v", "tag").createOrReplaceTempView("m5_batch")
+    def rows() = e.table("m5").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
+    // k=1 matches and its CASE condition holds: updated; k=2 matches
+    // but the condition is false: untouched; k=4 is inserted.
+    val n = e.sql("MERGE INTO m5 t USING m5_batch s ON t.k = s.k " +
+      "WHEN MATCHED AND CASE WHEN s.v > 0 THEN true ELSE false END " +
+      "THEN UPDATE SET v = CASE WHEN s.v > 5 THEN s.v ELSE t.v END, " +
+      "tag = s.tag WHEN NOT MATCHED THEN INSERT *").head().getLong(0)
+    assert(n == 2L, s"1 update + 1 insert = 2, got $n")
+    assert(rows() == Seq((1L, 10.0, "x"), (2L, 2.0, "b"), (3L, 3.0, "c"),
+      (4L, 40.0, "z")), rows().toString)
+    val u = e.sql("UPDATE m5 SET `v` = v + 1 WHERE k = 3").head().getLong(0)
+    assert(u == 1L, s"one row updated, got $u")
+    assert(rows() == Seq((1L, 10.0, "x"), (2L, 2.0, "b"), (3L, 4.0, "c"),
+      (4L, 40.0, "z")), rows().toString)
+  }
+
   test("MERGE INTO: WHEN NOT MATCHED BY SOURCE acts on unmatched " +
       "target rows (dialect; conditional chain, empty source)") {
     val e = freshEngine()

@@ -188,7 +188,7 @@ class HttpDataFsSpec extends SparkTestBase {
     }
   }
 
-  test("VACUUM stray sweep over graftfs: a post-epoch unreferenced " +
+  test("VACUUM stray sweep over graftfs: an unreferenced " +
       "file in a live bucket dir is swept by default, a young " +
       "in-grace file survives — the sweep's listing, mtime reads and " +
       "deletes are wire RPCs") {
