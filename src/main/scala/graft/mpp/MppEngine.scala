@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, Unresol
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, Filter, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Clause model for the generalized MERGE surface (ANSI shape:
@@ -91,9 +92,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
 
   MppEngine.register(warehouse, this)
 
-  // Views for tables loaded from a persisted catalog.
-  catalog.state.tables.filterNot(_.deleted).foreach(refreshView)
-
   // Startup GC (round-2 verdict item 8): a COW rewrite that crashed
   // between staging write and swap leaves its staging dir behind.
   // A dir is stale only if BOTH its own mtime AND its sibling
@@ -125,9 +123,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Temp-view name for an engine-local table key (`t` or `schema.t`). */
-  private def viewName(key: String): String = key.replace(".", "__")
-
   /** Strip this engine's own catalog alias from a qualified reference;
     * the remainder (`t` or `schema.t`) is the engine-local key. */
   private def localKey(ref: String): String = {
@@ -139,13 +134,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       } else parts
     stripped.mkString(".")
   }
-
-  /** (Re-)register this engine's table views: the bare (local) name for
-    * unqualified references plus, when attached under an alias, the
-    * `alias__table` form qualified reads rewrite to. Called after
-    * ATTACH assigns the alias and after USE activates this engine. */
-  def refreshAllViews(): Unit =
-    catalog.state.tables.filterNot(_.deleted).foreach(refreshView)
 
   private def dataPath(table: String): String = s"$warehouse/data/$table"
 
@@ -251,11 +239,9 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       reshardState(oid, buckets)(st.copy(tables = st.tables :+ t,
         tableManifests = st.tableManifests + (oid.toString -> emptyManifest)))
     }
-    val t = info(name)
     val fs = new Path(dataPath(name)).getFileSystem(
       spark.sessionState.newHadoopConf())
     fs.mkdirs(new Path(dataPath(name)))
-    refreshView(t)
   }
 
   /** `ALTER TABLE t REBUCKET n` — ONLINE bucket-count change
@@ -355,7 +341,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     }
     mfs.delete(marker, false)
     listingCache.invalidate(dataPath(name))
-    refreshView(info(name))
   }
 
   /** Re-derive the round-robin shard bookkeeping for a table's new
@@ -432,7 +417,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         if (x.tableOid == t.tableOid)
           x.copy(schemaDdl = ddl, defaults = defs) else x))
     }
-    refreshView(info(name))
   }
 
   /** ALTER TABLE … DROP COLUMN c: removes the column from the declared
@@ -461,7 +445,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
             droppedColumns =
               x.droppedColumns :+ field.name.toLowerCase) else x))
     }
-    refreshView(info(name))
   }
 
   /** Drop: mark deleted in metadata AND remove data — the reference leaks
@@ -479,9 +462,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       s.copy(tables = s.tables.map(x =>
         if (x.tableOid == t.tableOid) x.copy(deleted = true) else x))
     }
-    spark.catalog.dropTempView(viewName(name))
-    attachedAs.foreach(a =>
-      spark.catalog.dropTempView(s"${a}__${viewName(name)}"))
     val p = new Path(dataPath(name))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
@@ -505,24 +485,31 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   /** Table scan including the physical `bucket` column (internal).
     *
     * A frame over the same [[graft.sources.ColocatedTable]] the DSv2
-    * catalog serves, so every engine read — `table`, the temp views,
-    * the DML scans — plans the one [[graft.sources.ColocatedScan]]:
+    * catalog serves, so every engine read — `table`, the relations of
+    * engine SQL, the DML scans — plans the one
+    * [[graft.sources.ColocatedScan]]:
     * shard pruning and parquet-footer zone maps at planning time, the
     * manifest-keyed listing cache ([[graft.sources.ColocatedFileIndex]]),
     * `bucket` as a metadata column. Built without a catalog, the frame
     * has no function catalog to resolve `bucket(n, c)`, so its scan
     * runs bytes-proportional splits rather than one task per bucket.
     * While a REBUCKET relay marker is present the read pins to the last
-    * committed manifest instead ([[relayPinnedRead]]). */
+    * committed manifest instead ([[relayPinnedRead]]); that probe
+    * stands in for the scan's own on a listing-cache hit. */
   private def readWithBucket(t: TableInfo): DataFrame =
-    relayPinnedRead(t).getOrElse(
-      colocatedFrame(t).select(fullSchema(t).fieldNames.map(col): _*))
+    relayPinnedRead(t).getOrElse(colocatedFrame(t, relayProbed = true)
+      .select(fullSchema(t).fieldNames.map(col): _*))
 
-  private def colocatedFrame(t: TableInfo): DataFrame =
+  private def colocatedFrame(t: TableInfo,
+      relayProbed: Boolean = false): DataFrame =
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-        .create(new graft.sources.ColocatedTable(spark, t, dataPath(t.name),
-          () => this), None, None))
+        .create(colocatedTable(t, relayProbed), None, None))
+
+  private def colocatedTable(t: TableInfo,
+      relayProbed: Boolean = false): graft.sources.ColocatedTable =
+    new graft.sources.ColocatedTable(spark, t, dataPath(t.name), () => this,
+      relayProbed)
 
   /** Bucket dirs whose file sets differ between two committed
     * manifests — the listing cache's incremental-invalidation feed
@@ -579,7 +566,8 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     *    other COW statement already gives — instead of the documented
     *    double/zero-count window; after the commit (marker not yet
     *    cleared) it sees the new version. Costs one `exists` probe per
-    *    scan assembly, the refresh-on-read class.
+    *    read frame (a listing-cache miss adds the scan's own), the
+    *    refresh-on-read class.
     *  - WRITES fail fast at statement start ([[guardNoRelay]]) rather
     *    than relaying a doomed statement and aborting at its commit
     *    (the commit-time layout/contention guards remain as defense in
@@ -617,9 +605,9 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   /** The pinned live-read described on [[relayMarker]]: None when no
     * relay marker is present (the normal path). Failures to pin are
     * LAZY — a poisoned frame that throws at execution, not at plan
-    * construction — so engine bootstrap (which builds a view per
-    * table) survives a poisoned table and every actual read of it
-    * still fails loudly. */
+    * construction — so a statement that only plans over a poisoned
+    * table (EXPLAIN) still runs, and every actual read of it fails
+    * loudly. */
   private def relayPinnedRead(t: TableInfo): Option[DataFrame] = {
     if (!relayMarkerPresent(t)) return None
     def poisoned(msg: String): DataFrame = {
@@ -790,13 +778,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     baseRows
   }
 
-  private def refreshView(t: TableInfo): Unit = {
-    val df = table(t.name)
-    df.createOrReplaceTempView(viewName(t.name))
-    attachedAs.foreach(a =>
-      df.createOrReplaceTempView(s"${a}__${viewName(t.name)}"))
-  }
-
   // --- distributed INSERT (reference W1) --------------------------------
 
   /** Insert: resolve defaults, hash-shuffle into buckets, parallel
@@ -869,16 +850,13 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           Some(added)
         else None,
         deltaBase = Some(Some(manifestBase)))
-      // AFTER the commit: the view's file index is cache-keyed by the
-      // committed manifest pointer — refreshed before the commit it
-      // would capture the PRE-statement index and serve stale rows
-      // until the next refresh. An append's post-commit
-      // index is ADVANCED in place from the published statuses when
-      // the cached entry matches our compose base (zero re-listing;
-      // falls back to the manifest-diff rebuild otherwise).
+      // AFTER the commit: the listing cache is keyed by the committed
+      // manifest pointer. An append's post-commit index is ADVANCED in
+      // place from the published statuses when the cached entry matches
+      // our compose base (zero re-listing; falls back to the
+      // manifest-diff rebuild otherwise).
       listingCache.advance(spark, dataPath(t.name), fullSchema(t),
         manifestBase, listingVersionKey(t), t.buckets, statuses)
-      refreshView(t)
     }
     observedLong(obs)
   }
@@ -1158,12 +1136,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         }
         // Every bucket replaced with nothing: the manifest delta is a
         // constant-size record, zero listing RPCs at any bucket count.
-        // refreshView AFTER the commit (manifest-keyed index cache).
         commitManifest(t,
           replacedBuckets = Some(((0 until t.buckets).toSet,
             Vector.empty[String])),
           deltaBase = Some(Some(manifestBase)))
-        refreshView(t)
         n
       case _ =>
         val cond = where.map(expr).getOrElse(lit(true))
@@ -1629,10 +1605,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       deltaBase = Some(Some(manifestBase)),
       stateTransform = stateTransform,
       failOnContention = failOnContention)
-    // AFTER the commit: the view's file index is cache-keyed by the
-    // committed manifest pointer — refreshed earlier it
-    // would capture the pre-statement index.
-    refreshView(t)
     // The lease (heartbeat-refreshed) covers write, swap AND commit:
     // it is VACUUM's only authoritative in-flight signal, and the old
     // shape — heartbeat stopped after the staging write, lease deleted
@@ -2516,7 +2488,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // reads/writes resume.
     fs.delete(relayMarker(cur), false)
     listingCache.invalidate(dataPath(cur.name))
-    refreshView(info(key))
   }
 
   /** Row-level change feed between two retained versions — the
@@ -2987,7 +2958,6 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         // listing cache from the published statuses as INSERT does.
         listingCache.advance(spark, dataPath(t.name), fullSchema(t),
           manifestBase, listingVersionKey(t), t.buckets, statuses)
-        refreshView(t)
       }
       return observedLong(obs)
     }
@@ -3121,41 +3091,14 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   def begin(): Unit = catalog.begin()
 
   /** Commit; a CAS conflict (another engine committed since BEGIN)
-    * rolls the transaction back — including the engine-side cleanup
-    * below, so the temp views of tables the failed transaction created
-    * do not outlive it. */
-  def commit(): Unit = {
-    val staged = catalog.state.tables.filterNot(_.deleted).map(_.name).toSet
-    try catalog.commit()
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        cleanupDiscarded(staged)
-        throw e
-    }
-  }
+    * rolls the transaction back, so a table the failed transaction
+    * created no longer resolves. */
+  def commit(): Unit = catalog.commit()
 
   /** Rollback discards staged metadata; like the reference, any data/
     * filesystem effects of the transaction are NOT undone (README.md:115
     * — no 2PC; worker shards leak there, staging dirs may leak here). */
-  def rollback(): Unit = {
-    val before = catalog.state.tables.filterNot(_.deleted).map(_.name).toSet
-    catalog.rollback()
-    cleanupDiscarded(before)
-  }
-
-  /** Drop views for tables that were live in the discarded staged
-    * state but are not in the surviving state. View
-    * names are the REGISTERED forms (dots mangled, plus the
-    * alias-qualified variant) — dropping the raw key would no-op for
-    * schema-qualified tables and strand the alias view. */
-  private def cleanupDiscarded(staged: Set[String]): Unit = {
-    val after = catalog.state.tables.filterNot(_.deleted).map(_.name).toSet
-    (staged -- after).foreach { n =>
-      spark.catalog.dropTempView(viewName(n))
-      attachedAs.foreach(a =>
-        spark.catalog.dropTempView(s"${a}__${viewName(n)}"))
-    }
-  }
+  def rollback(): Unit = catalog.rollback()
 
   // --- schema namespace + catalog scan (reference D4/D5) ----------------
 
@@ -3229,8 +3172,16 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * distributed tables — those parsed by Spark's stock grammar, see
     * [[LiveDml]] — and delegates everything else to `spark.sql`: the
     * same delegation split as the reference's parser extension
-    * (`mpp_parser_extension.cpp:13-96`). */
-  def sql(text: String): DataFrame = {
+    * (`mpp_parser_extension.cpp:13-96`). Unqualified names in the
+    * statement's reads resolve in this engine. */
+  def sql(text: String): DataFrame = runSql(text, Some(this))
+
+  /** [[sql]] with the unqualified names of the statement's reads
+    * resolved in `home`; the injected parser passes the USE'd engine
+    * ([[MppEngine.current]]), which need not own the statement's
+    * target. */
+  private[mpp] def runSql(text: String,
+      home: Option[MppEngine]): DataFrame = {
     import spark.implicits._
     val s = text.trim.stripSuffix(";")
     s match {
@@ -3319,16 +3270,13 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         // Capability superset: the reference REJECTS CREATE TABLE AS on
         // mpp catalogs (mpp_catalog.cpp:109-112, README.md:106); under
         // Spark the source query is just a DataFrame to insert.
-        // readSql: a catalog-qualified source (AS SELECT … FROM cat.t)
-        // resolves the same whether the session has the injected parser
-        // or not.
-        val src = MppEngine.readSql(spark, query)
+        val src = MppEngine.readSql(spark, query, home)
         createDistributedTable(name, src.schema.toDDL, pc, n.toInt)
         val cnt = insertInto(name, src)
         Seq(s"CREATE TABLE $name AS ($cnt rows)").toDF("result")
       case LiveDml(name, plan) =>
-        Seq(runDml(name, plan)).toDF("Count")
-      case DropRe(name) if catalog.state.liveTable(localKey(name)).isDefined =>
+        Seq(runDml(name, plan, home)).toDF("Count")
+      case DropRe(LiveName(name)) =>
         dropTable(name)
         Seq(s"DROP TABLE $name").toDF("result")
       case OptimizeRe(name, sortCols, zCols) =>
@@ -3372,17 +3320,18 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
               dmlExplain(name, "DELETE FROM", whereOf(d))
             case i: InsertIntoStatement =>
               val t = info(name)
-              val explained = MppEngine.readPlan(spark, i.query)
+              val explained = MppEngine.readPlan(spark, i.query, home)
                 .queryExecution
                 .explainString(org.apache.spark.sql.execution.SimpleMode)
               (Seq(s"INSERT INTO ${t.name} (hash shuffle on " +
                 s"${t.partitionColumn} into ${t.buckets} buckets, " +
                 "parallel append)") ++ explained.linesIterator.toSeq)
                 .toDF("plan")
-            case _ => MppEngine.readSql(spark, text) // MERGE: stock planner
+            case _ => // MERGE: stock planner
+              MppEngine.readSql(spark, text, home)
           }
           case sel if sel.trim.matches("(?is)^(SELECT|WITH)\\b.*") =>
-            val df = MppEngine.readSql(spark, sel)
+            val df = MppEngine.readSql(spark, sel, home)
             val header = explainShards(df)
             val plan = df.queryExecution.explainString(
               org.apache.spark.sql.execution.SimpleMode)
@@ -3398,7 +3347,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
           // EXPLAIN EXTENDED/FORMATTED/ANSI SELECT, EXPLAIN on
           // non-dialect statements, …: the stock planner explains them
           // (round-2 ADVICE: do not regress what spark.sql handled).
-          case _ => MppEngine.readSql(spark, text)
+          case _ => MppEngine.readSql(spark, text, home)
         }
       case TxnRe(verb) =>
         verb.toUpperCase match {
@@ -3413,24 +3362,20 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         // dialect error, not a delegation case.
         if (MppParser.intercepts(s)) throw new IllegalArgumentException(
           s"cannot parse distributed-dialect statement: $s")
-        MppEngine.readSql(spark, text)
+        MppEngine.readSql(spark, text, home)
     }
   }
 
   /** INSERT/UPDATE/DELETE/MERGE on a live table of this engine, parsed
-    * by Spark's stock grammar: the session's parser, or the delegate
-    * under an injected [[MppParser]] (which would intercept the same
-    * text again). Yields the target as written and the parsed
-    * statement, which [[runDml]] lowers without running the analyzer —
-    * validation and its errors stay in update/delete/merge. */
+    * by Spark's stock grammar ([[MppEngine.stockParser]]). Yields the
+    * target as written and the parsed statement, which [[runDml]]
+    * lowers without running the analyzer — validation and its errors
+    * stay in update/delete/merge. */
   private object LiveDml {
     def unapply(s: String): Option[(String, LogicalPlan)] =
-      if (!DmlRe.matches(s)) None
+      if (!MppParser.DmlVerb.matches(s)) None
       else {
-        val plan = (spark.sessionState.sqlParser match {
-          case p: MppParser => p.delegate
-          case p => p
-        }).parsePlan(s)
+        val plan = stockParser(spark).parsePlan(s)
         val target = PartialFunction.condOpt(plan) {
           case i: InsertIntoStatement => i.table
           case u: UpdateTable => u.table
@@ -3439,21 +3384,42 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         }
         target.map(EliminateSubqueryAliases(_)).collect {
           case u: UnresolvedRelation => u.multipartIdentifier.mkString(".")
-        }.filter(n => catalog.state.liveTable(localKey(n)).isDefined)
-          .map(_ -> plan)
+        }.flatMap(LiveName.unapply).map(_ -> plan)
       }
+  }
+
+  /** A table reference as written → the key of the live table of this
+    * engine it names ([[liveKey]]). */
+  private object LiveName {
+    def unapply(ref: String): Option[String] = liveKey(localKey(ref))
+  }
+
+  /** The live table an engine-local `key` names: the exact key, else
+    * the one live key equal to it under the session's resolver
+    * (case-insensitive unless `spark.sql.caseSensitive`), as Spark
+    * matches a relation name. */
+  private[mpp] def liveKey(key: String): Option[String] = {
+    val live = catalog.state.tables.filterNot(_.deleted).map(_.name)
+    live.find(_ == key).orElse {
+      val same = spark.sessionState.conf.resolver
+      live.filter(same(_, key)) match {
+        case Seq(k) => Some(k)
+        case _ => None
+      }
+    }
   }
 
   /** Run one parsed dialect DML statement on `name`; returns the row
     * count. UPDATE and DELETE hand over the user's own expression text
     * (see [[userText]]), so they plan the same pruned scans as the
     * API calls. */
-  private def runDml(name: String, plan: LogicalPlan): Long = plan match {
+  private def runDml(name: String, plan: LogicalPlan,
+      home: Option[MppEngine]): Long = plan match {
     case i: InsertIntoStatement =>
       require(i.partitionSpec.isEmpty && !i.byName && !i.ifPartitionNotExists,
         s"INSERT INTO $name: PARTITION, BY NAME and IF NOT EXISTS are " +
           "not supported")
-      val src = MppEngine.readPlan(spark, i.query)
+      val src = MppEngine.readPlan(spark, i.query, home)
       val targetCols =
         if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
         else userSchema(info(name)).fieldNames.toSeq.take(src.columns.length)
@@ -3461,7 +3427,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     case u: UpdateTable =>
       update(name, setList(u.assignments, userText), u.condition.map(userText))
     case d: DeleteFromTable => delete(name, whereOf(d))
-    case m: MergeIntoTable => mergeStatement(name, m)
+    case m: MergeIntoTable => mergeStatement(name, m, home)
   }
 
   /** The user's own text of a parsed expression (its origin span in the
@@ -3490,7 +3456,8 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * namespace on the parsed tree — source refs → `__src_<col>`, target
     * refs → bare — so qualifiers inside string literals and alias/column
     * collisions survive intact. */
-  private def mergeStatement(name: String, m: MergeIntoTable): Long = {
+  private def mergeStatement(name: String, m: MergeIntoTable,
+      home: Option[MppEngine]): Long = {
     val t = info(name)
     val pc = t.partitionColumn
     def alias(p: LogicalPlan): Option[Seq[String]] = p match {
@@ -3519,7 +3486,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         UnresolvedAttribute(Seq(parts.last))
     }.sql
     // Each clause family admits only these actions in Spark's grammar.
-    merge(name, MppEngine.readPlan(spark, m.sourceTable),
+    merge(name, MppEngine.readPlan(spark, m.sourceTable, home),
       m.matchedActions.map(a => (a: @unchecked) match {
         case UpdateStarAction(c) => MergeWhenMatched.Update(c.map(xlate), Nil)
         case UpdateAction(c, as, _) =>
@@ -3660,55 +3627,84 @@ object MppEngine {
     e
   }
 
-  /** Rewrite catalog-qualified mpp relation references in a PARSED
-    * plan to the temp views the engines maintain:
-    *  - `cat.__mpp_system.x` → a freshly refreshed system view
-    *    `cat__sys_x` (always current state);
-    *  - `cat.schema.t` / `cat.t` / `schema.t` (when they resolve to a
-    *    live distributed table) → the engine's `alias__…` view.
+  /** Route the mpp relations of a PARSED plan to the engines that own
+    * them, on every statement, straight to each owner's frame:
+    *  - a name [[resolve]] maps to `(engine, key)` → the engine's
+    *    [[MppEngine.table]] plan, under the name as written;
+    *  - `cat.__mpp_system.x` → that engine's [[MppEngine.systemTable]];
+    *  - `… VERSION/TIMESTAMP AS OF` → [[MppEngine.tableAsOf]];
+    *  - DESCRIBE-style commands → the engine's
+    *    [[graft.sources.ColocatedTable]].
+    *
+    * Unqualified names resolve in `home` when given, else in
+    * [[current]] (see [[resolve]]). A CTE name shadows a table of the
+    * same name inside its scope, as in Spark.
     *
     * Resolution happens on [[UnresolvedRelation]] nodes, never on raw
     * SQL text: a column reference whose qualifier collides with a
     * catalog alias (`SELECT db1.t FROM v AS db1`) parses as an
-    * attribute, not a relation, so it is never touched — the textual
-    * rewriter this replaces could mis-read it (round-3/4 ADVICE).
-    * Quoted literals, comments, and backticked identifiers need no
-    * masking for the same reason: they are not relations in the plan.
-    * Subquery expressions (scalar / IN / EXISTS) are rewritten too. */
-  def rewritePlan(plan: LogicalPlan): LogicalPlan = {
-    if (registry.isEmpty) return plan
-    plan.transformUpWithSubqueries {
-      // EXPLAIN and friends supervise their inner plan as a LEAF (it
-      // is not in children), so the relation walk must be re-applied
-      // through the supervising command's own hook or `EXPLAIN SELECT
-      // … FROM cat.t` would miss the rewrite and fail to resolve.
+    * attribute, not a relation, so it is never touched. Subquery
+    * expressions and the plan an EXPLAIN supervises are routed too. */
+  def rewritePlan(plan: LogicalPlan,
+      home: Option[MppEngine] = None): LogicalPlan =
+    if (registry.isEmpty) plan else route(plan, home, Set.empty)
+
+  private def route(plan: LogicalPlan, home: Option[MppEngine],
+      ctes: Set[String]): LogicalPlan = {
+    def rec(p: LogicalPlan): LogicalPlan = route(p, home, ctes)
+    plan match {
+      // EXPLAIN and friends supervise their inner plan as a LEAF.
       case sc: org.apache.spark.sql.catalyst.plans.logical.SupervisingCommand =>
-        sc.withTransformedSupervisedPlan(rewritePlan)
-      // `SELECT … FROM t VERSION AS OF v` / `TIMESTAMP AS OF ts` —
-      // Spark's stock grammar already parses the temporal clause into
-      // RelationTimeTravel; resolving it here (instead of a DSv2
-      // loadTable(version)) keeps one time-travel implementation for
-      // views and SQL alike (tableAsOf). Non-mpp relations pass
-      // through untouched for Spark's own resolution.
+        sc.withTransformedSupervisedPlan(rec)
+      // CTE definitions are inner children, not children; each name is
+      // in scope for the definitions after it and for the body.
+      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
+        var scope = ctes
+        val defs = w.cteRelations.map { case (n, q, depth) =>
+          val inner = if (w.allowRecursion) scope + n else scope
+          scope += n
+          (n, route(q, home, inner).asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = route(w.child, home, scope), cteRelations = defs)
       case tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel =>
-        asOfPlan(tt).getOrElse(tt)
-      case u: UnresolvedRelation =>
-        viewFor(u.multipartIdentifier)
-          .map(v => u.copy(multipartIdentifier = Seq(v)))
+        asOfPlan(tt, home).getOrElse(tt)
+      case u: UnresolvedRelation
+          if !(u.multipartIdentifier.size == 1 && ctes.exists(
+            SQLConf.get.resolver(_, u.multipartIdentifier.head))) =>
+        relationPlan(u.multipartIdentifier, home)
+          .map(SubqueryAlias(u.multipartIdentifier, _))
           .getOrElse(u)
-      // DESCRIBE / SHOW CREATE TABLE / CACHE TABLE … bind through
-      // UnresolvedTableOrView, not UnresolvedRelation — route those to
-      // the engine views too, but ONLY when the command accepts temp
-      // views (ANALYZE and friends set allowTempView=false; rerouting
-      // them would swap a clean not-found error for a confusing
-      // "is a temp view" one naming the internal mangled view).
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTableOrView
-          if u.allowTempView =>
-        viewFor(u.multipartIdentifier)
-          .map(v => u.copy(multipartIdentifier = Seq(v)))
-          .getOrElse(u)
+      // DESCRIBE and friends bind a table, not a relation plan.
+      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTableOrView =>
+        resolve(u.multipartIdentifier.mkString("."), home).map {
+          case (e, key) =>
+            val cat = new graft.sources.GraftCatalog
+            cat.initialize(e.attachedAs.getOrElse("mpp"),
+              new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+                java.util.Map.of("warehouse", e.warehouse)))
+            val parts = key.split("\\.")
+            org.apache.spark.sql.catalyst.analysis.ResolvedTable.create(cat,
+              org.apache.spark.sql.connector.catalog.Identifier.of(
+                parts.init, parts.last),
+              e.colocatedTable(e.info(key)))
+        }.getOrElse(u)
+      case p =>
+        p.mapChildren(rec).transformExpressions {
+          case sq: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
+            sq.withNewPlan(rec(sq.plan))
+        }
     }
   }
+
+  /** The analyzed plan a multipart relation name routes to: a live
+    * engine table or an engine's system table. */
+  private def relationPlan(parts: Seq[String],
+      home: Option[MppEngine]): Option[LogicalPlan] = (parts match {
+    case Seq(a, "__mpp_system", x @ ("nodes" | "shards" | "tables")) =>
+      registry.get(a).map(_.systemTable(x))
+    case _ =>
+      resolve(parts.mkString("."), home).map { case (e, key) => e.table(key) }
+  }).map(_.queryExecution.analyzed)
 
   /** Resolve a parsed temporal relation onto [[MppEngine.tableAsOf]].
     * `VERSION AS OF n` takes the catalog version directly;
@@ -3716,10 +3712,10 @@ object MppEngine {
     * before ts (foldable expressions only — a temporal clause is a
     * constant by nature). Returns None for relations no engine owns. */
   private def asOfPlan(
-      tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel)
-      : Option[LogicalPlan] = tt.relation match {
+      tt: org.apache.spark.sql.catalyst.analysis.RelationTimeTravel,
+      home: Option[MppEngine]): Option[LogicalPlan] = tt.relation match {
     case u: UnresolvedRelation =>
-      resolve(u.multipartIdentifier.mkString(".")).flatMap {
+      resolve(u.multipartIdentifier.mkString("."), home).flatMap {
         case (e, key) =>
           val version: Option[Long] = tt.version match {
             case Some(v) => scala.util.Try(v.trim.toLong).toOption
@@ -3756,77 +3752,48 @@ object MppEngine {
     case _ => None
   }
 
-  /** The engine temp view a multipart relation name routes to, if it
-    * resolves to a live distributed (or system) table. Mirrors
-    * [[resolve]]'s precedence: catalog alias first, then schema.table
-    * in the current engine. */
-  private def viewFor(parts: Seq[String]): Option[String] = parts match {
-    case Seq(a, "__mpp_system", x)
-        if registry.contains(a) &&
-          Set("nodes", "shards", "tables").contains(x) =>
-      val v = s"${a}__sys_$x"
-      registry(a).systemTable(x).createOrReplaceTempView(v)
-      Some(v)
-    case Seq(a, t)
-        if registry.get(a).exists(_.catalog.state.liveTable(t).isDefined) =>
-      Some(s"${a}__$t")
-    case Seq(a, sch, t)
-        if registry.get(a)
-          .exists(_.catalog.state.liveTable(s"$sch.$t").isDefined) =>
-      Some(s"${a}__${sch}__$t")
-    case Seq(a, t) =>
-      // schema.table in the active-or-any engine (bare view)
-      resolve(s"$a.$t").collect {
-        case (_, key) if key == s"$a.$t" => s"${a}__$t"
-      }
-    case _ => None
-  }
-
-  /** Execute a READ statement with mpp references routed: parse with
-    * the session's parser, rewrite relations on the plan, execute. A
-    * session with the injected [[MppParser]] already rewrites inside
-    * parsePlan — plain `spark.sql` suffices there (avoids a second
-    * full plan walk and double system-view refresh per statement). */
-  def readSql(spark: SparkSession, text: String): DataFrame =
-    if (registry.isEmpty) spark.sql(text)
-    else spark.sessionState.sqlParser match {
-      case _: MppParser => spark.sql(text)
-      case p => readPlan(spark, p.parsePlan(text))
+  /** Spark's stock parser: the session's, or the delegate under an
+    * injected [[MppParser]] (which would intercept dialect text again). */
+  private[mpp] def stockParser(spark: SparkSession)
+      : org.apache.spark.sql.catalyst.parser.ParserInterface =
+    spark.sessionState.sqlParser match {
+      case p: MppParser => p.delegate
+      case p => p
     }
 
+  /** Execute a READ statement with mpp references routed: parse with
+    * the stock parser, route relations on the plan ([[rewritePlan]]),
+    * execute. */
+  def readSql(spark: SparkSession, text: String,
+      home: Option[MppEngine] = None): DataFrame =
+    readPlan(spark, stockParser(spark).parsePlan(text), home)
+
   /** A parsed read plan with mpp references routed (see [[rewritePlan]]). */
-  private[mpp] def readPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, rewritePlan(plan))
+  private[mpp] def readPlan(spark: SparkSession, plan: LogicalPlan,
+      home: Option[MppEngine] = None): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, rewritePlan(plan, home))
 
   /** Resolve a possibly-qualified table reference:
     * `table` | `cat.table` | `schema.table` | `cat.schema.table`.
-    * Unqualified (and schema-qualified) names resolve in the CURRENT
-    * engine only — the reference's USE'd-catalog semantics; alias-
-    * qualified names route to the named catalog regardless of USE.
-    * Returns the owning engine and the engine-local table key. */
-  def resolve(ref: String): Option[(MppEngine, String)] = {
-    val parts = ref.split("\\.").toSeq
-    def inCurrent(key: String): Option[(MppEngine, String)] =
-      current.filter(_.catalog.state.liveTable(key).isDefined).map(_ -> key)
-    parts match {
-      case Seq(t) => inCurrent(t)
-      case Seq(a, b) =>
-        registry.get(a).flatMap { e =>
-          if (e.catalog.state.liveTable(b).isDefined) Some(e -> b) else None
-        }.orElse(inCurrent(s"$a.$b"))
-      case Seq(a, b, c) =>
-        registry.get(a).flatMap { e =>
-          val key = s"$b.$c"
-          if (e.catalog.state.liveTable(key).isDefined) Some(e -> key)
-          else None
-        }
+    * Alias-qualified names route to the named catalog regardless of
+    * USE; unqualified (and schema-qualified) names resolve in exactly
+    * one engine: `home` when given (a direct `engine.sql`), else the
+    * CURRENT one — the reference's USE'd-catalog semantics. Names match
+    * as [[MppEngine.liveKey]] does. Returns the owning engine and the
+    * engine-local table key. */
+  def resolve(ref: String,
+      home: Option[MppEngine] = None): Option[(MppEngine, String)] = {
+    def in(e: MppEngine, key: String) = e.liveKey(key).map(e -> _)
+    def local(key: String) = home.orElse(current).flatMap(in(_, key))
+    def aliased(a: String, key: String) = registry.get(a).flatMap(in(_, key))
+    ref.split("\\.").toSeq match {
+      case Seq(t) => local(t)
+      case Seq(a, b) => aliased(a, b).orElse(local(s"$a.$b"))
+      case Seq(a, b, c) => aliased(a, s"$b.$c")
       case _ => None
     }
   }
 
-  /** Statement heads `LiveDml` hands to Spark's parser. */
-  private val DmlRe =
-    """(?is)^(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO)\b.*""".r
   private val CreateRe =
     """(?is)^CREATE\s+TABLE\s+((?:\w+\.){0,2}\w+)\s*\((.*)\)\s*PARTITION\s+BY\s*\(\s*(\w+)\s*\)\s*WITH\s+BUCKETS\s+(\d+)$""".r
   private val DropRe =

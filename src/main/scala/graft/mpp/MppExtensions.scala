@@ -44,8 +44,8 @@ final class MppParser(val delegate: ParserInterface) extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
     if (MppParser.intercepts(sqlText)) MppSqlCommand(sqlText)
-    // Reads pass through the stock parser, then catalog-qualified mpp
-    // RELATIONS in the parsed plan are rewritten to engine views
+    // Reads pass through the stock parser, then the mpp RELATIONS in
+    // the parsed plan are routed to their owning engines' frames
     // (schema preserved — no command-result flattening on the read
     // path; plan-level resolution, so column references that merely
     // look like catalog.table are never touched).
@@ -88,8 +88,17 @@ object MppParser {
     """(?is)^\s*DETACH\s+(\w+)\s*;?\s*$""".r
   private[mpp] val UseDialect =
     """(?is)^\s*USE\s+(\w+)\s*;?\s*$""".r
+  private val DmlVerbs = """(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO)"""
+  /** INSERT/UPDATE/DELETE/MERGE, whatever the target's spelling: the
+    * statements the engine lowers from Spark's parse (which names the
+    * target) and answers with `Count BIGINT`. */
+  private[mpp] val DmlVerb = ("""(?is)^\s*""" + DmlVerbs + """\s.*""").r
+  /** A [[DmlVerb]] statement and its plain-word target, which decides
+    * whether the parser intercepts it. */
   private[mpp] val DmlHead =
-    """(?is)^\s*(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM|MERGE\s+INTO|DROP\s+TABLE(?:\s+IF\s+EXISTS)?)\s+((?:\w+\.){0,2}\w+)\b.*""".r
+    ("""(?is)^\s*""" + DmlVerbs + """\s+((?:\w+\.){0,2}\w+)\b.*""").r
+  private val DropHead =
+    """(?is)^\s*DROP\s+TABLE(?:\s+IF\s+EXISTS)?\s+((?:\w+\.){0,2}\w+)\b.*""".r
   private val CreateHead =
     """(?is)^\s*CREATE\s+TABLE\s+((?:\w+\.){0,2}\w+)\b.*""".r
   /** Non-table creates the reference's mpp schema rejects
@@ -127,6 +136,7 @@ object MppParser {
       MppEngine.registry.contains(name) ||
         (name.equalsIgnoreCase("memory") && MppEngine.registry.nonEmpty)
     case DmlHead(table) => MppEngine.resolve(table).isDefined
+    case DropHead(table) => MppEngine.resolve(table).isDefined
     case CreateIndexHead(target) =>
       MppEngine.resolve(target).isDefined ||
         MppEngine.registry.contains(target.split("\\.")(0)) ||
@@ -141,6 +151,7 @@ object MppParser {
     * for DML, the alias prefix (or USE'd engine) for CREATE. */
   private[mpp] def route(sql: String): Option[MppEngine] = sql match {
     case DmlHead(table) => MppEngine.resolve(table).map(_._1)
+    case DropHead(table) => MppEngine.resolve(table).map(_._1)
     case CreateHead(name) =>
       val head = name.split("\\.")(0)
       MppEngine.registry.get(head).orElse(MppEngine.current)
@@ -163,15 +174,15 @@ object MppParser {
   * current [[MppEngine]] and returns its result rows.
   *
   * Output attributes are per-statement-kind, matching the reference's
-  * typed results: DML produces `Count BIGINT`
-  * (`mpp_physical_insert.cpp:215-221`, `mpp_physical_update.cpp:104-111`),
-  * DDL/lifecycle statements a `result STRING` — so
-  * `spark.sql("DELETE …")` through the injected parser has the same
-  * schema as `engine.sql("DELETE …")`, not a flattened string. */
+  * typed results: DML (INSERT, UPDATE, DELETE, MERGE) produces
+  * `Count BIGINT` (`mpp_physical_insert.cpp:215-221`,
+  * `mpp_physical_update.cpp:104-111`), DDL/lifecycle statements a
+  * `result STRING` — so `spark.sql("DELETE …")` through the injected
+  * parser has the same schema as `engine.sql("DELETE …")`, not a
+  * flattened string. */
 final case class MppSqlCommand(sqlText: String) extends LeafRunnableCommand {
 
-  private val isDml = MppSqlCommand.TypedDmlHead
-    .pattern.matcher(sqlText.trim).matches()
+  private val isDml = MppParser.DmlVerb.matches(sqlText)
 
   override val output: Seq[Attribute] =
     if (isDml)
@@ -190,7 +201,6 @@ final case class MppSqlCommand(sqlText: String) extends LeafRunnableCommand {
         val e = new MppEngine(spark, path)
         e.attachedAs = Some(name)
         MppEngine.register(name, e)
-        e.refreshAllViews() // alias-qualified views for loaded tables
         Option(endpoint).foreach { ep =>
           val Array(host, port) = ep.split(":", 2)
           e.masterAddNode(host, port.toInt)
@@ -201,19 +211,16 @@ final case class MppSqlCommand(sqlText: String) extends LeafRunnableCommand {
         MppEngine.unregister(name)
         Seq(Row(s"DETACH $name"))
       case MppParser.UseDialect(name) =>
-        if (MppEngine.registry.contains(name)) {
-          MppEngine.active = Some(name)
-          // Unqualified references now resolve in this catalog: its
-          // bare table views take over the session namespace.
-          MppEngine.registry(name).refreshAllViews()
-        } else {
-          MppEngine.active = None // USE memory → default catalog
-        }
+        // Unqualified references now resolve in this catalog;
+        // `USE memory` restores the default catalog.
+        MppEngine.active = Some(name).filter(MppEngine.registry.contains)
         Seq(Row(s"USE $name"))
       case other =>
         val engine = MppParser.route(other).getOrElse(
           throw new IllegalStateException("no active MppEngine"))
-        val rows = engine.sql(sqlText).collect().toSeq
+        // The statement's unqualified reads name the USE'd catalog's
+        // tables, whichever engine owns its target.
+        val rows = engine.runSql(sqlText, MppEngine.current).collect().toSeq
         // DML rows are already (Count BIGINT) — pass through typed;
         // anything else renders as the single result string.
         if (isDml) rows
@@ -222,9 +229,3 @@ final case class MppSqlCommand(sqlText: String) extends LeafRunnableCommand {
   }
 }
 
-object MppSqlCommand {
-  /** Statements whose engine result is `Count BIGINT` (DROP TABLE is
-    * excluded — it reports a result string, like the other DDL). */
-  private[mpp] val TypedDmlHead =
-    """(?is)^(?:INSERT\s+INTO|UPDATE|DELETE\s+FROM)\s+.*""".r
-}

@@ -214,7 +214,8 @@ final case class GraftBucketBound(keyType: DataType)
   *
   * Reads are key-group-partitioned scans ([[ColocatedScanBuilder]]).
   * This is the ONLY scan of an mpp table: the engine's own reads
-  * ([[MppEngine.table]], its temp views and every DML scan) are frames
+  * ([[MppEngine.table]], the relations of engine SQL and every DML
+  * scan) are frames
   * over this same table, built without a catalog, so they skip the
   * key grouping and run bytes-proportional splits instead.
   * Writes delegate wholesale to the engine's distributed INSERT
@@ -231,7 +232,7 @@ final case class GraftBucketBound(keyType: DataType)
   * ALTER) stays on the engine dialect, mirroring the reference where
   * only the coordinator mutates schema (`mpp_schema_entry.cpp:72-128`). */
 final class ColocatedTable(spark: SparkSession, t: TableInfo, root: String,
-    engine: () => MppEngine)
+    engine: () => MppEngine, relayProbed: Boolean = false)
     extends Table with SupportsRead with SupportsWrite with SupportsDeleteV2
     with SupportsMetadataColumns {
 
@@ -290,7 +291,7 @@ final class ColocatedTable(spark: SparkSession, t: TableInfo, root: String,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new ColocatedScanBuilder(spark, t, root, schema, engine)
+    new ColocatedScanBuilder(spark, t, root, schema, engine, relayProbed)
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -326,7 +327,8 @@ final class ColocatedTable(spark: SparkSession, t: TableInfo, root: String,
   * delegate as a filter on the `bucket` directory column, so pruned
   * directories are never listed, split or zone-checked. */
 final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
-    root: String, userSchema: StructType, engine: () => MppEngine)
+    root: String, userSchema: StructType, engine: () => MppEngine,
+    relayProbed: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownCatalystFilters {
 
@@ -340,7 +342,7 @@ final class ColocatedScanBuilder(spark: SparkSession, t: TableInfo,
     val e = engine()
     ParquetScanBuilder(spark,
       e.listingCache.get(spark, root, fullSchema, e.listingVersionKey(t),
-        t.buckets, e.manifestDirDiff),
+        t.buckets, e.manifestDirDiff, relayProbed),
       fullSchema, userSchema, CaseInsensitiveStringMap.empty())
   }
 
@@ -463,47 +465,52 @@ final class ColocatedFileIndex {
   private val dirCaches = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache]
 
-  /** The index of `root` as of manifest `versionKey`. */
+  /** The index of `root` as of manifest `versionKey`. `relayProbed`:
+    * the caller probed the relay marker itself while building the
+    * scan's frame (the engine does, to pin a mid-relay read). */
   def get(spark: SparkSession, root: String, schema: StructType,
       versionKey: String, buckets: Int,
-      dirDiff: (String, String) => Option[Seq[String]])
-      : InMemoryFileIndex = {
+      dirDiff: (String, String) => Option[Seq[String]],
+      relayProbed: Boolean = false): InMemoryFileIndex = {
     val p = new Path(root)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val prev = cache.get(root)
+    val hit = prev.collect { case (k, idx) if k == versionKey => idx }
     // One marker probe per scan assembly, HITS INCLUDED: a relay
     // renames files away without advancing the manifest pointer, so a
     // warm hit would serve paths mid-rename. The read would fail
     // either way (files only move, never mutate — no silent wrong
     // data), but the typed relay error beats a task-level
-    // FileNotFound. Cost: one exists() per statement.
-    if (fs.exists(new Path(p, RelayMarker))) failRelay(root)
-    cache.get(root) match {
-      case Some((k, idx)) if k == versionKey => idx
-      case prev =>
-        val dc = dirCaches.getOrElseUpdate(root,
-          new org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache)
-        // FULLY QUALIFIED paths throughout — cache keys, invalidation
-        // keys, root paths AND basePath: partition inference compares
-        // leaf-dir parents against basePath by Path equality, and an
-        // unqualified "scheme:/x" vs a qualified "scheme:///x" SILENTLY
-        // yields an empty partition spec — no bucket column, no pruning
-        // (a point read then footer-read all 68k files); an unqualified
-        // INVALIDATION key likewise silently no-ops against qualified
-        // entries and stale listings serve swapped-away files.
-        val qp = fs.makeQualified(p)
-        prev match {
-          case Some((oldK, _)) =>
-            dirDiff(oldK, versionKey) match {
-              case Some(dirs) => dirs.foreach(d =>
-                dc.invalidate(new Path(qp, d)))
-              case None => dc.invalidateAll() // unknown: list all
-            }
-          case None =>
-            // First build, or after a clear: the dir cache's provenance
-            // is unknown — safe only if everything re-lists.
-            dc.invalidateAll()
-        }
-        put(root, versionKey, index(spark, qp, schema, buckets, dc))
+    // FileNotFound. A `relayProbed` hit skips it: that caller already
+    // paid the probe, and only the error's wording is at stake. A
+    // miss always probes: its listing would see half-moved dirs.
+    if (!(relayProbed && hit.isDefined) &&
+        fs.exists(new Path(p, RelayMarker))) failRelay(root)
+    hit.getOrElse {
+      val dc = dirCaches.getOrElseUpdate(root,
+        new org.apache.spark.sql.GraftSqlBridge.GraftFileStatusCache)
+      // FULLY QUALIFIED paths throughout — cache keys, invalidation
+      // keys, root paths AND basePath: partition inference compares
+      // leaf-dir parents against basePath by Path equality, and an
+      // unqualified "scheme:/x" vs a qualified "scheme:///x" SILENTLY
+      // yields an empty partition spec — no bucket column, no pruning
+      // (a point read then footer-read all 68k files); an unqualified
+      // INVALIDATION key likewise silently no-ops against qualified
+      // entries and stale listings serve swapped-away files.
+      val qp = fs.makeQualified(p)
+      prev match {
+        case Some((oldK, _)) =>
+          dirDiff(oldK, versionKey) match {
+            case Some(dirs) => dirs.foreach(d =>
+              dc.invalidate(new Path(qp, d)))
+            case None => dc.invalidateAll() // unknown: list all
+          }
+        case None =>
+          // First build, or after a clear: the dir cache's provenance
+          // is unknown — safe only if everything re-lists.
+          dc.invalidateAll()
+      }
+      put(root, versionKey, index(spark, qp, schema, buckets, dc))
     }
   }
 

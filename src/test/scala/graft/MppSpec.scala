@@ -431,6 +431,13 @@ class MppSpec extends SparkTestBase {
     assert(u == 1L, s"one row updated, got $u")
     assert(rows() == Seq((1L, 10.0, "x"), (2L, 2.0, "b"), (3L, 4.0, "c"),
       (4L, 40.0, "z")), rows().toString)
+    // A backquoted target: the parsed statement names it.
+    assert(e.sql("UPDATE `m5` SET v = 0 WHERE k = 2").head().getLong(0) == 1L)
+    assert(e.sql("INSERT INTO `m5` VALUES (6, 6.0, 'f')").head()
+      .getLong(0) == 1L)
+    assert(e.sql("DELETE FROM `m5` WHERE k = 6").head().getLong(0) == 1L)
+    assert(rows() == Seq((1L, 10.0, "x"), (2L, 0.0, "b"), (3L, 4.0, "c"),
+      (4L, 40.0, "z")), rows().toString)
   }
 
   test("MERGE INTO: WHEN NOT MATCHED BY SOURCE acts on unmatched " +
@@ -583,6 +590,16 @@ class MppSpec extends SparkTestBase {
     e.sql("INSERT INTO st VALUES (1, 'a'), (2, 'b'), (3, 'c'), (4, 'd')")
     val shown = e.sql("SHOW TABLES").collect()
     assert(shown.map(_.getString(0)).toSeq == Seq("st"))
+    // DESCRIBE binds to the engine's own table.
+    val desc = e.sql("DESCRIBE st").collect().map(_.getString(0))
+    assert(desc.take(2).toSeq == Seq("id", "v"), desc.toSeq)
+    // Engine names match as Spark's relations do: case-insensitively.
+    assert(e.sql("SELECT count(*) FROM ST").head.getLong(0) == 4L)
+    // A CTE body reads the engine table; a CTE of the same name shadows it.
+    assert(e.sql("WITH w AS (SELECT * FROM st) SELECT count(*) FROM w")
+      .head.getLong(0) == 4L)
+    assert(e.sql("WITH st AS (SELECT 1 AS id) SELECT count(*) FROM st")
+      .head.getLong(0) == 1L)
     // Shard reads partition the table: disjoint, complete.
     val perShard = (0 until 3).map(k => e.readShard("st", k).count()).sum
     assert(perShard == 4L)
@@ -621,6 +638,11 @@ class MppSpec extends SparkTestBase {
       assert(upd.schema.head.name == "Count" && upd.head().getLong(0) == 1L)
       val del = s2.sql("DELETE FROM px WHERE a = 2")
       assert(del.schema.head.name == "Count" && del.head().getLong(0) == 1L)
+      val mrg = s2.sql("MERGE INTO px t USING (SELECT 1 AS a, 'm' AS b) s " +
+        "ON t.a = s.a WHEN MATCHED THEN UPDATE SET b = s.b")
+      assert(mrg.schema.map(f => (f.name, f.dataType)) ==
+        Seq(("Count", org.apache.spark.sql.types.LongType)), mrg.schema)
+      assert(mrg.head().getLong(0) == 1L)
       s2.sql("DELETE FROM px")
       s2.sql("DROP TABLE px")
       assert(e.catalog.state.liveTable("px").isEmpty)
@@ -720,6 +742,27 @@ class MppSpec extends SparkTestBase {
       s2.sql("DELETE FROM mpp_db1.t1 WHERE c0 = 8")
       assert(s2.sql("SELECT count(1) FROM mpp_db1.t1").head.getLong(0) == 7L)
       assert(s2.sql("SELECT count(1) FROM mpp_db2.t1").head.getLong(0) == 1L)
+      // A write to the other catalog's t1 leaves the USE'd one in charge
+      // of the unqualified name.
+      assert(s2.sql("SELECT count(1) FROM t1").head.getLong(0) == 1L)
+      assert(MppEngine.registry("mpp_db2").sql("SELECT count(1) FROM t1")
+        .head.getLong(0) == 1L)
+      // A statement routed to mpp_db1 by its target still reads the
+      // USE'd catalog's unqualified names: INSERT, CTAS and a MERGE
+      // source all read mpp_db2's t1.
+      s2.sql("INSERT INTO mpp_db1.t1 SELECT * FROM t1")
+      assert(s2.sql("SELECT c0 FROM mpp_db1.t1 ORDER BY c0").collect()
+        .map(_.getInt(0)).toSeq == Seq(1, 2, 3, 4, 5, 6, 7, 100))
+      s2.sql("CREATE TABLE mpp_db1.cx PARTITION BY (c0) WITH BUCKETS 2 " +
+        "AS SELECT * FROM t1")
+      assert(s2.sql("SELECT c0 FROM mpp_db1.cx").collect()
+        .map(_.getInt(0)).toSeq == Seq(100))
+      s2.sql("MERGE INTO mpp_db1.t1 d USING t1 s ON d.c0 = s.c0 " +
+        "WHEN MATCHED THEN UPDATE SET c1 = -1.0")
+      assert(s2.sql("SELECT c0 FROM mpp_db1.t1 WHERE c1 < 0").collect()
+        .map(_.getInt(0)).toSeq == Seq(100))
+      // Names match case-insensitively, as Spark's relations do.
+      assert(s2.sql("SELECT count(1) FROM T1").head.getLong(0) == 1L)
       // USE memory → default catalog (mpp.test:174); DETACH removes
       // ONLY the named catalog.
       s2.sql("USE memory")
@@ -735,6 +778,31 @@ class MppSpec extends SparkTestBase {
       org.apache.spark.sql.SparkSession.setDefaultSession(spark)
       org.apache.spark.sql.SparkSession.setActiveSession(spark)
     }
+  }
+
+  test("two warehouses in one session: each engine reads its own table of a shared name") {
+    val e1 = new MppEngine(spark, tempDir("graft-own1"))
+    val e2 = new MppEngine(spark, tempDir("graft-own2"))
+    Seq(e1, e2).foreach(_.sql(
+      "CREATE TABLE pt(id INT) PARTITION BY (id) WITH BUCKETS 2"))
+    e1.sql("INSERT INTO pt VALUES (1), (2), (3)")
+    e2.sql("INSERT INTO pt VALUES (4)")
+    assert(e1.sql("SELECT count(*) FROM pt").head.getLong(0) == 3L)
+    assert(e2.sql("SELECT count(*) FROM pt").head.getLong(0) == 1L)
+    assert(e1.sql("SELECT sum(id) FROM pt").head.getLong(0) == 6L)
+    // An engine never reads another warehouse's table, even when it has
+    // none of that name and the other is the session's current engine
+    // (no catalog USE'd: the most recently built one).
+    e2.sql("CREATE TABLE only2(id INT) PARTITION BY (id) WITH BUCKETS 2")
+    val used = MppEngine.active
+    MppEngine.active = None
+    try {
+      assert(MppEngine.current.contains(e2))
+      val ex = intercept[org.apache.spark.sql.AnalysisException] {
+        e1.sql("SELECT * FROM only2").collect()
+      }
+      assert(ex.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"), ex.getMessage)
+    } finally MppEngine.active = used
   }
 
   test("two engines on one warehouse: interleaved commits both survive (CAS)") {
@@ -759,14 +827,15 @@ class MppSpec extends SparkTestBase {
       b.sql("COMMIT")
     }
     assert(err.getMessage.contains("concurrent metadata commit"))
-    // The failed transaction rolled back; a's commit survived — and
-    // the engine-side cleanup ran: no ghost view or pruning entry for
-    // the table whose creation was discarded.
+    // The failed transaction rolled back; a's commit survived, and
+    // the table whose creation was discarded no longer resolves.
     val d = new MppEngine(spark, wh)
     assert(d.catalog.state.liveTable("tc").isDefined)
     assert(d.catalog.state.liveTable("tx1").isEmpty)
-    assert(!spark.catalog.tableExists("tx1"),
-      "ghost temp view outlived the failed transaction")
+    val gone = intercept[org.apache.spark.sql.AnalysisException] {
+      d.sql("SELECT * FROM tx1")
+    }
+    assert(gone.getCondition == "TABLE_OR_VIEW_NOT_FOUND", gone.getMessage)
     // An orphaned claim (a writer that died between claiming a version
     // and publishing CURRENT) must not wedge the warehouse: the next
     // commit steps over the hole after the grace wait.

@@ -10,8 +10,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestBase
 import graft.sources.ColocatedScan
 
-/** One scan for every engine read: the engine's frames, its temp views
-  * and its copy-on-write rewrites all plan the DSv2
+/** One scan for every engine read: the engine's frames, the relations
+  * of its SQL and its copy-on-write rewrites all plan the DSv2
   * [[graft.sources.ColocatedScan]] the catalog path plans, and shard
   * pruning lives in that scan, so building an engine installs no
   * session-wide optimizer rule. */
@@ -30,7 +30,7 @@ class EngineScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     df.queryExecution.executedPlan
   }
 
-  test("table(), a SELECT through the views and an UPDATE's rewrite " +
+  test("table(), a SELECT through engine SQL and an UPDATE's rewrite " +
       "scan all plan a ColocatedScan and no file-source scan; building " +
       "an engine installs no optimizer rule") {
     def graftRules =

@@ -106,6 +106,15 @@ class ListingCacheSpec extends SparkTestBase {
           e.manifestDirDiff)
       }
       assert(ex.getMessage.contains("REBUCKET relay"), ex.getMessage)
+      // A caller that probed the marker itself (an engine read frame)
+      // skips the probe on a hit only; a miss probes before it lists.
+      assert(e.listingCache.get(spark, root, schema, key, 2,
+        e.manifestDirDiff, relayProbed = true) eq i1)
+      val exMiss = intercept[IllegalStateException] {
+        e.listingCache.get(spark, root, schema, "another-version", 2,
+          e.manifestDirDiff, relayProbed = true)
+      }
+      assert(exMiss.getMessage.contains("REBUCKET relay"), exMiss.getMessage)
     } finally java.nio.file.Files.delete(marker)
     // Marker gone → the same pointer serves the warm hit again.
     assert(e.listingCache.get(spark, root, schema, key, 2,
