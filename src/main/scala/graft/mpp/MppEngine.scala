@@ -4,9 +4,11 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{CurrentNamespace, EliminateSubqueryAliases, UnresolvedAttribute, UnresolvedNamespace, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, Filter, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, Command, CreateNamespace, DeleteAction, DeleteFromTable, DropNamespace, Filter, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, ParsedStatement, ShowTables, SubqueryAlias, UnresolvedWith, UpdateAction, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -180,7 +182,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     // that want zero catalog RPCs on the read path.
     if (spark.conf.get("graft.catalog.refreshOnRead", "true").toBoolean)
       catalog.refreshIfStale()
-    catalog.state.liveTable(localKey(table)).getOrElse(
+    liveKey(localKey(table)).flatMap(catalog.state.liveTable).getOrElse(
       throw new IllegalArgumentException(s"no distributed table '$table'"))
   }
 
@@ -288,8 +290,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * catalog refresh (any CAS commit), the same staleness window peer
     * ALTER ADD COLUMN already has. */
   def rebucket(rawName: String, newBuckets: Int): Unit = {
-    val name = localKey(rawName)
-    val t = info(name)
+    val t = info(rawName)
     guardNoRelay(t)
     require(newBuckets > 0,
       s"REBUCKET: bucket count must be positive: $newBuckets")
@@ -340,7 +341,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
         throw e
     }
     mfs.delete(marker, false)
-    listingCache.invalidate(dataPath(name))
+    listingCache.invalidate(dataPath(t.name))
   }
 
   /** Re-derive the round-robin shard bookkeeping for a table's new
@@ -375,7 +376,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * and constraint enforcement on unread history would be a lie). */
   def addColumn(rawTable: String, colName: String, typeDdl: String,
       default: Option[String] = None): Unit = {
-    val name = localKey(rawTable)
+    val name = info(rawTable).name
     require(!"""(?is).*\bNOT\s+NULL\b.*""".r.matches(typeDdl),
       s"ADD COLUMN $colName: NOT NULL cannot be added to an existing " +
         "table (every pre-existing row would violate it); add the " +
@@ -425,7 +426,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * partition column cannot be dropped (bucket placement is a
     * function of it). */
   def dropColumn(rawTable: String, colName: String): Unit = {
-    val name = localKey(rawTable)
+    val name = info(rawTable).name
     catalog.mutate { st =>
       val t = st.liveTable(name).getOrElse(
         throw new IllegalArgumentException(s"no distributed table '$name'"))
@@ -455,7 +456,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * live successor's data. The filesystem delete after the commit is
     * non-transactional, same data guarantee as the reference (no 2PC). */
   def dropTable(rawName: String): Unit = {
-    val name = localKey(rawName)
+    val name = info(rawName).name
     catalog.mutate { s =>
       val t = s.liveTable(name).getOrElse(
         throw new IllegalArgumentException(s"no distributed table '$name'"))
@@ -650,7 +651,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * of the table's `catalog.state.tableManifests` entry lists
     * `bucket=k/<file>` names relative to that root. */
   def table(name: String): DataFrame = {
-    val t = info(localKey(name))
+    val t = info(name)
     readWithBucket(t).select(userSchema(t).fieldNames.map(col): _*)
   }
 
@@ -690,7 +691,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * ([[graft.sources.RowidMetadataColumn]]), the same one
     * `SELECT rowid FROM cat.t` projects. */
   def tableWithRowid(name: String): DataFrame = {
-    val t = info(localKey(name))
+    val t = info(name)
     colocatedFrame(t)
       .select(userSchema(t).fieldNames.map(col) :+ col("rowid"): _*)
   }
@@ -2328,8 +2329,8 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * columns — snapshots are for audit/repro reads). */
   def tableAsOf(name: String, version: Long): DataFrame = {
     val snap = snapshotOrFail(version)
-    val t = snap.tables.find(x => x.name == name && !x.deleted).getOrElse(
-      throw new IllegalArgumentException(
+    val t = named(snap.tables.filterNot(_.deleted), localKey(name))
+      .getOrElse(throw new IllegalArgumentException(
         s"VERSION AS OF $version: table $name did not exist"))
     val schema = userSchema(t) // THAT version's schema + exist-defaults
     val logical = manifestFiles(snap, t.tableOid, version)
@@ -2350,7 +2351,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * bucket dirs for the sizes (see [[fileSizeIndex]]); no data file is
     * read. */
   def describeHistory(name: String): DataFrame = {
-    val t = info(localKey(name))
+    val t = info(name)
     val versions = catalog.retainedVersions
     val mtimes = catalog.snapshotMtimes() // one listing, all versions
     val sizes = fileSizeIndex(t)
@@ -2392,8 +2393,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       }
     }
     import spark.implicits._
-    rows.toDF("version", "committed_at", "table_exists",
-      "data_files", "data_bytes", "changed_table")
+    rows.toDF(MppStatement.HistorySchema.fieldNames.toSeq: _*)
   }
 
   /** `RESTORE TABLE t TO VERSION AS OF v` — make the CURRENT state the
@@ -2410,9 +2410,8 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     * manifest), which is the retry story; unlike the DML family there
     * is no staging swap — nothing is written, only moved. */
   def restoreTable(name: String, version: Long): Unit = {
-    val key = localKey(name)
     val snap = snapshotOrFail(version)
-    val cur = info(key)
+    val cur = info(name)
     val restoreBase =
       catalog.state.tableManifests.get(cur.tableOid.toString)
     val tv = snap.tables.find(x => x.tableOid == cur.tableOid && !x.deleted)
@@ -2532,7 +2531,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     require(fromVersion <= toVersion,
       s"tableChanges: fromVersion $fromVersion > toVersion $toVersion")
     val snapTo = snapshotOrFail(toVersion)
-    val tTo = snapTo.tables.find(x => x.name == name && !x.deleted)
+    val tTo = named(snapTo.tables.filterNot(_.deleted), localKey(name))
       .getOrElse(throw new IllegalArgumentException(
         s"tableChanges: table $name did not exist at version $toVersion"))
     // Read both sides under the TO schema: a column added in the
@@ -2565,7 +2564,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       case None => readSnapshotFiles(schema, Nil)
       case Some(tf) =>
         val raw = readSnapshotFiles(userSchema(tf),
-          resolveLogicalFiles(name, rem, fromVersion))
+          resolveLogicalFiles(tTo.name, rem, fromVersion))
         val fromCols = StructType.fromDDL(tf.schemaDdl)
           .fieldNames.map(_.toLowerCase).toSet
         raw.select(schema.fields.map { f =>
@@ -2583,7 +2582,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
     }
     def diff(rem: Vector[String], add: Vector[String]): DataFrame = {
       lazy val after = readSnapshotFiles(schema,
-        resolveLogicalFiles(name, add, toVersion))
+        resolveLogicalFiles(tTo.name, add, toVersion))
       lazy val before = readBefore(rem)
       // One-sided intervals need no set-op at all: pure inserts (incl.
       // the bootstrap first-consumption read) or pure deletes stream
@@ -3117,7 +3116,7 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
 
   /** DROP SCHEMA: unsupported, like the reference
     * (mpp_catalog.cpp:130-132 throws NotImplemented). */
-  def dropSchema(name: String): Unit =
+  def dropSchema(name: String): Nothing =
     throw new UnsupportedOperationException(
       "DROP SCHEMA is not implemented (reference parity: " +
         "mpp_catalog.cpp:130-132)")
@@ -3166,248 +3165,144 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
 
   // --- SQL dialect ------------------------------------------------------
 
-  /** Engine SQL entry: intercepts the distributed DDL dialect
-    * (`CREATE TABLE … PARTITION BY (c) WITH BUCKETS n`, DROP and the
-    * maintenance statements) and INSERT/UPDATE/DELETE/MERGE on
-    * distributed tables — those parsed by Spark's stock grammar, see
-    * [[LiveDml]] — and delegates everything else to `spark.sql`: the
-    * same delegation split as the reference's parser extension
+  /** Engine SQL entry. [[MppDialect]] recognizes the statement once:
+    * the distributed DDL dialect (`CREATE TABLE … PARTITION BY (c) WITH
+    * BUCKETS n`), maintenance, schema evolution and the reference's
+    * parity rejections by their text; INSERT/UPDATE/DELETE/MERGE and
+    * DROP TABLE on an engine table on Spark's parse of it. Each runs in
+    * the engine that owns its target (an alias-qualified name may name
+    * another attached engine). Of the rest, CREATE SCHEMA, DROP SCHEMA,
+    * SHOW TABLES and EXPLAIN act on this engine, and anything else runs
+    * as Spark parsed it: the reference's delegation split
     * (`mpp_parser_extension.cpp:13-96`). Unqualified names in the
     * statement's reads resolve in this engine. */
-  def sql(text: String): DataFrame = runSql(text, Some(this))
+  def sql(text: String): DataFrame =
+    MppDialect.parse(text, stockParser(spark), Some(this)) match {
+      case MppStatement.Parsed(plan) => runParsed(plan)
+      case st => MppEngine.run(spark, st, Some(this))
+    }
 
-  /** [[sql]] with the unqualified names of the statement's reads
-    * resolved in `home`; the injected parser passes the USE'd engine
-    * ([[MppEngine.current]]), which need not own the statement's
-    * target. */
-  private[mpp] def runSql(text: String,
+  /** A statement this engine owns ([[MppEngine.run]]); `home` is where
+    * the unqualified names of its reads resolve. The answer has the
+    * statement kind's schema, which is what `spark.sql` reports too. */
+  private def execute(st: MppStatement.Owned,
       home: Option[MppEngine]): DataFrame = {
-    import spark.implicits._
-    val s = text.trim.stripSuffix(";")
-    s match {
-      // --- error parity: clean, specific rejections (reference) --------
-      case InsertConflictRe(name)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        throw new UnsupportedOperationException(
-          "Conflict action is not supported for MPP table! " +
-            "(reference parity: mpp_plan_insert.cpp:16-18)")
-      case InsertWithReturningRe(name)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        throw new UnsupportedOperationException(
-          "INSERT with RETURNING is not supported for MPP table! " +
-            "(reference parity: mpp_plan_insert.cpp:13-15)")
-      case UpdateWithReturningRe(name)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        throw new UnsupportedOperationException(
-          "Does not support UPDATE with returning " +
-            "(reference parity: mpp_plan_update.cpp:13-16)")
-      case DeleteWithReturningRe(name)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        throw new UnsupportedOperationException(
-          "Does not support DELETE with returning " +
-            "(reference parity: mpp_plan_delete.cpp)")
-      case BySourceSetStarRe(name)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        throw new UnsupportedOperationException(
-          s"MERGE INTO $name: WHEN NOT MATCHED BY SOURCE THEN UPDATE " +
-            "SET * is not supported (no source row exists; list the " +
-            "assignments)")
-      case DescribeHistoryRe(name)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        describeHistory(name)
-      case RestoreRe(name, v)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        restoreTable(name, v.toLong)
-        Seq(s"RESTORE TABLE $name TO VERSION AS OF $v").toDF("result")
-      case VacuumRe(hours) =>
-        val st = vacuumTimeTravel(Option(hours)
-          .map(_.toLong * 3600 * 1000L)
-          .getOrElse(10 * 60 * 1000L))
-        // The statement returns the reclaim/retain accounting — the
-        // operator's capacity answer, not a bare "VACUUM" echo.
-        Seq((st.manifestsDeleted, st.filesDeleted, st.bytesReclaimed,
-            st.archiveFilesRetained, st.archiveBytesRetained, st.wallMs,
-            st.strayLiveFiles, st.strayLiveBytes))
-          .toDF("manifests_deleted", "files_deleted", "bytes_reclaimed",
-            "archive_files_retained", "archive_bytes_retained", "wall_ms",
-            "stray_live_files", "stray_live_bytes")
-      // Schema evolution (capability superset — CTAS/MERGE precedent):
-      // ADD/DROP COLUMN are supported; every OTHER ALTER form still
-      // rejects with the reference's message below.
-      case AlterAddColRe(name, colName, typeDdl, default)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        addColumn(name, colName, typeDdl, Option(default))
-        Seq(s"ALTER TABLE $name ADD COLUMN $colName").toDF("result")
-      case AlterDropColRe(name, colName)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        dropColumn(name, colName)
-        Seq(s"ALTER TABLE $name DROP COLUMN $colName").toDF("result")
-      case AlterRebucketRe(name, n)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        rebucket(name, n.toInt)
-        Seq(s"ALTER TABLE $name REBUCKET $n").toDF("result")
-      case AlterRe(name)
-          if catalog.state.liveTable(localKey(name)).isDefined =>
-        throw new UnsupportedOperationException(
-          "ALTER is not implemented for MPP tables " +
-            "(reference parity: MppSchemaEntry::Alter, " +
-            "mpp_schema_entry.cpp:158-160; ADD COLUMN / DROP COLUMN " +
-            "are the supported evolution forms)")
-      // The engine's SQL surface IS the mpp catalog (a reference
-      // connection attached to an mpp database): every non-table create
-      // lands on MppSchemaEntry, which rejects it with a specific
-      // NotImplemented (mpp_schema_entry.cpp:72-128).
-      case CreateUnsupportedRe(kind) =>
-        throw new UnsupportedOperationException(
-          s"MppSchemaEntry::${MppEngine.createEntryName(kind)} is not " +
-            "implemented for MPP schemas (reference parity: " +
-            "mpp_schema_entry.cpp:72-128)")
-      case CreateRe(name, cols, pc, n) =>
+    import MppStatement._
+    def answer(values: Any*) = spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(values: _*)), st.schema)
+    st match {
+      case CreateTable(_, name, cols, pc, n) =>
         val (ddl, defaults) = parseColumns(cols)
-        createDistributedTable(name, ddl, pc, n.toInt, defaults)
-        Seq(s"CREATE TABLE $name").toDF("result")
-      case CtasRe(name, pc, n, query) =>
-        // Capability superset: the reference REJECTS CREATE TABLE AS on
-        // mpp catalogs (mpp_catalog.cpp:109-112, README.md:106); under
-        // Spark the source query is just a DataFrame to insert.
+        createDistributedTable(name, ddl, pc, n, defaults)
+        answer(s"CREATE TABLE $name")
+      case CreateAs(_, name, pc, n, query) =>
+        // Under Spark the source query is just a DataFrame to insert.
         val src = MppEngine.readSql(spark, query, home)
-        createDistributedTable(name, src.schema.toDDL, pc, n.toInt)
-        val cnt = insertInto(name, src)
-        Seq(s"CREATE TABLE $name AS ($cnt rows)").toDF("result")
-      case LiveDml(name, plan) =>
-        Seq(runDml(name, plan, home)).toDF("Count")
-      case DropRe(LiveName(name)) =>
+        createDistributedTable(name, src.schema.toDDL, pc, n)
+        answer(s"CREATE TABLE $name AS (${insertInto(name, src)} rows)")
+      case Dml(_, name, plan) => answer(runDml(name, plan, home))
+      case DropTable(_, name) =>
         dropTable(name)
-        Seq(s"DROP TABLE $name").toDF("result")
-      case OptimizeRe(name, sortCols, zCols) =>
-        val cols = Option(sortCols).toSeq
-          .flatMap(splitTopLevel(_))
-        val zs = Option(zCols).toSeq.flatMap(splitTopLevel(_))
-        val (nb, nf) = optimizeTable(name, cols, zs)
-        Seq((nb.toLong, nf.toLong))
-          .toDF("buckets_compacted", "files_before")
-      case CreateSchemaRe(ine, name) =>
-        createSchema(name, ifNotExists = ine != null)
-        Seq(s"CREATE SCHEMA $name").toDF("result")
-      case DropSchemaRe(name) =>
-        dropSchema(name)
-        Seq.empty[String].toDF("result") // unreachable
-      case ShowTablesRe() =>
-        listTables()
-      case ExplainRe(inner) =>
-        // EXPLAIN parity (reference annotates its scan with `Shards: k/n`,
-        // mpp_table_scan.cpp:373-380; asserted by mpp_filter.test:61-87,
-        // and for DML by mpp_delete.test:90): the pruning summary line,
-        // then Spark's physical plan. Dialect DML explains WITHOUT
-        // executing: the plan shown is the COW read side (pruned scan +
-        // condition), headed by the write-path description.
-        def dmlExplain(name: String, verb: String,
-            whereStr: Option[String]): DataFrame = {
-          val t = info(name)
-          val scan = whereStr.map(w => table(name).filter(expr(w)))
-            .getOrElse(table(name))
-          val plan = scan.queryExecution.explainString(
-            org.apache.spark.sql.execution.SimpleMode)
-          (Seq(s"$verb ${t.name} (copy-on-write rewrite of matched buckets)",
-            explainShards(scan)) ++
-            plan.linesIterator.toSeq).toDF("plan")
-        }
-        inner match {
-          case LiveDml(name, plan) => plan match {
-            case u: UpdateTable =>
-              dmlExplain(name, "UPDATE", u.condition.map(userText))
-            case d: DeleteFromTable =>
-              dmlExplain(name, "DELETE FROM", whereOf(d))
-            case i: InsertIntoStatement =>
-              val t = info(name)
-              val explained = MppEngine.readPlan(spark, i.query, home)
-                .queryExecution
-                .explainString(org.apache.spark.sql.execution.SimpleMode)
-              (Seq(s"INSERT INTO ${t.name} (hash shuffle on " +
-                s"${t.partitionColumn} into ${t.buckets} buckets, " +
-                "parallel append)") ++ explained.linesIterator.toSeq)
-                .toDF("plan")
-            case _ => // MERGE: stock planner
-              MppEngine.readSql(spark, text, home)
-          }
-          case sel if sel.trim.matches("(?is)^(SELECT|WITH)\\b.*") =>
-            val df = MppEngine.readSql(spark, sel, home)
-            val header = explainShards(df)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.SimpleMode)
-            (header +: plan.linesIterator.toSeq).toDF("plan")
-          // EXPLAIN of a dialect statement this engine cannot plan
-          // (e.g. EXPLAIN CREATE TABLE … WITH BUCKETS n): reject
-          // cleanly — delegating would let the injected parser
-          // re-intercept the identical text (mutual recursion).
-          case _ if MppParser.intercepts(s) =>
-            throw new UnsupportedOperationException(
-              s"EXPLAIN is not supported for: " +
-                inner.trim.takeWhile(_ != ' '))
-          // EXPLAIN EXTENDED/FORMATTED/ANSI SELECT, EXPLAIN on
-          // non-dialect statements, …: the stock planner explains them
-          // (round-2 ADVICE: do not regress what spark.sql handled).
-          case _ => MppEngine.readSql(spark, text, home)
-        }
-      case TxnRe(verb) =>
-        verb.toUpperCase match {
+        answer(s"DROP TABLE $name")
+      case Optimize(_, name, sortBy, zorderBy) =>
+        val (nb, nf) = optimizeTable(name, sortBy, zorderBy)
+        answer(nb.toLong, nf.toLong)
+      case DescribeHistory(_, name) => describeHistory(name)
+      case Restore(_, name, v) =>
+        restoreTable(name, v)
+        answer(s"RESTORE TABLE $name TO VERSION AS OF $v")
+      case Vacuum(_, graceMs) =>
+        answer(vacuumTimeTravel(graceMs).productIterator.toSeq: _*)
+      case AddColumn(_, name, column, typeDdl, default) =>
+        addColumn(name, column, typeDdl, default)
+        answer(s"ALTER TABLE $name ADD COLUMN $column")
+      case DropColumn(_, name, column) =>
+        dropColumn(name, column)
+        answer(s"ALTER TABLE $name DROP COLUMN $column")
+      case Rebucket(_, name, n) =>
+        rebucket(name, n)
+        answer(s"ALTER TABLE $name REBUCKET $n")
+      case Transaction(_, verb) =>
+        verb match {
           case "BEGIN" => begin()
           case "COMMIT" => commit()
           case _ => rollback()
         }
-        Seq(verb.toUpperCase).toDF("result")
-      case _ =>
-        // Guard against mutual recursion with the injected parser: a
-        // statement the parser would intercept but we cannot handle is a
-        // dialect error, not a delegation case.
-        if (MppParser.intercepts(s)) throw new IllegalArgumentException(
-          s"cannot parse distributed-dialect statement: $s")
-        MppEngine.readSql(spark, text, home)
+        answer(verb)
     }
   }
 
-  /** INSERT/UPDATE/DELETE/MERGE on a live table of this engine, parsed
-    * by Spark's stock grammar ([[MppEngine.stockParser]]). Yields the
-    * target as written and the parsed statement, which [[runDml]]
-    * lowers without running the analyzer — validation and its errors
-    * stay in update/delete/merge. */
-  private object LiveDml {
-    def unapply(s: String): Option[(String, LogicalPlan)] =
-      if (!MppParser.DmlVerb.matches(s)) None
-      else {
-        val plan = stockParser(spark).parsePlan(s)
-        val target = PartialFunction.condOpt(plan) {
-          case i: InsertIntoStatement => i.table
-          case u: UpdateTable => u.table
-          case d: DeleteFromTable => d.table
-          case m: MergeIntoTable => m.targetTable
-        }
-        target.map(EliminateSubqueryAliases(_)).collect {
-          case u: UnresolvedRelation => u.multipartIdentifier.mkString(".")
-        }.flatMap(LiveName.unapply).map(_ -> plan)
-      }
+  /** A plan Spark parsed that targets no engine table: this engine's
+    * schema commands, SHOW TABLES and EXPLAIN, or a read. */
+  private def runParsed(plan: LogicalPlan): DataFrame = {
+    import spark.implicits._
+    plan match {
+      case CreateNamespace(UnresolvedNamespace(Seq(name), _), ifNotExists,
+          props) if props.isEmpty =>
+        createSchema(name, ifNotExists)
+        Seq(s"CREATE SCHEMA $name").toDF("result")
+      case DropNamespace(UnresolvedNamespace(Seq(name), _), false, false) =>
+        dropSchema(name)
+      case ShowTables(CurrentNamespace, None, _) => listTables()
+      case ExplainCommand(inner, SimpleMode) => explain(inner, plan)
+      case p => MppEngine.readPlan(spark, p, Some(this))
+    }
   }
 
-  /** A table reference as written → the key of the live table of this
-    * engine it names ([[liveKey]]). */
-  private object LiveName {
-    def unapply(ref: String): Option[String] = liveKey(localKey(ref))
+  /** EXPLAIN parity (reference annotates its scan with `Shards: k/n`,
+    * mpp_table_scan.cpp:373-380; asserted by mpp_filter.test:61-87, and
+    * for DML by mpp_delete.test:90): the pruning summary line, then
+    * Spark's physical plan. Dialect DML explains WITHOUT executing: the
+    * plan shown is the COW read side (pruned scan + condition), headed
+    * by the write-path description. MERGE, commands and the EXTENDED/
+    * FORMATTED forms are the stock planner's. */
+  private def explain(inner: LogicalPlan, plan: LogicalPlan): DataFrame = {
+    import spark.implicits._
+    def explained(header: Seq[String], df: DataFrame) = (header ++
+      df.queryExecution.explainString(SimpleMode).linesIterator).toDF("plan")
+    def cow(e: MppEngine, verb: String, name: String, where: Option[String]) = {
+      val scan = where.fold(e.table(name))(w => e.table(name).filter(expr(w)))
+      explained(Seq(s"$verb $name (copy-on-write rewrite of matched " +
+        "buckets)", explainShards(scan)), scan)
+    }
+    def isQuery(p: LogicalPlan): Boolean = p match {
+      case w: UnresolvedWith => isQuery(w.child)
+      case _: Command | _: ParsedStatement => false
+      case _ => true
+    }
+    MppDialect.statement(inner, Some(this)) match {
+      case MppStatement.Dml(e, name, u: UpdateTable) =>
+        cow(e, "UPDATE", name, u.condition.map(userText))
+      case MppStatement.Dml(e, name, d: DeleteFromTable) =>
+        cow(e, "DELETE FROM", name, whereOf(d))
+      case MppStatement.Dml(e, name, i: InsertIntoStatement) =>
+        val t = e.info(name)
+        explained(Seq(s"INSERT INTO $name (hash shuffle on " +
+          s"${t.partitionColumn} into ${t.buckets} buckets, parallel " +
+          "append)"), MppEngine.readPlan(spark, i.query, Some(this)))
+      case MppStatement.Parsed(q) if isQuery(q) =>
+        val df = MppEngine.readPlan(spark, q, Some(this))
+        explained(Seq(explainShards(df)), df)
+      case _ => MppEngine.readPlan(spark, plan, Some(this))
+    }
   }
 
   /** The live table an engine-local `key` names: the exact key, else
-    * the one live key equal to it under the session's resolver
+    * the one live table equal to it under the session's resolver
     * (case-insensitive unless `spark.sql.caseSensitive`), as Spark
     * matches a relation name. */
-  private[mpp] def liveKey(key: String): Option[String] = {
-    val live = catalog.state.tables.filterNot(_.deleted).map(_.name)
-    live.find(_ == key).orElse {
+  private[mpp] def liveKey(key: String): Option[String] =
+    named(catalog.state.tables.filterNot(_.deleted), key).map(_.name)
+
+  /** The table of `tables` that `key` names, matched as [[liveKey]]. */
+  private def named(tables: Seq[TableInfo], key: String): Option[TableInfo] =
+    tables.find(_.name == key).orElse {
       val same = spark.sessionState.conf.resolver
-      live.filter(same(_, key)) match {
-        case Seq(k) => Some(k)
+      tables.filter(t => same(t.name, key)) match {
+        case Seq(t) => Some(t)
         case _ => None
       }
     }
-  }
 
   /** Run one parsed dialect DML statement on `name`; returns the row
     * count. UPDATE and DELETE hand over the user's own expression text
@@ -3416,9 +3311,11 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
   private def runDml(name: String, plan: LogicalPlan,
       home: Option[MppEngine]): Long = plan match {
     case i: InsertIntoStatement =>
-      require(i.partitionSpec.isEmpty && !i.byName && !i.ifPartitionNotExists,
-        s"INSERT INTO $name: PARTITION, BY NAME and IF NOT EXISTS are " +
-          "not supported")
+      // OVERWRITE would otherwise run as an append: refuse it loudly.
+      require(!i.overwrite && i.partitionSpec.isEmpty && !i.byName &&
+          !i.ifPartitionNotExists,
+        s"INSERT into $name: OVERWRITE, PARTITION, BY NAME and IF NOT " +
+          "EXISTS are not supported")
       val src = MppEngine.readPlan(spark, i.query, home)
       val targetCols =
         if (i.userSpecifiedCols.nonEmpty) i.userSpecifiedCols
@@ -3467,7 +3364,10 @@ final class MppEngine(val spark: SparkSession, val warehouse: String) {
       case _ => None
     }
     val namePts = name.split("\\.").toSeq.map(_.toLowerCase)
-    val tgtQuals = Set(namePts, Seq(namePts.last)) ++ alias(m.targetTable)
+    val written = PartialFunction.condOpt(EliminateSubqueryAliases(
+      m.targetTable)) { case u: UnresolvedRelation => u.multipartIdentifier }
+    val tgtQuals = Set(namePts, Seq(namePts.last)) ++ alias(m.targetTable) ++
+      written.map(_.map(_.toLowerCase))
     val srcQual = alias(m.sourceTable)
     def qual(parts: Seq[String]) = parts.init.map(_.toLowerCase)
     def isSrc(parts: Seq[String]) = srcQual.contains(qual(parts))
@@ -3627,6 +3527,39 @@ object MppEngine {
     e
   }
 
+  /** Run a recognized statement ([[MppDialect]]): in the engine that
+    * owns it, or session-wide for ATTACH/DETACH/USE. `home` is where
+    * the unqualified names of its reads resolve. */
+  private[mpp] def run(spark: SparkSession, st: MppStatement,
+      home: Option[MppEngine]): DataFrame = {
+    import spark.implicits._
+    def done(result: String) = Seq(result).toDF("result")
+    st match {
+      case o: MppStatement.Owned => o.on.execute(o, home)
+      case MppStatement.Attach(path, name, endpoint) =>
+        // Reference lifecycle (mpp_catalog.cpp:39-55, mpp.test:15-31):
+        // the attached path is the warehouse; ENDPOINT is the
+        // coordinator node.
+        val e = new MppEngine(spark, path)
+        e.attachedAs = Some(name)
+        register(name, e)
+        endpoint.foreach { ep =>
+          val Array(host, port) = ep.split(":", 2)
+          e.masterAddNode(host, port.toInt)
+        }
+        done(s"ATTACH $name")
+      case MppStatement.Detach(name) =>
+        unregister(name)
+        done(s"DETACH $name")
+      case MppStatement.Use(name) =>
+        active = Some(name).filter(registry.contains)
+        done(s"USE $name")
+      case MppStatement.Unsupported(message) =>
+        throw new UnsupportedOperationException(message)
+      case MppStatement.Parsed(plan) => readPlan(spark, plan, home)
+    }
+  }
+
   /** Route the mpp relations of a PARSED plan to the engines that own
     * them, on every statement, straight to each owner's frame:
     *  - a name [[resolve]] maps to `(engine, key)` → the engine's
@@ -3658,7 +3591,7 @@ object MppEngine {
         sc.withTransformedSupervisedPlan(rec)
       // CTE definitions are inner children, not children; each name is
       // in scope for the definitions after it and for the body.
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
+      case w: UnresolvedWith =>
         var scope = ctes
         val defs = w.cteRelations.map { case (n, q, depth) =>
           val inner = if (w.allowRecursion) scope + n else scope
@@ -3753,7 +3686,7 @@ object MppEngine {
   }
 
   /** Spark's stock parser: the session's, or the delegate under an
-    * injected [[MppParser]] (which would intercept dialect text again). */
+    * injected [[MppParser]]. */
   private[mpp] def stockParser(spark: SparkSession)
       : org.apache.spark.sql.catalyst.parser.ParserInterface =
     spark.sessionState.sqlParser match {
@@ -3794,82 +3727,11 @@ object MppEngine {
     }
   }
 
-  private val CreateRe =
-    """(?is)^CREATE\s+TABLE\s+((?:\w+\.){0,2}\w+)\s*\((.*)\)\s*PARTITION\s+BY\s*\(\s*(\w+)\s*\)\s*WITH\s+BUCKETS\s+(\d+)$""".r
-  private val DropRe =
-    """(?is)^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?((?:\w+\.){0,2}\w+)$""".r
-  private val OptimizeRe =
-    ("""(?is)^OPTIMIZE\s+((?:\w+\.){0,2}\w+)""" +
-      """(?:\s+SORT\s+BY\s*\(([^)]*)\))?""" +
-      """(?:\s+ZORDER\s+BY\s*\(([^)]*)\))?$""").r
-  private val CtasRe =
-    """(?is)^CREATE\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+PARTITION\s+BY\s*\(\s*(\w+)\s*\)\s*WITH\s+BUCKETS\s+(\d+)\s+AS\s+(.*)$""".r
-  private val CreateSchemaRe =
-    """(?is)^CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)$""".r
-  private val DropSchemaRe =
-    """(?is)^DROP\s+SCHEMA\s+(\w+)$""".r
-  private val ShowTablesRe =
-    """(?is)^SHOW\s+TABLES$""".r
-  private val TxnRe =
-    """(?is)^(BEGIN|COMMIT|ROLLBACK)(?:\s+TRANSACTION)?$""".r
-  private val InsertConflictRe =
-    """(?is)^INSERT\s+INTO\s+((?:\w+\.){0,2}\w+)\b.*\bON\s+CONFLICT\b.*$""".r
-  private val InsertWithReturningRe =
-    """(?is)^INSERT\s+INTO\s+((?:\w+\.){0,2}\w+)\b.*\bRETURNING\b.*$""".r
-  private val UpdateWithReturningRe =
-    """(?is)^UPDATE\s+((?:\w+\.){0,2}\w+)\s+SET\b.*\bRETURNING\b.*$""".r
-  private val DeleteWithReturningRe =
-    """(?is)^DELETE\s+FROM\s+((?:\w+\.){0,2}\w+)\b.*\bRETURNING\b.*$""".r
-  /** `WHEN NOT MATCHED BY SOURCE … THEN UPDATE SET *`: Spark's grammar
-    * has no star in that action (no source row exists), so the engine
-    * rejects it before parsing. */
-  private val BySourceSetStarRe =
-    ("""(?is)^MERGE\s+INTO\s+((?:\w+\.){0,2}\w+)\b.*""" +
-      """\bNOT\s+MATCHED\s+BY\s+SOURCE\b(?:(?!\bWHEN\b).)*""" +
-      """\bTHEN\s+UPDATE\s+SET\s*\*.*$""").r
   /** True when `sql` parses to a foldable (constant) expression —
     * the eligibility test for existence-default metadata. */
   private[graft] def isConstantExpr(spark: SparkSession, sql: String): Boolean =
     try spark.sessionState.sqlParser.parseExpression(sql).foldable
     catch { case _: Exception => false }
-
-  private val DescribeHistoryRe =
-    """(?is)^DESCRIBE\s+HISTORY\s+((?:\w+\.){0,2}\w+)\s*$""".r
-  private val RestoreRe =
-    ("""(?is)^RESTORE\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+TO\s+VERSION""" +
-      """\s+AS\s+OF\s+(\d+)\s*$""").r
-  /** `VACUUM [RETAIN n HOURS]`: sweep manifests/archives no retained
-    * snapshot references, keeping anything younger than the grace
-    * (default 10 minutes — in-flight concurrent-writer safety). */
-  private val VacuumRe =
-    """(?is)^VACUUM(?:\s+RETAIN\s+(\d+)\s+HOURS)?\s*$""".r
-  private val AlterAddColRe =
-    ("""(?is)^ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+ADD\s+COLUMN\s+""" +
-      """(\w+)\s+(.+?)(?:\s+DEFAULT\s+(.+?))?\s*$""").r
-  private val AlterDropColRe =
-    """(?is)^ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+DROP\s+COLUMN\s+(\w+)\s*$""".r
-  private val AlterRebucketRe =
-    """(?is)^ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\s+REBUCKET\s+(\d+)\s*$""".r
-  private val AlterRe =
-    """(?is)^ALTER\s+TABLE\s+((?:\w+\.){0,2}\w+)\b.*$""".r
-  private val ExplainRe =
-    """(?is)^EXPLAIN\s+(.*)$""".r
-  /** Catalog-entry kinds the reference's mpp schema rejects
-    * (mpp_schema_entry.cpp:72-128); CREATE TABLE is the one it allows. */
-  private[mpp] val CreateUnsupportedRe =
-    ("""(?is)^CREATE\s+(?:OR\s+REPLACE\s+)?""" +
-      """(VIEW|UNIQUE\s+INDEX|INDEX|SEQUENCE|TYPE|MACRO|FUNCTION|COLLATION)\b.*$""").r
-
-  /** Reference method name for a rejected create kind. */
-  private[mpp] def createEntryName(kind: String): String =
-    kind.trim.toUpperCase.split("\\s+").last match {
-      case "VIEW" => "CreateView"
-      case "INDEX" => "CreateIndex"
-      case "SEQUENCE" => "CreateSequence"
-      case "TYPE" => "CreateType"
-      case "COLLATION" => "CreateCollation"
-      case _ => "CreateFunction" // MACRO | FUNCTION
-    }
 
   /** Split on commas not nested in parens or single-quoted literals
     * (DECIMAL(10,2), DEFAULT f(x), DEFAULT 'a,b'). Doubled '' escapes

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.mpp.{BucketPruning, MppEngine, MppParser}
@@ -606,6 +607,30 @@ class MppSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { e.readShard("st", 9) }
   }
 
+  test("every statement and API call matches a table name as DELETE does") {
+    val e = freshEngine()
+    e.sql("CREATE TABLE st(id INT, v TEXT) PARTITION BY (id) WITH BUCKETS 2")
+    e.sql("INSERT INTO st VALUES (1, 'a'), (2, 'b')")
+    val hist = e.sql("DESCRIBE HISTORY ST").collect()
+    val v = hist.map(_.getAs[Long]("version")).max
+    e.sql("DELETE FROM ST WHERE id = 2")
+    e.sql("INSERT INTO st VALUES (3, 'c')")
+    assert(e.sql("OPTIMIZE ST").head().getLong(0) >= 0L)
+    e.sql("ALTER TABLE ST ADD COLUMN w INT")
+    assert(e.table("ST").columns.toSeq == Seq("id", "v", "w"))
+    e.sql(s"RESTORE TABLE ST TO VERSION AS OF $v")
+    assert(e.table("ST").collect().map(r => (r.getInt(0), r.getString(1)))
+      .toSet == Set((1, "a"), (2, "b")))
+    val ex = intercept[UnsupportedOperationException] {
+      e.sql("INSERT INTO ST VALUES (9, 'z') ON CONFLICT DO NOTHING")
+    }
+    assert(ex.getMessage.contains("Conflict action is not supported"))
+    // The data path is the table's own, whatever the spelling.
+    e.dropTable("ST")
+    assert(e.catalog.state.liveTable("st").isEmpty)
+    assert(!Files.exists(java.nio.file.Paths.get(e.warehouse, "data", "st")))
+  }
+
   // --- parser-extension path (D2) ---------------------------------------
 
   test("SparkSessionExtensions parser intercepts the dialect end-to-end") {
@@ -657,6 +682,58 @@ class MppSpec extends SparkTestBase {
       s2.sql("CREATE TABLE at1(id INT) PARTITION BY (id) WITH BUCKETS 2")
       s2.sql("INSERT INTO at1 VALUES (1), (2), (3)")
       assert(attached.table("at1").count() == 3)
+      // The two front ends agree: on a live table of the USE'd catalog,
+      // each statement below runs through spark.sql and through
+      // engine.sql with the same result columns and the same effect.
+      s2.sql("USE g")
+      s2.sql("CREATE TABLE pt(id INT, v TEXT) PARTITION BY (id) WITH BUCKETS 2")
+      s2.sql("INSERT INTO pt VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      def rows() = attached.table("pt").collect().map(_.toSeq).toSet
+      def both(viaSpark: String, viaEngine: String) = {
+        val (a, b) = (s2.sql(viaSpark), attached.sql(viaEngine))
+        assert(a.schema == b.schema, s"$viaSpark: ${a.schema} vs ${b.schema}")
+        (a.collect().toSeq, b.collect().toSeq)
+      }
+      def same(sql: String) = both(sql, sql)
+      // A backquoted target is recognized on Spark's parse of it.
+      assert(same("UPDATE `pt` SET v = 'x' WHERE id = 1") ==
+        (Seq(Row(1L)), Seq(Row(1L))))
+      assert(rows()(Seq(1, "x")))
+      // WITH … INSERT: the CTE scopes the source query.
+      assert(both("WITH s AS (SELECT 4 AS id, 'd' AS v) INSERT INTO pt SELECT * FROM s",
+        "WITH s AS (SELECT 5 AS id, 'e' AS v) INSERT INTO pt SELECT * FROM s") ==
+        (Seq(Row(1L)), Seq(Row(1L))))
+      assert(rows().map(_.head) == Set(1, 2, 3, 4, 5))
+      val withUpd = "WITH s AS (SELECT 1 AS id) UPDATE pt SET v = 'y' WHERE id = 1"
+      val fronts = Seq[String => DataFrame](s2.sql(_), attached.sql(_))
+      fronts.foreach { run =>
+        val wex = intercept[UnsupportedOperationException](run(withUpd))
+        assert(wex.getMessage.contains("WITH … UPDATE"), wex.getMessage)
+      }
+      val (h1, h2) = same("DESCRIBE HISTORY pt")
+      assert(h1 == h2 && h1.nonEmpty)
+      val vFive = h1.map(_.getLong(0)).max
+      val before = rows()
+      val (o1, o2) = same("OPTIMIZE pt")
+      assert(o1.size == 1 && o2.size == 1 && rows() == before)
+      val restored = fronts.map { run =>
+        attached.sql("DELETE FROM pt WHERE id = 2")
+        val r = run(s"RESTORE TABLE pt TO VERSION AS OF $vFive")
+        assert(rows() == before)
+        r.schema
+      }
+      assert(restored.distinct.size == 1)
+      both("ALTER TABLE pt ADD COLUMN c1 INT", "ALTER TABLE pt ADD COLUMN c2 INT")
+      assert(attached.table("pt").columns.toSeq == Seq("id", "v", "c1", "c2"))
+      both("ALTER TABLE pt REBUCKET 4", "ALTER TABLE pt REBUCKET 3")
+      assert(attached.catalog.state.liveTable("pt").get.buckets == 3)
+      assert(attached.table("pt").count() == 5)
+      // INSERT OVERWRITE would run as an append: it fails, rows intact.
+      val ow = intercept[IllegalArgumentException] {
+        s2.sql("INSERT OVERWRITE pt SELECT 9, 'o', 0, 0")
+      }
+      assert(ow.getMessage.contains("OVERWRITE"), ow.getMessage)
+      assert(attached.table("pt").count() == 5)
       // mpp-scoped error parity through the injected parser: a create
       // targeting the attached catalog (alias-qualified or unqualified
       // while it is USE'd) rejects like the reference's schema entry.
@@ -969,6 +1046,11 @@ class MppSpec extends SparkTestBase {
       .contains("MppSchemaEntry::CreateFunction"))
     assert(msg("CREATE OR REPLACE FUNCTION f1(x) AS x * 2")
       .contains("MppSchemaEntry::CreateFunction"))
+    // INSERT OVERWRITE would run as an append: it fails loudly instead.
+    val ow = intercept[IllegalArgumentException] {
+      e.sql("INSERT OVERWRITE ep SELECT 11, 'o'")
+    }
+    assert(ow.getMessage.contains("OVERWRITE"), ow.getMessage)
     // Nothing executed: table intact.
     assert(e.table("ep").count() == 10)
     assert(e.table("ep").filter("v <> 'x'").count() == 0)
