@@ -1,6 +1,5 @@
 package graft.mpp
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession

@@ -175,10 +175,6 @@ object ZoneMaps {
   private def cmp(a: Any, b: Any): Int =
     a.asInstanceOf[Comparable[Any]].compareTo(b)
 
-  /** The literal value as a zone-comparable (must be the same runtime
-    * class the footer produced — enforced by [[sameClass]]). */
-  private def litValue(l: Literal): Any = l.value
-
   private def sameClass(zoneVal: Any, v: Any): Boolean =
     zoneVal != null && v != null && {
       // Catalyst literals box Int/Long/… identically to the footer

@@ -16,9 +16,6 @@ class PlanQualitySpec extends SparkTestBase {
   private def scans(df: DataFrame): Seq[FileSourceScanExec] =
     df.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
 
-  private def planString(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
-
   test("filters are pushed down to the parquet scan") {
     val li = Tables(spark, sf, "lineitem")
       .filter(col("l_quantity") > 40)

@@ -330,6 +330,8 @@ class MppWritePathSpec extends SparkTestBase {
         ex.toString.contains("SparkException"), ex.toString)
       assert(spark.conf.get(mpbKey) == before,
         s"session $mpbKey stranded after failed narrow write")
+      assert(stagingEntries(e).isEmpty,
+        s"failed rewrite left staging behind: ${stagingEntries(e)}")
       // The engine still works and the table is untouched (the failed
       // staging write never swapped).
       val s = e.table("mw").agg(sum(col("v"))).head().getDouble(0)
@@ -337,6 +339,19 @@ class MppWritePathSpec extends SparkTestBase {
     } finally {
       spark.sessionState.functionRegistry.dropFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier("graft_boom_late"))
+    }
+  }
+
+  /** Names under `<warehouse>/.staging`: staging dirs and leases. */
+  private def stagingEntries(e: MppEngine): Seq[String] = {
+    val stg = java.nio.file.Paths.get(e.warehouse, ".staging")
+    if (!java.nio.file.Files.exists(stg)) Nil
+    else {
+      val s = java.nio.file.Files.list(stg)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString).toVector
+      } finally s.close()
     }
   }
 
@@ -369,6 +384,8 @@ class MppWritePathSpec extends SparkTestBase {
       java.nio.file.Files.move(saved, victim)
     }
     e.listingCache.invalidate(root.toString)
+    assert(stagingEntries(e).isEmpty,
+      s"failed INSERT left staging behind: ${stagingEntries(e)}")
     // No partial rows: the moves that succeeded before the failure
     // were undone, so the failed statement contributed NOTHING.
     assert(e.table("ip").filter(col("v") === -1.0).count() == 0L,

@@ -174,7 +174,7 @@ class RebucketSpec extends SparkTestBase {
     peer.sql("ALTER TABLE rc REBUCKET 8")
     val exA = intercept[IllegalStateException] {
       e.commitManifest(tOld,
-        addedFiles = Some(Vector.empty), deltaBase = Some(None))
+        Some(MppEngine.ManifestDelta(Set.empty, Vector.empty, None)))
     }
     assert(exA.getMessage.contains("bucket count changed mid-statement"),
       exA.getMessage)
@@ -188,8 +188,8 @@ class RebucketSpec extends SparkTestBase {
       .withColumn("v", lit(1.0)))
     val exB = intercept[IllegalStateException] {
       e.commitManifest(t8,
-        replacedBuckets = Some(((0 until 8).toSet, Vector.empty)),
-        deltaBase = Some(staleBase), failOnContention = true)
+        Some(MppEngine.ManifestDelta((0 until 8).toSet, Vector.empty,
+          staleBase)), failOnContention = true)
     }
     assert(exB.getMessage.contains("concurrent statement committed"),
       exB.getMessage)
@@ -414,8 +414,8 @@ class RebucketSpec extends SparkTestBase {
     try {
       val ex = intercept[IllegalStateException] {
         e.commitManifest(t,
-          replacedBuckets = Some(((0 until 4).toSet, Vector.empty)),
-          deltaBase = Some(staleBase), failOnContention = true)
+          Some(MppEngine.ManifestDelta((0 until 4).toSet, Vector.empty,
+            staleBase)), failOnContention = true)
       }
       assert(ex.getMessage.contains("concurrent statement committed"),
         ex.getMessage)

@@ -72,9 +72,12 @@ class SchemaEvolutionSpec extends SparkTestBase {
       e.sql("ALTER TABLE dv ADD COLUMN tag STRING")
     }
     assert(ex.getMessage.contains("previously dropped"), ex.getMessage)
-    // A full rewrite purges the stored values and lifts the quarantine;
-    // the re-added column must then read NULL, never the old values.
+    // A full rewrite purges the stored values and lifts the quarantine
+    // in the swap's own commit (one version); the re-added column must
+    // then read NULL, never the old values.
+    val vBefore = e.catalog.currentVersionOnDisk
     e.sql("OPTIMIZE dv SORT BY (k)")
+    assert(e.catalog.currentVersionOnDisk == vBefore + 1)
     e.sql("ALTER TABLE dv ADD COLUMN tag STRING")
     assert(e.table("dv").filter(col("tag").isNotNull).count() == 0L)
   }

@@ -218,10 +218,9 @@ class TimeTravelSpec extends SparkTestBase {
     val betweenMs = System.currentTimeMillis()
     Thread.sleep(1100)
     e.sql("UPDATE mt SET v = -1 WHERE k >= 0")
-    val vNew = e.catalog.currentVersionOnDisk
     assert(e.catalog.versionAtTimestamp(betweenMs).contains(vOld))
     // Simulate an mtime-losing copy: the OLD snapshot's mtime jumps
-    // to now (newer than vNew's publish instant).
+    // to now (newer than the UPDATE's publish instant).
     java.nio.file.Files.setLastModifiedTime(
       java.nio.file.Paths.get(e.warehouse, "_mpp_catalog",
         f"v$vOld%05d.json"),
@@ -626,7 +625,8 @@ class TimeTravelSpec extends SparkTestBase {
     val dup = peerFiles.head // already in the peer's manifest
     val ghost = "bucket=0/part-archived-by-peer.parquet"
     // e1 (stale base) commits an incremental delta containing both.
-    e1.commitManifest(t1, addedFiles = Some(Vector(dup, ghost)))
+    e1.commitManifest(t1,
+      Some(MppEngine.ManifestDelta(Set.empty, Vector(dup, ghost), None)))
     val e3 = new MppEngine(spark, e1.warehouse)
     val mName = e3.catalog.state.tableManifests(t1.tableOid.toString)
     val manifest = e3.loadManifest(mName).get // reconstructs v2 chains
@@ -774,7 +774,7 @@ class TimeTravelSpec extends SparkTestBase {
     val shapes = manifestShapes(e)
     assert(shapes.values.count(_ == '{') >= 10,
       s"expected mostly delta manifests: $shapes")
-    assert(shapes.count { case (n, c) => c == '[' } >= 1, s"$shapes")
+    assert(shapes.values.count(_ == '[') >= 1, s"$shapes")
     // Name-encoded depth never reaches the checkpoint cadence.
     val depthRe = """\.d(\d+)\.json$""".r
     val maxDepth = shapes.keys
@@ -821,10 +821,20 @@ class TimeTravelSpec extends SparkTestBase {
         .withColumn("v", col("k") * 1.0))
       val v1 = e.catalog.currentVersionOnDisk
       e.sql("UPDATE fm SET v = -1 WHERE k < 10")
+      val v2 = e.catalog.currentVersionOnDisk
+      // A MERGE append (insert-only) and a truncate: the two other
+      // delta shapes, an append and every bucket replaced.
+      spark.range(100, 110).toDF("k").withColumn("v", lit(7.0))
+        .createOrReplaceTempView("fm_b")
+      e.sql("MERGE INTO fm t USING (SELECT * FROM fm_b) s ON t.k = s.k " +
+        "WHEN NOT MATCHED THEN INSERT *")
+      assert(e.table("fm").count() == 60)
+      e.sql("DELETE FROM fm")
       assert(manifestShapes(e).values.forall(_ == '['),
         "knob off ⇒ every manifest a full array")
       assert(e.tableAsOf("fm", v1).filter(col("v") === -1).count() == 0)
-      assert(e.table("fm").filter(col("v") === -1).count() == 10)
+      assert(e.tableAsOf("fm", v2).filter(col("v") === -1).count() == 10)
+      assert(e.table("fm").count() == 0)
     } finally spark.conf.unset("graft.manifest.incremental")
   }
 }
